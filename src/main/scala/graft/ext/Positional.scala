@@ -260,9 +260,13 @@ object Positional {
       .sortWithinPartitions(order: _*)
       .withColumn(PidCol, spark_partition_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val sums = local.groupBy(col(PidCol), col(keyCol).cast("long").as(keyCol))
+    // grouped on the bare key column, widened driver-side: a cast alias
+    // is a non-attribute grouping expression, pulled out into a Project
+    // that keeps AQE from short-circuiting an EMPTY input at the cached
+    // scan (one extra job per call on an empty slice)
+    val sums = local.groupBy(col(PidCol), col(keyCol))
       .agg(sum(col(valueCol)).as("s")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .map(r => (r.getInt(0), r.getAs[Number](1).longValue, r.getLong(2)))
     val offsets = sums.groupBy(_._2).toSeq.flatMap { case (key, rows) =>
       var acc = 0L
       rows.sortBy(_._1).map { case (pid, _, s) => val o = acc; acc += s; (pid, key, o) }

@@ -479,7 +479,7 @@ object StreamingQueries {
       val input = MemoryStream[(Long, Long, Long)]
       val q = StreamingQualityHead.attach(
         input.toDF().toDF("doc_id", "score_k", "n_tokens"), path,
-        budget = ExtensionQueries.QualityHeadBudget)
+        budgetOf = _ => ExtensionQueries.QualityHeadBudget)
         .option("checkpointLocation", ckpt)
         .start()
       // ONE running query, four drained micro-batches (batchIds 0-3) —
@@ -534,7 +534,7 @@ object StreamingQueries {
       val input = MemoryStream[(Long, String, Long, Long)]
       val q = graft.streaming.StreamingGroupQualityHead.attach(
         input.toDF().toDF("doc_id", "source", "score_k", "n_tokens"),
-        path, budgets)
+        path, budgetsOf = _ => budgets)
         .option("checkpointLocation", ckpt)
         .start()
       try (0L until 4L).foreach { b =>
@@ -584,7 +584,7 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x160_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x160_ck_").toString
       val input = MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingGroupQualityHead.attachDynamic(
+      val q = graft.streaming.StreamingGroupQualityHead.attach(
         input.toDF().toDF("doc_id", "source", "score_k", "n_tokens"),
         path, budgetsOf = b => if (b < 2L) budgetsLow else budgetsHigh)
         .option("checkpointLocation", ckpt)
@@ -642,7 +642,7 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x169_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x169_ck_").toString
       val input = MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingGroupQualityHead.attachDynamic(
+      val q = graft.streaming.StreamingGroupQualityHead.attach(
         input.toDF().toDF("doc_id", "source", "score_k", "n_tokens"),
         path, budgetsOf = b => if (b < 2L) budgetsLow else budgetsHigh)
         .option("checkpointLocation", ckpt)
@@ -699,7 +699,7 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x174_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x174_ck_").toString
       val input = MemoryStream[(Long, String, Long, Long)]
-      val q = graft.streaming.StreamingGroupQualityHead.attachDynamic(
+      val q = graft.streaming.StreamingGroupQualityHead.attach(
         input.toDF().toDF("doc_id", "source", "score_k", "n_tokens"),
         path,
         budgetsOf = b => if (b < 2L) budgetsAll else budgetsAll - minSrc,
@@ -742,7 +742,7 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x159_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x159_ck_").toString
       val input = MemoryStream[(Long, Long, Long)]
-      val q = StreamingQualityHead.attachDynamic(
+      val q = StreamingQualityHead.attach(
         input.toDF().toDF("doc_id", "score_k", "n_tokens"), path,
         budgetOf = b => if (b < 2L) ExtensionQueries.QualityHeadBudget
                         else ExtensionQueries.DynRaisedBudget)

@@ -97,12 +97,30 @@ private[streaming] object StageCuts {
   * disjoint — each other's ordering is irrelevant, only the fold's
   * RETURN must cover them all (the stream's commit marker).
   *
-  * Crash-safety: any SUBSET of a fold's writes was already a reachable
-  * crash state under sequential writes (a crash can land between any
-  * two), and replay tolerates subsets — every state read excludes the
-  * fold's own batch and every write deterministically
-  * truncates-and-rewrites its own dir. Concurrency only widens WHICH
-  * subsets occur, not their semantics.
+  * Crash-safety: sequential writes can only crash into PREFIX states;
+  * concurrent writes can also leave any SUBSET of the in-flight writes
+  * on disk (a later write landed, an earlier one did not). Replay is
+  * exact for every such subset:
+  *  - self-excluding reads: every state read of a fold excludes the
+  *    fold's own batch (prior generations, ledger rows < batchId), so
+  *    whichever of batch N's dirs exist, the replay of N computes the
+  *    same frames;
+  *  - deterministic per-batch overwrite: every write truncates-and-
+  *    rewrites its own `batch=N` dir with rows that are a pure function
+  *    of those frames, so replay replaces a missing, partial or complete
+  *    dir with the same rows;
+  *  - no later fold reads a partial batch: the fold returns only after
+  *    every submitted write landed, and the stream commits batch N only
+  *    after the fold returns, replaying an uncommitted N first.
+  * Readers outside the fold can still meet a partial batch. Where one
+  * table is read as the commit marker of others — the quality head's
+  * `meta` generation, which indexes its `head` rows — [[barrier]] makes
+  * the indexed data durable before the marker is written. No other
+  * reader takes one table's generation N as proof that another table's
+  * batch N is durable: in particular the curated pack's
+  * `funnel/batch=N` can land before that fold's ledger and pack writes,
+  * and its only readers (the next fold's prior-funnel read and
+  * [[StreamingCuratedPack.funnel]]) read the funnel alone.
   *
   * [[barrier]] awaits everything submitted so far and rethrows the
   * first failure — used before a commit-marker write that must follow

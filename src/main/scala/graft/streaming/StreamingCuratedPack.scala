@@ -615,11 +615,16 @@ object StreamingCuratedPack {
       // fold AWAITS every future before it returns (the stream's commit
       // must cover all writes) and before cuts.release() (a Durable-mode
       // release deletes scratch a late job could still be reading).
-      // Crash-safety is unchanged: any SUBSET of a fold's writes was
-      // already a reachable crash state (writes were sequential but a
-      // crash could land between any two), and replay tolerates subsets
-      // — every state read excludes the fold's own batch and every
-      // write deterministically truncates-and-rewrites its own dir.
+      // Crash-safety: concurrency widens the reachable crash states from
+      // prefixes of the writes to any subset of the in-flight ones;
+      // replay is exact for every subset because every state read
+      // excludes the fold's own batch and every write deterministically
+      // truncates-and-rewrites its own dir (the argument on
+      // [[FoldAsync]]). The funnel generation written below is not a
+      // commit marker: it can land before this fold's ledger and pack
+      // writes, and no reader treats funnel generation N as proof that
+      // they are durable — the next fold's prior-funnel read and
+      // `funnel` read the funnel alone.
       val async = new FoldAsync(spark, "curated-pack")
       var mainOk = false
       try {

@@ -6,33 +6,64 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
- * Streaming PER-GROUP evictive quality-budget head — maintain ONLINE
- * what [[graft.ext.Mixture.qualityBudgetHeadByGroup]] selects in batch:
- * "the best `budget(g)` tokens FROM EACH SOURCE ingested so far". The
- * last cell of the budget-family quadrant: x142 admits the FIRST
- * tokens per source online, x143/x144 pick the BEST tokens in batch
- * (globally / per source), x150 keeps the BEST tokens online globally
- * — this keeps the BEST tokens online PER SOURCE, with late
- * high-quality arrivals evicting their own source's tail. The
- * per-source budgets are fixed at attach time (typically
- * [[graft.ext.Mixture.waterfillBudgets]] allocations of one global
- * budget — a mixture plan decides budgets, then the stream curates
- * against them); a budget that changed mid-stream would retroactively
- * change past verdicts, which the monotonicity the fold is built on
- * (verdicts only degrade) cannot express.
+ * Streaming evictive quality-budget head — maintain ONLINE what
+ * [[graft.ext.Mixture.qualityBudgetHeadByGroup]] selects in batch:
+ * "the best `budget(g)` tokens FROM EACH SOURCE ingested so far",
+ * admissions per group in (score DESC, id ASC) order with the inclusive
+ * running token total inside the group's budget. The online quadrant of
+ * the budget family: x142 admits the FIRST tokens online, x143/x144
+ * pick the BEST tokens in batch (globally / per source) — this keeps
+ * the BEST tokens online, with late high-quality arrivals EVICTING
+ * their own group's tail. After every fold the accumulated head must be
+ * bit-identical to the batch operator over everything ingested. The
+ * GLOBAL head (x150/x159, [[graft.ext.Mixture.qualityBudgetHead]]) is
+ * the one-group case: [[StreamingQualityHead]] files every doc under a
+ * single constant group and runs this fold unchanged.
  *
- * All four [[StreamingQualityHead]] monotonicity facts hold per group
- * independently, because every group's arithmetic (its tier histogram,
- * its tokens-above `prior`, its budget) is self-contained: a group's
- * verdicts only degrade, its full tiers stay full-or-better, its
- * frontier only moves up its score grid, and within its frontier tier
- * the rejected roster compresses to ONE per-group cut marker. A fold
- * therefore rewrites only the CHANGED (group, tier) cells — arrival
+ * Why the fold can be exact with STRICTLY BOUNDED state — four
+ * monotonicity facts of the tier arithmetic (tokens-above `prior` and
+ * tier total `bt` only grow as the corpus grows):
+ *  1. verdicts only degrade (admitted → evicted; rejected never
+ *     re-admits), so the new head ⊆ old head ∪ arrivals;
+ *  2. a tier that is 'full' now was full at every earlier prefix, so
+ *     its members all sit in the old head;
+ *  3. the frontier tier only moves UP the score grid — tiers below it
+ *     stay rejected forever;
+ *  4. WITHIN the frontier tier, inclusive sums are non-decreasing in
+ *     id, so the tier's verdicts are an id-order PREFIX: everything
+ *     the fold must remember about the tier's rejected docs compresses
+ *     to ONE marker — the first rejected id (`cut`). An arrival past
+ *     the cut is rejected outright (its prefix already overflows); an
+ *     arrival before it needs only head ∪ batch for its exact sum.
+ * Fact 4 is what keeps a degenerate all-one-score corpus from growing
+ * corpus-sized state: without it the frontier tier's rejected roster
+ * would have to persist whole.
+ *
+ * All four facts hold per group independently, because every group's
+ * arithmetic (its tier histogram, its tokens-above `prior`, its budget)
+ * is self-contained: a group's verdicts only degrade, its full tiers
+ * stay full-or-better, its frontier only moves up its score grid, and
+ * within its frontier tier the rejected roster compresses to ONE
+ * per-group cut marker.
+ *
+ * ==Cell-partitioned head==
+ * Facts 1–3 also bound WHICH (group, tier) cells a fold can touch: a
+ * cell strictly above its group's best arrival score has unchanged
+ * `prior` and `bt`, so neither its verdict nor its membership can
+ * move. The head is therefore stored per CELL with per-cell
+ * generations, and a fold rewrites only its CHANGED cells — arrival
  * cells that are not rejected, plus each group's frontier when it was
- * touched — and only each group's one frontier tier runs an exact
- * running sum, via [[Positional.withPerKeyRunningSum]]'s keyed
- * two-phase layout (a degenerate single-tier group never funnels one
- * task; a hot group cannot starve the others).
+ * touched (it moved, or arrivals above it grew its `prior`). Per-fold
+ * head write volume is proportional to the touched cells' membership,
+ * NOT to the budget: at a production budget (10¹³ tokens ≈ 10⁹ docs) a
+ * full-head rewrite would dominate every fold; here a low-score batch
+ * writes nothing at all (its arrivals are rejected against the cut)
+ * and a mid-score batch rewrites only the tiers below it. Only each
+ * group's one frontier tier runs an exact running sum, via
+ * [[Positional.withPerKeyRunningSum]]'s keyed two-phase layout (a
+ * degenerate single-tier group never funnels one task; a hot group
+ * cannot starve the others; with one group it is the
+ * [[Positional.withGlobalRunningSum]] layout).
  *
  * Groups absent from `budgets` are OUTSIDE the curation (the batch
  * operator's inner-dimension-join contract): their docs get no arrival
@@ -40,108 +71,144 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  * (re)delivery — explicit budgets are the contract, exactly as in
  * batch.
  *
- * ==Dynamic per-group budgets (round 14)==
- * [[attachDynamic]] re-reads the budget MAP each fold (the realistic
- * deployment: one global budget is retargeted, the waterfill re-runs,
- * every per-source budget refreshes at once). Per group the x159
- * asymmetry applies independently: a group whose budget SHRANK evicts
- * down to its new head off existing state; a group whose budget GREW
- * breaks fact 1 upward and RESURRECTS candidates from the arrivals
- * ledger at its now-non-rejected tiers, with its cut guard disabled
- * for that one fold. The GROUP SET itself may move in two explicit,
- * monotone-history ways (x169/x174): a group ADDED to the map starts
- * fresh from its first curated fold (its earlier arrivals were dropped
- * without a ledger row — nothing exists to resurrect), and a group
- * named in the `retire` set DRAINS-AND-FREEZES: it stops admitting
- * (arrivals drop without a ledger row from that fold on) while its
- * final head stays readable forever. Silent removal (absent from the
- * map, not retired) stays fail-loud, and so does re-budgeting a
- * retired group. Re-admissions land in `readmissions/batch=<id>`; the
- * meta 'budget'/'retired' rows store the map in effect after each fold
- * (the raise detector's reference); [[lifecycle]] is the
- * dynamics-aware reader.
+ * ==Dynamic budgets==
+ * The budget map is read PER FOLD (`budgetsOf(batchId)`), so a
+ * deployment can retarget the head mid-stream (a training run scaling
+ * up or down; one global budget retargeted and the waterfill re-run, so
+ * every per-source budget refreshes at once). Per group the two
+ * directions are asymmetric:
+ *  - a SHRINK needs nothing new: cell verdicts are recomputed from the
+ *    full hist every fold, every membership a shrink can evict already
+ *    sits in the head, and docs past the frontier cut only get worse —
+ *    the incremental path is exact as-is;
+ *  - a RAISE breaks fact 1 (verdicts can now UPGRADE): tiers that were
+ *    rejected — whose membership was deliberately never kept — can
+ *    re-enter. The fold detects the raise against the stored 'budget'
+ *    rows and RESURRECTS the raised group's candidates from the
+ *    arrivals ledger (the one append-only table that holds every doc
+ *    ever), score-pruned to its now-non-rejected tiers, with its
+ *    frontier cut guard disabled for that fold. Work is ∝ the new head
+ *    + frontier tier (a ledger scan pruned by the tier predicate), the
+ *    honest price of an infrequent control-plane event; the next steady
+ *    fold resumes the bounded incremental path off the recomputed cut.
+ * Re-admissions land in their own `readmissions/batch=<id>` ledger.
+ * With dynamics, a doc can evict more than once (evict → readmit →
+ * evict), so the evictions ledger may hold an id at several batches;
+ * [[lifecycle]] is the dynamics-aware reader ([[ledger]]'s
+ * admitted = admit ∧ never-evicted invariant holds only for constant
+ * budgets). A budget change delivered alongside an empty-or-all-
+ * rearrival batch takes effect at the next folding batch (raises are
+ * detected by state diff, not by the batch that carried them).
  *
- * State layout under `path/` — the [[StreamingQualityHead]] discipline
- * (per-`batch=<id>` overwrite generations; every read excludes the
- * fold's own batch, so crash-window replay recomputes identical frames
- * and truncates-and-rewrites), with every key widened by `grp`:
+ * The GROUP SET itself may move in two explicit, monotone-history ways
+ * (x169/x174): a group ADDED to the map starts fresh from its first
+ * curated fold (its earlier arrivals were dropped without a ledger row
+ * — nothing exists to resurrect), and a group named in the `retire` set
+ * DRAINS-AND-FREEZES: it stops admitting (arrivals drop without a
+ * ledger row from that fold on) while its final head stays readable
+ * forever. Silent removal (absent from the map, not retired) stays
+ * fail-loud, and so does re-budgeting a retired group.
+ *
+ * State layout under `path/` — per-`batch=<id>` OVERWRITE directories
+ * (the [[StreamingWinnowIngest]] discipline: every read excludes the
+ * fold's own batch, so replay after any crash window recomputes
+ * identical frames and truncates-and-rewrites):
  *  - `meta/batch=<id>` — ONE groups × grid bounded (kind, grp, k1, v)
- *    table holding every dimension-sized state, written LAST (the
- *    generation's commit marker): 'hist' rows (grp, score → bt);
- *    'tiers' rows (grp, score → head generation) — the head's read
- *    index, emptied cells drop out (absence is the tombstone); 'cut'
- *    rows, at most one per group (grp, frontier score → first rejected
- *    id); 'budget' rows (grp → budget), the raise detector's
- *    reference. One table instead of four (r16): all four are read
- *    together every fold, so the split bought four parquet round-trips
- *    and three extra collects per fold for no isolation; the per-cell
- *    tier arithmetic (hist merge, per-group cumulative prior,
- *    verdicts) is driver work over the collected grid.
+ *    table holding everything dimension-sized the fold carries across
+ *    batches, written LAST (it is the generation's commit marker):
+ *     - 'hist'    rows (grp, score → bt): per-cell token totals over
+ *       everything ingested;
+ *     - 'tiers'   rows (grp, score → gen): every currently-NONEMPTY
+ *       cell mapped to the head generation holding its membership —
+ *       the head's read index; tombstones are plain absences;
+ *     - 'cut'     rows, at most one per group (grp, frontier score →
+ *       first rejected id): fact 4's compression;
+ *     - 'budget'  rows (grp → budget): the map in effect after this
+ *       fold (the raise detector's reference point);
+ *     - 'retired' rows (grp → final budget): the frozen groups.
+ *    One table instead of four (r16): the frames are read together at
+ *    every fold and are all grid-bounded, so splitting them bought four
+ *    parquet round-trips and three extra driver collects per fold for
+ *    no isolation. The per-fold tier arithmetic (hist merge, per-group
+ *    cumulative prior, verdicts) runs DRIVER-side over the collected
+ *    grid: a window over ≤ groups × grid rows is driver work, not a
+ *    Spark job.
  *  - `head/batch=<id>` — the CHANGED cells' admitted rows
- *    (id, tokens, grp, score), one FLAT dir per generation (r20: the
- *    old `grp=<g>/score=<s>` partition dirs exploded into groups ×
- *    tiers × generations directories that nothing partition-pruned —
- *    every read resolves through the tiers-map join — the same
- *    measured ~57-listing/inference-job failure mode the r19
- *    global-head flattening killed; pre-r20 trees fail loud, see the
- *    layout guard). A cell's current membership lives in the
- *    generation the meta tiers map names.
+ *    (id, tokens, grp, score), one FLAT dir per generation: partition
+ *    dirs per cell exploded into cells × generations directories that
+ *    nothing partition-pruned (every read resolves through the
+ *    tiers-map join), and at a few hundred cells one open of that tree
+ *    cost ~57 listing/inference jobs; pre-r20 trees fail loud, see the
+ *    layout guard. A cell's current membership lives in the generation
+ *    the meta tiers map names — untouched cells keep pointing at older
+ *    generations.
  *  - `arrivals/batch=<id>`  — append-only ledger (id, grp, score,
- *    tokens, admit); also the cross-batch re-arrival guard. A
- *    [[LedgerState]] ledger partitioned at compaction by id bucket AND
- *    score tier: the guard prunes to the batch's buckets; a raised
- *    group's resurrection prunes to its changed tiers (the exact
- *    (grp, score) cell membership is then refined by the broadcast
- *    semi-join — score alone is a superset across groups).
- *  - `evictions/batch=<id>` — (id) evicted by this fold.
- *    Bucket-compacted. Written only by folds whose driver-known
- *    changed/rejected cells touch a prior cell (quiet folds skip the
- *    empty write; readers probe existence).
- *  - `readmissions/batch=<id>` — (id) re-admitted by a raise fold.
- *    Bucket-compacted; written only by folds with raised groups.
+ *    tokens, admit) — the verdict each doc got ON ARRIVAL (also the
+ *    cross-batch re-arrival guard, and the resurrection source for
+ *    budget raises). A [[LedgerState]] ledger: every `compactEvery`
+ *    folds its per-batch dirs rewrite into one checkpoint generation
+ *    partitioned by `pmod(id, bucketK)` AND by score tier, so the
+ *    guard's anti-join prunes to the batch's id buckets and a raise
+ *    fold's resurrection prunes to its changed tiers (the exact
+ *    (grp, score) cells are then refined by a broadcast semi-join —
+ *    score alone is a superset across groups) — neither ever lists or
+ *    scans the whole history tree.
+ *  - `evictions/batch=<id>` — (id) evicted by this fold; at most one
+ *    row per id ever under constant budgets (verdicts only degrade);
+ *    raises can re-admit, so with dynamics an id may recur.
+ *    Bucket-compacted like arrivals (no score level — read whole only
+ *    by the lifecycle sheets). WRITTEN ONLY by folds whose driver-known
+ *    changed/rejected cells touch a prior cell — a quiet fold skips the
+ *    write entirely (the absent dir means what an empty dir meant, and
+ *    a stream that never evicts never creates the table; the readers
+ *    probe existence).
+ *  - `readmissions/batch=<id>` — (id) re-admitted by this fold's
+ *    budget raise. Bucket-compacted; written only by folds with raised
+ *    groups (the steady fold skips the empty write — measured at
+ *    ~100 ms of four-drain floor per skipped write-action).
  *
- * Retention: identical to [[StreamingQualityHead]] — meta prunes to
- * `retainGenerations`; head generations are reference-counted against
- * the retained tiers maps; the ledgers keep every ROW but compact
- * their DIRECTORIES ([[LedgerState.maintain]]).
+ * Retention: meta generations are superseded (every read targets the
+ * single latest committed generation), so each fold prunes them to the
+ * newest `retainGenerations` dirs ([[StreamState.pruneGenerations]];
+ * ≥ 2 keeps the generation a crash-replay reads). Head generations are
+ * reference-counted instead: a head `batch=<id>` dir is deleted once NO
+ * retained tiers map references it (an untouched cell legitimately pins
+ * a generation far older than the retention window). The
+ * arrivals/evictions/readmissions ledgers keep every ROW forever (they
+ * are history) but their DIRECTORIES compact ([[LedgerState.maintain]])
+ * — without that, a 15 s trigger accrues ~5,800 dirs/day/table and
+ * every fold's listing grows with stream age.
+ *
+ * Per-batch cost: the (group, tier) histogram of the ARRIVALS merged
+ * into the stored grid-bounded hist; candidates = changed-cell head
+ * rows ∪ arrivals (touched-cell- and batch-sized, never corpus- or even
+ * budget-sized) joined to the broadcast cell verdicts; only each
+ * group's frontier tier runs an exact running sum.
+ *
+ * Input columns: `doc_id`, `source` (the group), `score_k`, `n_tokens`.
  */
 object StreamingGroupQualityHead {
 
-  /** Attach the per-group evictive-head sink over a stream carrying
-    * (idCol, groupCol, scoreCol, tokCol). `budgets` maps each curated
-    * group to its token budget (fixed for the life of the state path);
-    * read results with [[ledger]]. */
+  private val IdCol = "doc_id"
+  private val GroupCol = "source"
+  private val ScoreCol = "score_k"
+  private val TokCol = "n_tokens"
+
+  /** Attach the evictive-head sink over a stream carrying (doc_id,
+    * source, score_k, n_tokens). `budgetsOf` is the budget-map SCHEDULE
+    * (batchId → budgets; a fixed plan is `_ => budgets`): per group,
+    * raises resurrect from the arrivals ledger and shrinks evict in
+    * place — after every fold each group's head equals the batch
+    * operator at THAT fold's budget. `retireOf` names the groups
+    * retired from each fold on. Caller starts the writer with its own
+    * checkpoint/trigger options; read results with [[ledger]] or
+    * [[lifecycle]]. `retainGenerations` bounds the superseded meta
+    * generation dirs kept on disk (≥ 2 — see
+    * [[StreamState.pruneGenerations]]). */
   def attach(
       docs: DataFrame,
       path: String,
-      budgets: Map[String, Long],
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, path, budgets, idCol, groupCol, scoreCol,
-          tokCol, retainGenerations, bucketK, compactEvery)
-      }
-
-  /** [[attach]] with a budget-map SCHEDULE (batchId → budgets): the
-    * dynamic per-group head. The returned maps must share one key set
-    * (the group-set contract); per group, raises resurrect from the
-    * arrivals ledger and shrinks evict in place — after every fold each
-    * group's head equals the batch operator at THAT fold's budget. */
-  def attachDynamic(
-      docs: DataFrame,
-      path: String,
       budgetsOf: Long => Map[String, Long],
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
       retainGenerations: Int = 3,
       bucketK: Int = 64,
       compactEvery: Int = 16,
@@ -149,19 +216,17 @@ object StreamingGroupQualityHead {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, path, budgetsOf(batchId), idCol, groupCol,
-          scoreCol, tokCol, retainGenerations, bucketK, compactEvery,
-          retire = retireOf(batchId))
+        foldBatch(batch, batchId, path, budgetsOf(batchId), retainGenerations,
+          bucketK, compactEvery, retire = retireOf(batchId))
       }
 
   /** The full dimension-sized state at generation `gen` — ONE collect
     * over the groups × grid bounded meta table. The generation dir is
-    * read DIRECTLY (its name IS the generation id) with the schema
-    * served from the [[StreamState.readStable]] cache, so the per-fold
-    * open pays neither a partition-discovery listing of sibling
-    * generations nor a schema-inference job (r20: the full-tree
-    * `read.parquet(path/meta)` open this replaces ran BOTH, every fold
-    * — the r19 global-head fix ported to the group head). */
+    * read DIRECTLY (its name IS the generation id — no need to discover
+    * and filter the whole retained tree) with the schema served from
+    * the [[StreamState.readStable]] cache, so the per-fold open pays
+    * neither a partition-discovery listing of sibling generations nor a
+    * schema-inference job. */
   private def metaAt(
       spark: SparkSession, path: String, gen: Long): Seq[(String, String, Long, Long)] =
     StreamState.readStable(spark, s"$path/meta#one", Seq(s"$path/meta/batch=$gen"))
@@ -179,9 +244,11 @@ object StreamingGroupQualityHead {
     * score=<s>` partition dirs inside each generation): that layout
     * exploded into groups × tiers × generations directories that
     * NOTHING partition-pruned (every read resolves through the tiers-
-    * map join) — the same measured ~57-listing/inference-job failure
-    * mode the r19 global-head flattening killed. Reading it with the
-    * flat-generation schema would misparse, so fail loud. */
+    * map join) — a measured ~57 listing/inference jobs per open at a
+    * few hundred cells. Reading it with the flat-generation schema
+    * would misparse, so fail loud. (A pre-merge global-head tree fails
+    * earlier still: its meta table has no `grp` column for [[metaAt]]
+    * to select.) */
   private val headLayoutOk = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def assertHeadLayout(spark: SparkSession, path: String, gen: Long): Unit =
     if (!headLayoutOk.contains(path)) {
@@ -227,10 +294,6 @@ object StreamingGroupQualityHead {
       batchId: Long,
       path: String,
       budgets: Map[String, Long],
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
       retainGenerations: Int = 3,
       bucketK: Int = 64,
       compactEvery: Int = 16,
@@ -256,23 +319,20 @@ object StreamingGroupQualityHead {
       // contract), deterministic across folds: sorted group order
       val gidOf: Map[String, Long] = budgets.keySet.toSeq.sorted
         .zipWithIndex.map { case (g, i) => g -> (i + 1).toLong }.toMap
-      val dim = broadcast(spark.createDataFrame(
-          budgets.toSeq.sortBy(_._1)
-            .map { case (g, b) => (g, b, gidOf(g)) })
-        .toDF("grp", "_budget", "_gid"))
       // in-batch id dedup: ONE representative ROW per id — max score,
       // ties to the smaller token count, then max group — never a
       // synthesized mix of two rows' fields
-      val batchDocs = batch.groupBy(col(idCol))
-        .agg(max(struct(col(scoreCol).cast("long").as("score"),
-          (-col(tokCol).cast("long")).as("_ntok"),
-          col(groupCol).cast("string").as("grp"))).as("_rep"))
-        .select(col(idCol).as("id"), col("_rep.grp").as("grp"),
+      val batchDocs = batch.groupBy(col(IdCol))
+        .agg(max(struct(col(ScoreCol).cast("long").as("score"),
+          (-col(TokCol).cast("long")).as("_ntok"),
+          col(GroupCol).cast("string").as("grp"))).as("_rep"))
+        .select(col(IdCol).as("id"), col("_rep.grp").as("grp"),
           col("_rep.score").as("score"), (-col("_rep._ntok")).as("tokens"))
-      // curated groups only (inner dimension join — the batch
-      // operator's contract), then the cross-batch re-arrival guard
-      val known = batchDocs.join(dim, Seq("grp"))
-        .select(col("id"), col("grp"), col("score"), col("tokens"))
+      // curated groups only (the batch operator's inner-dimension-join
+      // contract, as a literal IN filter: a broadcast join against the
+      // budget map costs one broadcast job per fold), then the
+      // cross-batch re-arrival guard
+      val known = batchDocs.filter(col("grp").isin(budgets.keys.toSeq: _*))
       val arrivals =
         if (hasState)
           LedgerState.antiJoinSeen(spark, s"$path/arrivals", batchId,
@@ -282,7 +342,7 @@ object StreamingGroupQualityHead {
       // — optimization guide §2.6); the barrier() before the meta write
       // keeps the commit-marker ordering (meta lands only after the data
       // it indexes), and the fold returns only after every future landed
-      val async = new FoldAsync(spark, "group-quality-head")
+      val async = new FoldAsync(spark, "quality-head")
       var mainOk = false
       try {
       // ONE distributed agg + collect: the batch's (group, tier)
@@ -295,6 +355,11 @@ object StreamingGroupQualityHead {
           .agg(sum(col("tokens")).as("bt")).collect()
           .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       if (batchHist.nonEmpty) {
+        // latest PRIOR generation: filesystem-level so legitimately-empty
+        // generations still count, own batch excluded (replay reads the
+        // state as of the generation before it). Every gen < batchId is
+        // committed — the stream replays an uncommitted batch before
+        // advancing, and that batch IS this one.
         val priorGen: Option[Long] =
           StreamState.generations(spark, s"$path/meta").find(_ != batchId)
         // ONE collect: the whole groups × grid prior state
@@ -453,10 +518,12 @@ object StreamingGroupQualityHead {
             case (cs, cid) if cs == fs && !raisedGroups(g) => g -> cid
           }
         }
-        val guardDf = broadcast(spark.createDataFrame(guards.toSeq)
-          .toDF("grp", "_guard"))
-        val preCut = frontierAll.join(guardDf, Seq("grp"), "left")
-          .filter(col("_guard").isNull || col("id") < col("_guard"))
+        // literal per-group predicates, not a join against a guard
+        // frame: broadcasting driver-local rows costs a job whenever a
+        // guard is set
+        val preCut = guards.foldLeft(frontierAll) { case (df, (g, cid)) =>
+          df.filter(col("grp") =!= g || col("id") < cid)
+        }
         // staged variant: the helper's eager count() is skipped — the
         // fused stats action below materializes the running sum once;
         // both internal persists release in the fold's finally
@@ -528,13 +595,11 @@ object StreamingGroupQualityHead {
         }
         if (evictionPossible) {
           // ONE semi-join against the union of the changed and rejected
-          // cell sets (disjoint: a changed cell is never rejected) — the
-          // two-leg union ran the priorHead subtree (generation read +
-          // tiers-map broadcast join) twice per evicting fold; profiled
-          // as x160's single largest job site (27 jobs / 8.1 s of job
-          // time over one 4-drain run). Same rows: a priorHead row
-          // matches at most one leg, and the trailing distinct() already
-          // dedups.
+          // cell sets (disjoint: a changed cell is never rejected) — a
+          // two-leg union would run the priorHead subtree (generation
+          // read + tiers-map broadcast join) twice per evicting fold
+          // (profiled as x160's single largest job site: 27 jobs / 8.1 s
+          // of job time over one 4-drain run)
           val evictCellsDf = broadcast(spark.createDataFrame(
               (changed ++ rejCells).toSeq)
             .toDF("grp", "score"))
@@ -561,13 +626,11 @@ object StreamingGroupQualityHead {
               .parquet(s"$path/readmissions/batch=$batchId")
           }
         }
-        // flat generation dir, grp/score as DATA columns: the old
-        // partitionBy("grp", "score") exploded the head tree into
-        // groups × tiers × generations directories that NOTHING ever
-        // partition-pruned (every read resolves through the tiers-map
-        // join) — the r19 global-head flattening (a measured ~57
-        // listing/inference jobs per open at a few hundred cells),
-        // ported; pre-r20 trees fail loud (see assertHeadLayout)
+        // flat generation dir, grp/score as DATA columns: a
+        // partitionBy("grp", "score") tree explodes into cells ×
+        // generations directories that NOTHING ever partition-prunes
+        // (every read resolves through the tiers-map join); pre-r20
+        // trees fail loud (see assertHeadLayout)
         if (changedWithRows.nonEmpty)
           async("head write") {
             newHeadChanged.select(col("id"), col("tokens"), col("grp"), col("score"))

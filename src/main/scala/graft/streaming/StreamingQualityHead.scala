@@ -1,687 +1,76 @@
 package graft.streaming
 
-import graft.ext.Positional
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
- * Streaming evictive quality-budget head — maintain ONLINE the corpus
- * [[graft.ext.Mixture.qualityBudgetHead]] selects in batch: "the best
- * `budget` tokens ingested SO FAR", admissions in (score DESC, id ASC)
- * order with the inclusive running token total inside the budget. The
- * missing quadrant of the budget family: x142 admits the FIRST tokens
- * online, x143/x144 pick the BEST tokens in batch — this keeps the
- * BEST tokens online, with late high-quality arrivals EVICTING the
- * current tail. After every fold the accumulated head must be
- * bit-identical to the batch operator over everything ingested.
+ * Streaming evictive quality-budget head over ONE global budget —
+ * maintain ONLINE the corpus [[graft.ext.Mixture.qualityBudgetHead]]
+ * selects in batch: "the best `budget` tokens ingested SO FAR". After
+ * every fold the accumulated head must be bit-identical to the batch
+ * operator over everything ingested.
  *
- * Why the fold can be exact with STRICTLY BOUNDED state — four
- * monotonicity facts of the tier arithmetic (tokens-above `prior` and
- * tier total `bt` only grow as the corpus grows):
- *  1. verdicts only degrade (admitted → evicted; rejected never
- *     re-admits), so the new head ⊆ old head ∪ arrivals;
- *  2. a tier that is 'full' now was full at every earlier prefix, so
- *     its members all sit in the old head;
- *  3. the frontier tier only moves UP the score grid — tiers below it
- *     stay rejected forever;
- *  4. WITHIN the frontier tier, inclusive sums are non-decreasing in
- *     id, so the tier's verdicts are an id-order PREFIX: everything
- *     the fold must remember about the tier's rejected docs compresses
- *     to ONE marker — the first rejected id (`cut`). An arrival past
- *     the cut is rejected outright (its prefix already overflows); an
- *     arrival before it needs only head ∪ batch for its exact sum.
- * Fact 4 is what keeps a degenerate all-one-score corpus from growing
- * corpus-sized state: without it the frontier tier's rejected roster
- * would have to persist whole.
+ * This is the single-group case of [[StreamingGroupQualityHead]] (the
+ * one fold implementation; its scaladoc holds the monotonicity facts,
+ * the dynamic-budget rationale and the state layout): every doc is
+ * filed under one constant group whose budget is the global one, and
+ * the readers drop the `grp` column again. With one group each step of
+ * the group fold is the global one — the in-batch representative, the
+ * raise detection, the changed cells, the cut guard, and the per-key
+ * running sum over a single key.
  *
- * ==Tier-partitioned head (round 14)==
- * Facts 1–3 also bound WHICH tiers a fold can touch: a tier strictly
- * above the batch's best arrival score has unchanged `prior` and `bt`,
- * so neither its verdict nor its membership can move. The head is
- * therefore stored per SCORE TIER with per-tier generations, and a
- * fold rewrites only its CHANGED tiers — the arrival tiers that are
- * not rejected, plus the frontier when it was touched (it moved, or
- * arrivals above it grew its `prior`). Per-fold head write
- * volume is proportional to the touched tiers' membership, NOT to the
- * budget: at a production budget (10¹³ tokens ≈ 10⁹ docs) the old
- * full-head rewrite would dominate every fold; here a low-score batch
- * writes nothing at all (its arrivals are rejected against the cut)
- * and a mid-score batch rewrites only the tiers below it.
- *
- * State layout under `path/` — per-`batch=<id>` OVERWRITE directories
- * (the [[StreamingWinnowIngest]] discipline: every read excludes the
- * fold's own batch, so replay after any crash window recomputes
- * identical frames and truncates-and-rewrites):
- *  - `meta/batch=<id>` — ONE grid-bounded (kind, k1, v) table holding
- *    everything dimension-sized the fold carries across batches,
- *    written LAST (it is the generation's commit marker):
- *     - 'hist'   rows (score → bt): per-tier token totals over
- *       everything ingested — non-empty from the first arrival on;
- *     - 'tiers'  rows (score → gen): every currently-NONEMPTY tier
- *       mapped to the head generation holding its membership — the
- *       head's read index; tombstones are plain absences;
- *     - 'cut'    row  (score → cut_id), at most one: the frontier tier
- *       and its first rejected id (fact 4's compression);
- *     - 'budget' row  (0 → budget): the budget in effect after this
- *       fold (the raise detector's reference point).
- *    One table instead of four (r16): the four frames are read together
- *    at every fold and are all grid-bounded, so splitting them bought
- *    four parquet round-trips and three extra driver collects per fold
- *    — the measured fixed floor of the x150 cost split — for no
- *    isolation. The per-fold tier arithmetic (hist merge, cumulative
- *    prior, verdicts) runs DRIVER-side over the collected grid: a
- *    window over ≤grid rows is driver work, not a Spark job.
- *  - `head/batch=<id>` — the CHANGED tiers' admitted rows
- *    (id, tokens, score), one FLAT dir per generation (r19: the old
- *    `score=<s>` partition dirs exploded into tiers × generations
- *    directories that nothing partition-pruned — every read resolves
- *    through the tiers-map join — and at a few hundred tiers one open
- *    of that tree cost ~57 listing/inference jobs; pre-r19 trees fail
- *    loud, see the layout guard). A tier's current membership lives in
- *    the generation the meta tiers map names — untouched tiers keep
- *    pointing at older generations.
- *  - `arrivals/batch=<id>`  — append-only ledger (id, score, tokens,
- *    admit) — the verdict each doc got ON ARRIVAL (also the
- *    cross-batch re-arrival guard, and the resurrection source for
- *    budget raises). A [[LedgerState]] ledger: every `compactEvery`
- *    folds its per-batch dirs rewrite into one `ckpt=<id>` generation
- *    partitioned by `pmod(id, bucketK)` AND by score tier, so the
- *    guard's anti-join prunes to the batch's id buckets and a raise
- *    fold's resurrection prunes to its changed tiers — neither ever
- *    lists or scans the whole history tree.
- *  - `evictions/batch=<id>` — (id) evicted by this fold; at most one
- *    row per id ever under a constant budget (verdicts only degrade);
- *    budget raises can re-admit, so with dynamics an id may recur.
- *    Bucket-compacted like arrivals (no score level — read whole only
- *    by the lifecycle sheets). WRITTEN ONLY by folds whose driver-known
- *    changed/rejected cells touch a prior tier — a quiet fold skips the
- *    write entirely (the absent dir means what an empty dir meant, and
- *    a stream that never evicts never creates the table; the readers
- *    probe existence).
- *  - `readmissions/batch=<id>` — (id) re-admitted by this fold's
- *    budget raise. Bucket-compacted; written only by raise folds (the
- *    steady fold skips the empty write — measured at ~100 ms of
- *    four-drain floor per skipped write-action).
- *
- * Retention: meta generations are superseded (every read targets the
- * single latest committed generation), so each fold prunes them to the
- * newest `retainGenerations` dirs ([[StreamState.pruneGenerations]];
- * ≥ 2 keeps the generation a crash-replay reads). Head generations are
- * reference-counted instead: a head `batch=<id>` dir is deleted once NO
- * retained tiers map references it (an untouched tier legitimately pins
- * a generation far older than the retention window). The arrivals/evictions/readmissions
- * ledgers keep every ROW forever (they are history) but their
- * DIRECTORIES compact ([[LedgerState.maintain]]) — without that, a
- * 15 s trigger accrues ~5,800 dirs/day/table and every fold's listing
- * grows with stream age.
- *
- * Per-batch cost: tier histogram of the ARRIVALS merged into the
- * stored grid-bounded hist; candidates = changed-tier head rows ∪
- * arrivals (touched-tier- and batch-sized, never corpus- or even
- * budget-sized) joined to the broadcast tier verdicts; only the one
- * frontier tier runs an exact running sum (two-phase
- * [[Positional.withGlobalRunningSum]] layout, so a degenerate
- * single-tier corpus never funnels one task).
- *
- * ==Dynamic budget (round 14)==
- * `budget` is read PER FOLD, so a deployment can retarget the head
- * mid-stream (a training run scaling up or down). The two directions
- * are asymmetric:
- *  - a SHRINK needs nothing new: tier verdicts are recomputed from the
- *    full hist every fold, every membership a shrink can evict already
- *    sits in the head, and docs past the frontier cut only get worse —
- *    the incremental path is exact as-is;
- *  - a RAISE breaks fact 1 (verdicts can now UPGRADE): tiers that were
- *    rejected — whose membership was deliberately never kept — can
- *    re-enter. The fold detects the raise against the stored
- *    `budget` generation and RESURRECTS candidates from the arrivals
- *    ledger (the one append-only table that holds every doc ever),
- *    score-pruned to the now-non-rejected tiers, with the frontier cut
- *    guard disabled for that fold. Work is ∝ the new head + frontier
- *    tier (a ledger scan pruned by the tier predicate), the honest
- *    price of an infrequent control-plane event; the next steady fold
- *    resumes the bounded incremental path off the recomputed cut.
- * Re-admissions land in their own `readmissions/batch=<id>` ledger.
- * With dynamics, a doc can evict more than once (evict → readmit →
- * evict), so the evictions ledger may hold an id at several batches;
- * [[lifecycle]] is the dynamics-aware reader ([[ledger]]'s
- * admitted = admit ∧ never-evicted invariant holds only for a
- * constant budget). A budget change delivered alongside an
- * empty-or-all-rearrival batch takes effect at the next folding batch
- * (raises are detected by state diff, not by the batch that carried
- * them).
+ * Input columns: `doc_id`, `score_k`, `n_tokens` (a `source` column,
+ * if present, is ignored).
  */
 object StreamingQualityHead {
 
-  /** Attach the evictive-head sink over a stream carrying (idCol,
-    * scoreCol, tokCol). Caller starts the writer with its own
-    * checkpoint/trigger options; read results with [[ledger]].
-    * `retainGenerations` bounds the superseded hist/tiers/cut
-    * generation dirs kept on disk (≥ 2 — see
-    * [[StreamState.pruneGenerations]]); head generations are reference-
-    * counted off the retained tiers maps; the arrivals/evictions
-    * ledgers always keep full history. */
+  /** The one group every doc is filed under. */
+  private val Global = "*"
+
+  /** Attach the evictive-head sink. `budgetOf` is the budget SCHEDULE
+    * (batchId → budget; a constant budget is `_ => b`): raises re-admit
+    * the best previously-dropped docs from the arrivals ledger, shrinks
+    * evict down to the new head. Read results with [[ledger]] or
+    * [[lifecycle]]. */
   def attach(
       docs: DataFrame,
       path: String,
-      budget: Long,
-      idCol: String = "doc_id",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, path, budget, idCol, scoreCol, tokCol,
-          retainGenerations, bucketK, compactEvery)
-      }
-
-  /** [[attach]] with a budget SCHEDULE (batchId → budget): the dynamic-
-    * budget head. Raises re-admit the best previously-dropped docs from
-    * the arrivals ledger; shrinks evict down to the new head — after
-    * every fold the head still equals the batch operator over
-    * everything ingested at THAT fold's budget. */
-  def attachDynamic(
-      docs: DataFrame,
-      path: String,
       budgetOf: Long => Long,
-      idCol: String = "doc_id",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
       retainGenerations: Int = 3,
       bucketK: Int = 64,
       compactEvery: Int = 16): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, path, budgetOf(batchId), idCol, scoreCol,
-          tokCol, retainGenerations, bucketK, compactEvery)
-      }
+    StreamingGroupQualityHead.attach(single(docs), path,
+      b => Map(Global -> budgetOf(b)), retainGenerations, bucketK, compactEvery)
 
-  /** The full dimension-sized state at generation `gen` — ONE collect
-    * over the grid-bounded meta table: (kind, k1, v) rows the caller
-    * partitions driver-side into hist / tiers map / cut / budget. The
-    * generation directory is read DIRECTLY (the `batch=<id>` name IS the
-    * generation id — no need to discover and filter the whole retained
-    * tree) with the schema served from the [[StreamState.readStable]]
-    * cache, so the per-fold open costs neither a partition-discovery
-    * listing of sibling generations nor a schema-inference job. */
-  private def metaAt(spark: SparkSession, path: String, gen: Long): Seq[(String, Long, Long)] =
-    StreamState.readStable(spark, s"$path/meta#one", Seq(s"$path/meta/batch=$gen"))
-      .select(col("kind"), col("k1").cast("long"), col("v").cast("long"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-
-  /** The (score → head generation) map stored at generation `gen`. */
-  private def tiersAt(spark: SparkSession, path: String, gen: Long): Seq[(Long, Long)] =
-    metaAt(spark, path, gen).collect { case ("tiers", s, g) => (s, g) }
-
-  /** One-per-JVM guard against the pre-r19 head layout (`score=<s>`
-    * partition dirs inside each generation): that layout exploded into
-    * tiers × generations directories — a measured ~57 listing/inference
-    * jobs per fold at a few hundred tiers, for a tree NOTHING ever
-    * partition-pruned (every read resolves through the tiers map join).
-    * Reading it with the flat-generation schema would misparse, so fail
-    * loud exactly like the r16 meta-consolidation guard. */
-  private val headLayoutOk = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def assertHeadLayout(spark: SparkSession, path: String, gen: Long): Unit =
-    if (!headLayoutOk.contains(path)) {
-      if (StreamState.hasChildWithPrefix(spark, s"$path/head/batch=$gen", "score="))
-        throw new IllegalStateException(
-          s"$path holds a pre-r19 tier-partitioned head layout (score= " +
-            "dirs inside head generations): refusing to read it with the " +
-            "flat-generation schema — drain and re-plan the stream into " +
-            "a fresh state path")
-      headLayoutOk.add(path); ()
-    }
-
-  /** The head rows a (score → gen) map selects: ONLY the referenced
-    * generation dirs (driver-known from the map — unreferenced retained
-    * generations are never listed, let alone read) joined to the
-    * broadcast map on (tier, generation). Rows from superseded
-    * generations inside a referenced dir never match the map, so no
-    * explicit exclusion filtering is needed. `score` is a DATA column
-    * (flat generation dirs — see [[assertHeadLayout]]); `batch` stays
-    * the generation partition column via basePath. */
-  private def headFor(
-      spark: SparkSession, path: String, tiers: Seq[(Long, Long)]): DataFrame = {
-    val gens = tiers.map(_._2).distinct.sorted
-    assertHeadLayout(spark, path, gens.head)
-    val mapDf = spark.createDataFrame(tiers).toDF("_mscore", "_gen")
-    StreamState.readStable(spark, s"$path/head#gen",
-        gens.map(g => s"$path/head/batch=$g"), basePath = Some(s"$path/head"))
-      .select(col("id"), col("tokens").cast("long").as("tokens"),
-        col("score").cast("long").as("score"),
-        col("batch").cast("long").as("_b"))
-      .join(broadcast(mapDf),
-        col("score") === col("_mscore") && col("_b") === col("_gen"))
-      .select(col("id"), col("score"), col("tokens"))
-  }
-
-  /** One micro-batch's fold — public so replay (foreachBatch
-    * re-delivering (batch, batchId) after any prefix of the six
-    * writes committed) is directly spec-testable: re-folding must
-    * leave every state table bit-identical. */
+  /** One micro-batch's fold — public so replay is directly
+    * spec-testable: re-folding must leave every state table
+    * bit-identical. */
   def foldBatch(
       batch: DataFrame,
       batchId: Long,
       path: String,
       budget: Long,
-      idCol: String = "doc_id",
-      scoreCol: String = "score_k",
-      tokCol: String = "n_tokens",
       retainGenerations: Int = 3,
       bucketK: Int = 64,
-      compactEvery: Int = 16): Unit = {
-    require(budget >= 0, "budget must be non-negative")
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      val hasState = StreamState.exists(spark, s"$path/meta")
-      // layout-migration guard: a state tree written by the pre-r16
-      // four-table layout has hist/ but no meta/ — silently treating it
-      // as hasState=false would re-initialize from empty while the old
-      // ledger dirs stay under the same path, and every re-arrival
-      // would ledger a duplicate row
-      if (!hasState && StreamState.exists(spark, s"$path/hist"))
-        throw new IllegalStateException(
-          s"$path holds a pre-consolidation quality-head layout (hist/ " +
-            "without meta/): refusing to re-initialize over it — drain " +
-            "and re-plan the stream into a fresh state path")
-      // in-batch id dedup (pure function of batch contents), then the
-      // cross-batch re-arrival guard off the arrivals ledger — a doc
-      // already holding an arrival verdict no-ops (column-pruned id
-      // scan restricted to the batch's own id buckets, batch side
-      // broadcasts). ONE representative ROW per id — max score, ties to
-      // the smaller token count — never a synthesized (max score, min
-      // tokens) mix of two different rows: the admitted (score, tokens)
-      // pairing must be one the doc actually arrived with
-      val batchDocs = batch.groupBy(col(idCol))
-        .agg(max(struct(col(scoreCol).cast("long").as("score"),
-          (-col(tokCol).cast("long")).as("_ntok"))).as("_rep"))
-        .select(col(idCol).as("id"), col("_rep.score").as("score"),
-          (-col("_rep._ntok")).as("tokens"))
-      val arrivals =
-        if (hasState)
-          LedgerState.antiJoinSeen(spark, s"$path/arrivals", batchId,
-            batchDocs, "id").persist()
-        else batchDocs.persist()
-      // independent state writes overlap from a small pool ([[FoldAsync]]
-      // — optimization guide §2.6); the barrier() before the meta write
-      // keeps the commit-marker ordering (meta lands only after the data
-      // it indexes), and the fold returns only after every future landed
-      val async = new FoldAsync(spark, "quality-head")
-      var mainOk = false
-      try {
-      // ONE distributed agg + collect: the batch's tier histogram — it
-      // DOUBLES as the emptiness probe (empty map ⟺ empty arrivals),
-      // replacing the old separate isEmpty action (a measured 4
-      // sub-jobs per fold for a bit the histogram already carries).
-      // Everything downstream of it — hist merge, cumulative prior,
-      // tier verdicts — is driver arithmetic over ≤grid rows (the r16
-      // fold-floor consolidation).
-      val batchHist: Map[Long, Long] = arrivals.groupBy(col("score"))
-        .agg(sum(col("tokens")).as("bt")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      if (batchHist.nonEmpty) {
-        // latest PRIOR generation: filesystem-level so legitimately-empty
-        // generations still count, own batch excluded (replay reads the
-        // state as of the generation before it). Every gen < batchId is
-        // committed — the stream replays an uncommitted batch before
-        // advancing, and that batch IS this one.
-        val priorGen: Option[Long] =
-          StreamState.generations(spark, s"$path/meta").find(_ != batchId)
-        // ONE collect: the whole dimension-sized prior state
-        val metaRows: Seq[(String, Long, Long)] =
-          priorGen.map(g => metaAt(spark, path, g)).getOrElse(Seq.empty)
-        val priorHist: Map[Long, Long] =
-          metaRows.collect { case ("hist", s, bt) => s -> bt }.toMap
-        val priorTiers: Seq[(Long, Long)] =
-          metaRows.collect { case ("tiers", s, g) => (s, g) }
-        val priorCut: Option[(Long, Long)] =
-          metaRows.collectFirst { case ("cut", s, cid) => (s, cid) }
-        // the budget in effect at the prior generation; a raise flips
-        // the fold onto the ledger-resurrection path
-        val priorBudget: Option[Long] =
-          metaRows.collectFirst { case ("budget", _, b) => b }
-        val raised = priorBudget.exists(budget > _)
-        val priorHead =
-          if (priorTiers.isEmpty)
-            arrivals.limit(0).select(col("id"), col("score"), col("tokens"))
-          else headFor(spark, path, priorTiers)
-        val newHist: Map[Long, Long] =
-          (priorHist.keySet ++ batchHist.keySet).iterator
-            .map(s => s -> (priorHist.getOrElse(s, 0L) + batchHist.getOrElse(s, 0L)))
-            .toMap
-        // the x143 arithmetic: tokens-strictly-above as prior, walked
-        // down the score grid
-        var runAbove = 0L
-        val cumRows: Seq[(Long, Long, Boolean, Boolean)] =
-          newHist.keys.toSeq.sorted(Ordering[Long].reverse).map { s =>
-            val bt = newHist(s)
-            val prior = runAbove
-            runAbove += bt
-            (s, prior, prior + bt <= budget, prior >= budget)
-          }
-        val verdicts: Map[Long, (Boolean, Boolean)] =
-          cumRows.map(r => r._1 -> ((r._3, r._4))).toMap
-        val frontierScore: Option[Long] =
-          cumRows.collectFirst { case (s, _, false, false) => s }
-        val arrivalScores: Set[Long] = batchHist.keySet
-        // CHANGED tiers — the only tiers whose membership can move
-        // (facts 1–3): non-rejected arrival tiers, plus the frontier
-        // when it was TOUCHED — it moved up, or arrivals landed
-        // strictly above it (its `prior` grew, so its cut slides DOWN
-        // and its tail must evict even though the tier itself got no
-        // arrivals and did not move; missing this left stale members
-        // whenever a batch fit wholly inside the full tiers above)
-        val frontierTouched = frontierScore.exists(f =>
-          !priorCut.map(_._1).contains(f) || arrivalScores.exists(_ > f))
-        // under a RAISE every non-rejected tier may gain members the
-        // head never kept (fact 1 breaks upward) — all of them are
-        // changed and the ledger supplies the resurrection candidates
-        val changed: Set[Long] =
-          if (raised) verdicts.collect { case (s, (_, false)) => s }.toSet
-          else arrivalScores.filterNot(s => verdicts(s)._2) ++
-            (if (frontierTouched) frontierScore.toSet else Set.empty[Long])
-        val changedDf = broadcast(
-          spark.createDataFrame(changed.toSeq.map(Tuple1(_))).toDF("score"))
-        // candidates: prior members of changed tiers ∪ arrivals at
-        // changed tiers — touched-tier-sized, never budget-sized; a
-        // raise fold adds the ledger slice at the changed tiers — a
-        // PARTITION-pruned read of the compacted ledger (the checkpoint
-        // stores a score-tier level; `scorePrune` is the exact tier
-        // predicate, so no semi-join refinement is needed); rows
-        // duplicated across the three sources are identical
-        // (id, score, tokens) tuples, so distinct() restores one row
-        // per doc
-        val baseCandidates = priorHead.join(changedDf, Seq("score"), "left_semi")
-          .unionByName(arrivals.join(changedDf, Seq("score"), "left_semi"))
-        val candidates =
-          if (!raised) baseCandidates
-          else baseCandidates.unionByName(
-              LedgerState.view(spark, s"$path/arrivals", batchId,
-                  scorePrune = Some(("score", changed)))
-                .select(col("id"), col("score").cast("long").as("score"),
-                  col("tokens").cast("long").as("tokens")))
-            .distinct()
-        // the grid-bounded verdict sheet enters the plan as a broadcast
-        // literal frame — no lineage back to any state read
-        val cumDf = broadcast(spark.createDataFrame(cumRows)
-          .toDF("score", "_prior", "_full", "_rej"))
-        val flagged = candidates.join(cumDf, Seq("score")).persist()
-        try {
-        val decidedFull = flagged.filter(col("_full"))
-          .select(col("id"), col("score"), col("tokens"))
-        val frontierAll = flagged.filter(!col("_full") && !col("_rej"))
-          .select(col("id"), col("score"), col("tokens"), col("_prior"))
-        // fact 4: if the cut marker names THIS tier, candidates at or
-        // past the cut are rejected without computation — only the
-        // pre-cut slice runs the exact two-phase running sum. A raise
-        // invalidates the stored cut (it was computed under the smaller
-        // budget): the frontier tier recomputes whole, off the ledger
-        // slice, and the rewritten cut re-arms the guard next fold.
-        val cutGuard: Option[Long] = (priorCut, frontierScore) match {
-          case (Some((cs, cid)), Some(fs)) if cs == fs && !raised => Some(cid)
-          case _ => None
-        }
-        val preCut = cutGuard match {
-          case Some(cid) => frontierAll.filter(col("id") < cid)
-          case None => frontierAll
-        }
-        // the helper's eager count() is skipped (staged variant): the
-        // fused stats action below materializes the running sum once —
-        // both internal persists release in the fold's finally
-        val (refinedBase, releaseRunningSum) = Positional.withGlobalRunningSumStaged(
-            preCut, Seq(col("id")), "tokens", "_pfx")
-        val refined = refinedBase
-          .withColumn("_adm", col("_prior") + col("_pfx") <= budget)
-        // persisted, NOT eagerly checkpointed: the consumers below
-        // materialize it once into cache (the old eager localCheckpoint
-        // paid a dedicated per-fold job); released in the finally so a
-        // stream never accumulates cached frames across batches
-        val newHeadChanged = decidedFull
-          .unionByName(refined.filter(col("_adm")).select("id", "score", "tokens"))
-          .persist()
-        try {
-        // ONE action replaces the old rejected-min aggregate AND the
-        // per-tier survivor count: per (score, admitted) min id over
-        // decided ∪ refined — an admitted group's presence is the
-        // survivor bit; the min over rejected groups is the cut
-        val stats = decidedFull
-          .select(col("score"), lit(true).as("_a"), col("id"))
-          .unionByName(refined.select(col("score"), col("_adm").as("_a"), col("id")))
-          .groupBy(col("score"), col("_a")).agg(min(col("id")).as("_mn"))
-          .collect()
-        val rejMin: Long = stats.filter(r => !r.getBoolean(1))
-          .map(_.getLong(2)).foldLeft(Long.MaxValue)(math.min)
-        // new cut: the first rejected id among the recomputed slice, or
-        // the old marker if the whole slice fits (the old cut doc only
-        // got worse). A frontier tier always HAS a rejected doc (its
-        // last inclusive sum is prior + bt > budget), so cut is defined
-        // whenever the frontier is.
-        val newCut: Option[(Long, Long)] = frontierScore.map { fs =>
-          (fs, math.min(rejMin, cutGuard.getOrElse(Long.MaxValue)))
-        }
-        // the updated read index: untouched non-rejected tiers keep
-        // their generation; changed tiers with surviving rows point
-        // here; emptied/rejected tiers drop out (the tombstone IS the
-        // absence)
-        val changedWithRows: Set[Long] =
-          stats.filter(_.getBoolean(1)).map(_.getLong(0)).toSet
-        val newTiers: Seq[(Long, Long)] =
-          priorTiers.filter { case (s, _) =>
-            !verdicts.get(s).exists(_._2) && !changed.contains(s)
-          } ++ changedWithRows.toSeq.sorted.map(_ -> batchId)
-        // ledger rows: arrival verdicts + this fold's evictions. Every
-        // non-rejected arrival tier is in `changed`, so the admit flag
-        // falls out of the changed-tier head alone.
-        val arrOut = arrivals.join(
-            newHeadChanged.select(col("id"), lit(true).as("admit")), Seq("id"), "left")
-          .select(col("id"), col("score"), col("tokens"),
-            coalesce(col("admit"), lit(false)).as("admit"))
-        // evicted: prior members of changed tiers that did not survive,
-        // plus prior members of tiers that fell below the frontier
-        // (rejected now — their tier vanishes from the map entirely).
-        // Both memberships are DRIVER-known sets, so a fold that touched
-        // no prior tier (first fold, or every arrival rejected at the
-        // cut with the frontier untouched) skips the whole computation
-        // AND the write — at ~100 ms per write-action on a small-batch
-        // fold, the skipped empty ledger dirs are a measurable slice of
-        // the four-drain harness floor; absence of `batch=<id>` simply
-        // means "that fold evicted nothing", which is what an empty dir
-        // said too. Replay-safe: the skip decision is a pure function of
-        // the same pre-batch state the frames are.
-        val rejScores: Set[Long] =
-          verdicts.collect { case (s, (_, true)) => s }.toSet
-        val evictionPossible = priorTiers.nonEmpty &&
-          (changed.exists(s => priorTiers.exists(_._1 == s)) ||
-            rejScores.exists(s => priorTiers.exists(_._1 == s)))
-        async("arrivals write") {
-          arrOut.write.mode("overwrite").parquet(s"$path/arrivals/batch=$batchId")
-        }
-        if (evictionPossible) {
-          // ONE semi-join against the union of the changed and rejected
-          // tier sets (disjoint: a changed tier is never rejected) —
-          // the old two-leg union ran the priorHead subtree (generation
-          // read + tiers-map broadcast join) twice per evicting fold
-          val evictScoresDf = broadcast(spark.createDataFrame(
-              (changed ++ rejScores).toSeq.map(Tuple1(_)))
-            .toDF("score"))
-          val evicted = priorHead.join(evictScoresDf, Seq("score"), "left_semi")
-            .join(newHeadChanged.select("id"), Seq("id"), "left_anti")
-            .select("id").distinct()
-          async("evictions write") {
-            evicted.write.mode("overwrite")
-              .parquet(s"$path/evictions/batch=$batchId")
-          }
-        }
-        // re-admissions: head members that were neither prior members of
-        // their (changed) tier nor this batch's arrivals — possible only
-        // on a raise fold (without one, candidates ⊆ priorHead ∪
-        // arrivals, so the write is skipped outright — the common fold)
-        if (raised) {
-          val readmitted = newHeadChanged.select("id")
-            .join(arrivals.select("id"), Seq("id"), "left_anti")
-            .join(priorHead.join(changedDf, Seq("score"), "left_semi")
-              .select("id"), Seq("id"), "left_anti")
-          async("readmissions write") {
-            readmitted.write.mode("overwrite")
-              .parquet(s"$path/readmissions/batch=$batchId")
-          }
-        }
-        // flat generation dir, score as a DATA column: the old
-        // partitionBy("score") exploded the head tree into tiers ×
-        // generations directories that NOTHING partition-pruned (every
-        // read resolves through the tiers-map join) — at a few hundred
-        // tiers one read of that tree cost ~57 listing/inference jobs
-        if (changedWithRows.nonEmpty)
-          async("head write") {
-            newHeadChanged.select(col("id"), col("tokens"), col("score"))
-              .write.mode("overwrite")
-              .parquet(s"$path/head/batch=$batchId")
-          }
-        // the marker barrier: every data write this generation indexes
-        // must be durable before the meta (commit-marker) write below
-        async.barrier()
-        // ONE dimension-sized write carries everything the next fold
-        // reads back — and, written after the head data, it is the
-        // generation's commit marker
-        val metaOut: Seq[(String, Long, Long)] =
-          newHist.toSeq.sorted.map { case (s, bt) => ("hist", s, bt) } ++
-            newTiers.map { case (s, g) => ("tiers", s, g) } ++
-            newCut.toSeq.map { case (s, cid) => ("cut", s, cid) } ++
-            Seq(("budget", 0L, budget))
-        spark.createDataFrame(metaOut).toDF("kind", "k1", "v")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/meta/batch=$batchId")
-        // retention LAST (after this generation is fully written):
-        // superseded meta generations prune to the window; head
-        // generations are reference-counted — alive while ANY retained
-        // tiers map still points at them (an untouched tier
-        // legitimately pins a generation older than the window); the
-        // three ledgers keep their rows but compact their directories
-        StreamState.pruneGenerations(spark, s"$path/meta", retainGenerations)
-        async("ledger maintenance") {
-          LedgerState.maintain(spark, s"$path/arrivals", batchId,
-            scoreCol = Some("score"), bucketK = bucketK,
-            compactEvery = compactEvery)
-          Seq("evictions", "readmissions").foreach(t =>
-            if (StreamState.exists(spark, s"$path/$t"))
-              LedgerState.maintain(spark, s"$path/$t", batchId,
-                bucketK = bucketK, compactEvery = compactEvery))
-        }
-        // the retained generation set is driver-known (just pruned), so
-        // read exactly those dirs — this fold's own meta write
-        // guarantees the list is non-empty
-        val referenced: Set[Long] = StreamState.readStable(spark,
-            s"$path/meta#one",
-            StreamState.generations(spark, s"$path/meta")
-              .map(g => s"$path/meta/batch=$g"))
-          .filter(col("kind") === "tiers")
-          .select(col("v").cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSet + batchId
-        StreamState.deleteGenerations(spark, s"$path/head",
-          StreamState.generations(spark, s"$path/head").filterNot(referenced))
-        mainOk = true
-        } finally {
-          newHeadChanged.unpersist(blocking = false)
-          releaseRunningSum()
-        }
-        } finally flagged.unpersist(blocking = false)
-      } else mainOk = true
-      } finally {
-        val failures = async.shutdownAwait()
-        arrivals.unpersist(blocking = false)
-        if (mainOk) failures.headOption.foreach(t => throw t)
-      }
-      ()
-    }
-  }
+      compactEvery: Int = 16): Unit =
+    StreamingGroupQualityHead.foldBatch(single(batch), batchId, path,
+      Map(Global -> budget), retainGenerations, bucketK, compactEvery)
 
-  /** The latest committed generation: the newest `meta` dir — meta is
-    * written AFTER the head data it indexes, so a generation whose meta
-    * exists has its head rows in place (the old hist/tiers two-listing
-    * intersection collapsed when the four dimension tables merged).
-    * FILESYSTEM-level, not data-level: a legitimate generation can be
-    * EMPTY (budget 0). Listing retention-bounded. */
-  private def latestCommitted(spark: SparkSession, path: String): Long =
-    StreamState.generations(spark, s"$path/meta").headOption.getOrElse(
-      throw new IllegalStateException(
-        s"no committed generation under $path (crash before the first " +
-          "meta write? restart the stream to replay the batch)"))
+  private def single(docs: DataFrame): DataFrame = docs.withColumn("source", lit(Global))
 
-  /** The current head — must equal the admitted set of
-    * [[graft.ext.Mixture.qualityBudgetHead]] over everything ingested.
-    * Resolved through the latest committed tiers map: each tier reads
-    * from the generation that last rewrote it. */
-  def head(spark: SparkSession, path: String): DataFrame = {
-    val g = latestCommitted(spark, path)
-    val tiers = tiersAt(spark, path, g)
-    if (tiers.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("id", "score", "tokens")
-    } else headFor(spark, path, tiers)
-  }
+  /** The current head (id, score, tokens). */
+  def head(spark: SparkSession, path: String): DataFrame =
+    StreamingGroupQualityHead.head(spark, path).drop("grp")
 
-  /** Per-doc lifecycle sheet: arrival verdict, the batch that evicted
-    * it (null if never), and FINAL membership read from the current
-    * head state (so a drift between ledger and head is observable, not
-    * papered over — `admitted = admit AND evict_batch IS NULL` is the
-    * invariant the spec pins). */
-  def ledger(spark: SparkSession, path: String): DataFrame = {
-    val arr = LedgerState.view(spark, s"$path/arrivals", exclude = -1L)
-      .select(col("id"), col("abatch").as("arrival_batch"),
-        col("score"), col("tokens"), col("admit"))
-    // a stream that never evicted never CREATED the table (empty fold
-    // dirs are skipped, not written) — absence means zero evictions
-    val withEv =
-      if (!StreamState.exists(spark, s"$path/evictions"))
-        arr.withColumn("evict_batch", lit(null).cast("long"))
-      else arr.join(
-        LedgerState.view(spark, s"$path/evictions", exclude = -1L)
-          .groupBy(col("id"))
-          .agg(min(col("abatch")).as("evict_batch")),
-        Seq("id"), "left")
-    withEv
-      .join(head(spark, path).select(col("id"), lit(true).as("_m")), Seq("id"), "left")
-      .select(col("id"), col("arrival_batch"), col("score"), col("tokens"),
-        col("admit"), col("evict_batch"),
-        coalesce(col("_m"), lit(false)).as("admitted"))
-  }
+  /** Per-doc sheet (id, arrival_batch, score, tokens, admit,
+    * evict_batch, admitted) — see [[StreamingGroupQualityHead.ledger]]. */
+  def ledger(spark: SparkSession, path: String): DataFrame =
+    StreamingGroupQualityHead.ledger(spark, path).drop("grp")
 
-  /** The dynamics-aware per-doc sheet for a dynamic-budget head:
-    * arrival verdict, how many times the doc was evicted and
-    * re-admitted across the stream's budget epochs, and FINAL
-    * membership from the current head. (With a constant budget this
-    * degenerates to [[ledger]]: n_evictions ≤ 1, n_readmissions = 0.) */
-  def lifecycle(spark: SparkSession, path: String): DataFrame = {
-    val arr = LedgerState.view(spark, s"$path/arrivals", exclude = -1L)
-      .select(col("id"), col("abatch").as("arrival_batch"),
-        col("score"), col("tokens"), col("admit"))
-    // eviction/readmission tables exist only once a fold actually
-    // evicted / re-admitted (empty fold dirs are skipped, not written)
-    val withEv =
-      if (!StreamState.exists(spark, s"$path/evictions"))
-        arr.withColumn("n_evictions", lit(0L))
-      else arr.join(
-        LedgerState.view(spark, s"$path/evictions", exclude = -1L)
-          .groupBy(col("id")).agg(count(lit(1)).as("n_evictions")),
-        Seq("id"), "left")
-    val withRe =
-      if (!StreamState.exists(spark, s"$path/readmissions"))
-        withEv.withColumn("n_readmissions", lit(0L))
-      else withEv.join(
-        LedgerState.view(spark, s"$path/readmissions", exclude = -1L)
-          .groupBy(col("id")).agg(count(lit(1)).as("n_readmissions")),
-        Seq("id"), "left")
-    withRe
-      .join(head(spark, path).select(col("id"), lit(true).as("_m")), Seq("id"), "left")
-      .select(col("id"), col("arrival_batch"), col("score"), col("tokens"),
-        col("admit"),
-        coalesce(col("n_evictions"), lit(0L)).as("n_evictions"),
-        coalesce(col("n_readmissions"), lit(0L)).as("n_readmissions"),
-        coalesce(col("_m"), lit(false)).as("admitted"))
-  }
+  /** Dynamics-aware per-doc sheet (id, arrival_batch, score, tokens,
+    * admit, n_evictions, n_readmissions, admitted) — see
+    * [[StreamingGroupQualityHead.lifecycle]]. */
+  def lifecycle(spark: SparkSession, path: String): DataFrame =
+    StreamingGroupQualityHead.lifecycle(spark, path).drop("grp")
 }

@@ -4,18 +4,19 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Job-level anatomy of the quality-head folds (optimization guide §1) —
-  * the FoldProbe methodology pointed at [[graft.streaming.StreamingQualityHead]]
-  * and [[graft.streaming.StreamingGroupQualityHead]], the r19 "Not yet
-  * optimized" lead item (x150/x151/x159/x160-class rows, ~100 s of the
+/** Job-level anatomy of the evictive quality-head fold (optimization
+  * guide §1) — the FoldProbe methodology pointed at
+  * [[graft.streaming.StreamingGroupQualityHead]], the single fold
+  * implementation behind x150/x151/x159/x160-class rows (~100 s of the
   * battery).
   *
   * Runs `foldBatch` directly on x150/x160-shaped batches from sf0.1 and
   * prints, per SQL-execution (= one fold ACTION), the job count and the
   * action's driver callsite (`callSite.short` from the job properties) —
   * so every job maps back to a foldBatch code line. `SPARK_GRAFT_QH_MODE`
-  * = `global` (StreamingQualityHead, x150 shape) | `group`
-  * (StreamingGroupQualityHead, x160 dynamic shape, raise at fold 2).
+  * = `global` (x150 shape, through the one-group front
+  * [[graft.streaming.StreamingQualityHead]]) | `group` (x160 dynamic
+  * shape, raise at fold 2).
   */
 object QualityHeadProbe {
   def main(args: Array[String]): Unit = {

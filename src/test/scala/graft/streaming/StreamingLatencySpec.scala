@@ -61,18 +61,22 @@ class StreamingLatencySpec extends SparkSpec {
       val exec = progress.values.toSeq
       assert(exec.size >= 40, s"expected 40 data batches, saw ${exec.size}")
       val maxMs = exec.max
-      val medMs = exec.sorted.apply(exec.size / 2)
-      info(s"tick-to-decision over ${exec.size} ticks: median ${medMs} ms, max ${maxMs} ms")
-      // the budget bound is the MEDIAN tick: the suite now runs inside a
+      val sorted = exec.sorted
+      val medMs = sorted(exec.size / 2)
+      // nearest-rank p90: the 36th of 40 ticks
+      val p90Ms = sorted(math.ceil(exec.size * 0.9).toInt - 1)
+      info(s"tick-to-decision over ${exec.size} ticks: median ${medMs} ms, " +
+        s"p90 ${p90Ms} ms, max ${maxMs} ms")
+      // the budget bound is the p90 tick: the suite runs inside a
       // parallel forked-group harness (6 suites share the box), where a
       // single tick can be starved by a neighbor JVM's GC/compile burst —
       // a wall-clock max over 40 ticks asserts the BOX, not the pipeline.
-      // The median is robust to transient starvation while still failing
-      // on the regression this spec guards (per-tick work growing past
-      // the trigger); the max keeps a generous starvation allowance so a
-      // genuine every-tick blowup still fails loud.
-      assert(medMs < 15000L,
-        s"median tick took ${medMs} ms — the 15 s trigger budget is blown")
+      // The p90 tolerates four starved ticks while still failing when
+      // more than one tick in ten blows the trigger (the per-tick
+      // guarantee a 15 s trigger needs); the max keeps a generous
+      // starvation allowance so a genuine every-tick blowup fails loud.
+      assert(p90Ms < 15000L,
+        s"p90 tick took ${p90Ms} ms — the 15 s trigger budget is blown")
       assert(maxMs < 60000L,
         s"a tick took ${maxMs} ms — even the 4x starvation allowance is blown")
       // the hot stream must actually drive the cascade: first EXPAND at

@@ -382,5 +382,41 @@ class StreamingQualityHeadSpec extends SparkSpec {
       StreamingQualityHead.foldBatch(docs((1L, 100L, 10L)), 1L, path, 100L)
     }
     assert(e.getMessage.contains("pre-consolidation"))
+    // a pre-merge GLOBAL tree (one committed fold over b0 at budget 100,
+    // its meta table (kind, k1, v) without the `grp` column) must fail
+    // loud too — and write nothing for the new batch
+    val old = newPath()
+    Seq(("hist", 100L, 80L), ("hist", 50L, 30L), ("tiers", 100L, 0L),
+        ("cut", 50L, 3L), ("budget", 0L, 100L))
+      .toDF("kind", "k1", "v").coalesce(1).write.parquet(s"$old/meta/batch=0")
+    Seq((1L, 40L, 100L), (2L, 40L, 100L)).toDF("id", "tokens", "score")
+      .write.parquet(s"$old/head/batch=0")
+    Seq((1L, 100L, 40L, true), (2L, 100L, 40L, true), (3L, 50L, 30L, false))
+      .toDF("id", "score", "tokens", "admit").write.parquet(s"$old/arrivals/batch=0")
+    val e2 = intercept[Exception] {
+      StreamingQualityHead.foldBatch(docs(b1: _*), 1L, old, budget = 100L)
+    }
+    assert(e2.getMessage.contains("grp"), e2.getMessage)
+    for (sub <- Seq("head", "arrivals", "meta"))
+      assert(!new java.io.File(s"$old/$sub/batch=1").exists(),
+        s"the refused fold wrote $sub/batch=1")
+  }
+
+  test("the single-group front's sheets keep the global column sets: no grp column leaks") {
+    val path = newPath()
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.simpleString)
+    val headCols = Seq("id" -> "bigint", "score" -> "bigint", "tokens" -> "bigint")
+    // budget 0: the empty head is served from the literal empty frame
+    StreamingQualityHead.foldBatch(docs(b0: _*), 0L, path, budget = 0L)
+    assert(cols(StreamingQualityHead.head(spark, path)) === headCols)
+    StreamingQualityHead.foldBatch(docs(b1: _*), 1L, path, budget = 100L)
+    StreamingQualityHead.foldBatch(docs(b2: _*), 2L, path, budget = 50L)
+    assert(cols(StreamingQualityHead.head(spark, path)) === headCols)
+    assert(StreamingQualityHead.ledger(spark, path).columns.toSeq === Seq(
+      "id", "arrival_batch", "score", "tokens", "admit", "evict_batch", "admitted"))
+    assert(StreamingQualityHead.lifecycle(spark, path).columns.toSeq === Seq(
+      "id", "arrival_batch", "score", "tokens", "admit", "n_evictions",
+      "n_readmissions", "admitted"))
   }
 }
