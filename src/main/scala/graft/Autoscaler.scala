@@ -7,7 +7,7 @@ import graft.decide.{CpuLoadEvaluator, StepScalingAlgorithm}
 import graft.sinks.{BufferingPublisher, MetricPublisher}
 import graft.sources.{JmxJson, MetricsFetcher}
 import graft.streaming.MetricsPipeline
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -26,10 +26,15 @@ import scala.collection.mutable
  *
  * Composition per tick ([[Autoscaler.ControlLoop.tick]]):
  *   1. scrape the fetcher (S1-S4; driver-side control-plane HTTP),
- *   2. parse payloads → per-node CPU (P1/P2), push into the one-minute
- *      ring (A3 retention — the window the reference's MetricStore keeps),
- *   3. evaluate the window through the quorum + cascade
- *      ([[MetricsPipeline.evaluateWindow]] → [[ScalingManager]]),
+ *   2. parse payloads with Spark (P1/P2: `JmxJson.parsePayloads` over each
+ *      fetched frame, one collect each — node CPU, query stats, required
+ *      workers) and push the node CPU into the one-minute ring (A3
+ *      retention — the window the reference's MetricStore keeps, held on
+ *      the driver as the reference holds it),
+ *   3. evaluate the ring on the driver, with no Spark job: the window
+ *      summary ([[graft.decide.MetricSummary.ofSamples]], via
+ *      [[MetricsPipeline.evaluateSamples]]) feeds the quorum + cascade
+ *      ([[ScalingManager]]),
  *   4. resize through [[WorkersView]] (K3: live = EMR wire client),
  *   5. publish gauges (K1/K2: live = CloudWatch Query protocol).
  *
@@ -55,6 +60,10 @@ object Autoscaler {
 
     private val ring = mutable.Queue.empty[Seq[(Timestamp, String, Double)]]
 
+    /** A coordinator frame without its blank payloads (a scrape that saw
+      * nothing); of the rest, the first row the parse keeps is read. */
+    private def nonBlank(payloads: DataFrame): DataFrame = payloads.filter(col("payload") =!= "")
+
     /** One tick: scrape → ring → evaluate → publish. Returns the action
       * the cascade PERFORMED this tick (None while cold/gated/idle). */
     def tick(): Option[MetricsPipeline.Decision] = {
@@ -73,57 +82,45 @@ object Autoscaler {
         .as[(String, Double, Long)].collect().toSeq
       ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
       while (ring.size > windowN) ring.dequeue()
-      val window = ring.toSeq.flatten.toDF("ts", "node", "value")
       // QueryManager gauges + the five 5-minute decayed counters drive
       // the idle gate (reference: scaling/ScalingManager.scala:103-117 —
       // a DRAINING cluster shows running=queued=0 with counters >= 1 and
       // must not idle-shrink); a BLANK payload (fetcher can't see query
-      // stats) must read as "assume active", never as idle
-      val activity = {
-        val payloads = fetcher.fetchQueryStats(spark)
-          .select(col("payload")).as[String].collect().filter(_.nonEmpty)
-        // the gate is the RunningQueries gauge being PRESENT, not the
-        // payload being non-blank: a malformed or attribute-less payload
-        // (degraded scrape) would otherwise zero-fill running/queued and
-        // every counter — reading as idle, which shrinks to min
-        val parsed =
-          if (payloads.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else JmxJson.parsePayloads(
-            payloads.toSeq.toDF("payload"), "payload",
-            Map("running" -> (("RunningQueries", LongType)),
-              "queued" -> (("QueuedQueries", LongType)),
-              "abandoned5m" -> (("AbandonedQueries.FiveMinute.Count", DoubleType)),
-              "canceled5m" -> (("CanceledQueries.FiveMinute.Count", DoubleType)),
-              "completed5m" -> (("CompletedQueries.FiveMinute.Count", DoubleType)),
-              "failed5m" -> (("FailedQueries.FiveMinute.Count", DoubleType)),
-              "submitted5m" -> (("SubmittedQueries.FiveMinute.Count", DoubleType)),
-              "failed1m" -> (("FailedQueries.OneMinute.Count", DoubleType))),
-            keepWhenPresent = Some("RunningQueries"))
-            .select(col("running"), col("queued"), col("abandoned5m"),
-              col("canceled5m"), col("completed5m"), col("failed5m"),
-              col("submitted5m"), col("failed1m")).collect()
-        parsed.headOption match {
+      // stats) must read as "assume active", never as idle. The gate is
+      // the RunningQueries gauge being PRESENT, not the payload being
+      // non-blank: a malformed or attribute-less payload (degraded
+      // scrape) would otherwise zero-fill running/queued and every
+      // counter — reading as idle, which shrinks to min
+      val activity = JmxJson.parsePayloads(nonBlank(fetcher.fetchQueryStats(spark)), "payload",
+          Map("running" -> (("RunningQueries", LongType)),
+            "queued" -> (("QueuedQueries", LongType)),
+            "abandoned5m" -> (("AbandonedQueries.FiveMinute.Count", DoubleType)),
+            "canceled5m" -> (("CanceledQueries.FiveMinute.Count", DoubleType)),
+            "completed5m" -> (("CompletedQueries.FiveMinute.Count", DoubleType)),
+            "failed5m" -> (("FailedQueries.FiveMinute.Count", DoubleType)),
+            "submitted5m" -> (("SubmittedQueries.FiveMinute.Count", DoubleType)),
+            "failed1m" -> (("FailedQueries.OneMinute.Count", DoubleType))),
+          keepWhenPresent = Some("RunningQueries"))
+        .select(col("running"), col("queued"), col("abandoned5m"),
+          col("canceled5m"), col("completed5m"), col("failed5m"),
+          col("submitted5m"), col("failed1m"))
+        .collect().headOption match {
           case None => QueryActivity.AssumeActive
           case Some(r) =>
             QueryActivity(r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2),
               r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
               r.getDouble(7))
         }
-      }
       // ClusterSizeMonitor scaling hint (reference:
       // metrics/TrinoJmxRest.scala:106-109, docs/scaling-hints.md):
-      // required > running expands ahead of the cooldown gate
-      val requiredWorkers = {
-        val payloads = fetcher.fetchRequiredWorkers(spark)
-          .select(col("payload")).as[String].collect().filter(_.nonEmpty)
-        if (payloads.isEmpty) 0
-        else JmxJson.parsePayloads(payloads.toSeq.toDF("payload"), "payload",
-            Map("required" -> (("RequiredWorkers", LongType))))
-          .select(col("required")).as[Long].head().toInt
-      }
+      // required > running expands ahead of the cooldown gate; blank or
+      // gauge-less reads as 0
+      val requiredWorkers = JmxJson.parsePayloads(nonBlank(fetcher.fetchRequiredWorkers(spark)),
+          "payload", Map("required" -> (("RequiredWorkers", LongType))))
+        .select(col("required")).as[Long].collect().headOption.fold(0)(_.toInt)
       idleMarker.foreach(_.touchIfBusy(
         graft.control.ScalingManager.isIdle(activity.stamped(now))))
-      val decision = MetricsPipeline.evaluateWindow(window, manager, windowN,
+      val decision = MetricsPipeline.evaluateSamples(ring.toSeq.flatten, manager, windowN,
         activity = activity, requiredWorkers = requiredWorkers)
       if (publish && nodes.nonEmpty) {
         // node map fanned out as one multi-datum request (K2), then the

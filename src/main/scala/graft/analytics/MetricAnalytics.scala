@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
  * the reference's `MetricStore` (reference: metrics/MetricStore.scala), each
  * usable identically under batch and Structured Streaming (SURVEY.md §1.4).
  *
+ * Callers of the window operators (`isCold`, `oneMinuteAvgExact`,
+ * `latestTickNodeCount`, `quorum`): `Replay` and `Replay.flagship`, over
+ * fixture tables whose samples are not driver-resident. The control loop
+ * does not call them: its window is a driver-held ring (or a collected
+ * micro-batch) of at most a few thousand rows, which
+ * [[graft.decide.MetricSummary.ofSamples]] summarizes without a Spark job.
+ * MetricAnalyticsSpec holds the two equal on seeded random rings.
+ *
  * Input convention: a "samples" frame with columns
  * `(ts: timestamp, node: string, value: double)` — the normalized long-form
  * of the reference's per-tick `Map[node -> cpuLoad]` ring buffer

@@ -2,21 +2,29 @@ package graft.decide
 
 import graft.model.{ResizeAction, ResizeType}
 
+import java.sql.Timestamp
+
 /**
- * The decision layer: evaluator → step-scaling → guarded cascade.
+ * The decision layer: window summary → evaluator → step-scaling → guarded
+ * cascade.
  *
- * These are pure functions over aggregate summaries that the Spark analytics
- * layer ([[graft.analytics.MetricAnalytics]]) produces per micro-batch; the
- * control loop invokes them from `foreachBatch` (SURVEY.md §3.2). Keeping
- * them Spark-free makes the golden-trace tests (SURVEY.md §5.4) exact and
+ * These are pure functions. Both control-loop entry points (the polling
+ * [[graft.Autoscaler.ControlLoop]] and the streaming
+ * [[graft.streaming.MetricsPipeline.attachControlLoop]]) summarize their
+ * driver-resident window with [[MetricSummary.ofSamples]] and hand the
+ * summary to the cascade. `Replay` builds the same summary, and
+ * `Replay.flagship` the same quorum, with the Spark operators of
+ * [[graft.analytics.MetricAnalytics]] over fixture tables. Keeping this
+ * layer Spark-free makes the golden-trace tests (SURVEY.md §5.4) exact and
  * fast, and mirrors the reference's split between pure analytics
  * (metrics/MetricStore.scala) and stateful control
  * (scaling/ScalingManager.scala).
  */
 
-/** A summary of the metric window, as computed by the analytics layer.
-  * `oneMinuteAvg` is the zero-filled last-4-tick per-node mean;
-  * `totalNodes` the last tick's node-list size (the pinned quorum
+/** A summary of the metric window: [[MetricSummary.ofSamples]] on the
+  * control loop's driver-held window, or the `MetricAnalytics` operators
+  * over a table. `oneMinuteAvg` is the zero-filled last-4-tick per-node
+  * mean; `totalNodes` the last tick's node-list size (the pinned quorum
   * denominator, reference: metrics/MetricStore.scala:29-33,51). */
 final case class MetricSummary(
     isCold: Boolean,
@@ -25,6 +33,49 @@ final case class MetricSummary(
 
 object MetricSummary {
   val Cold: MetricSummary = MetricSummary(isCold = true, Map.empty, 0)
+
+  private val NewestFirst: Ordering[Timestamp] = Ordering.fromLessThan(_ after _)
+
+  /** The summary of a window of `(ts, node, value)` samples held on the
+    * driver — the reference's in-heap MetricStore ring
+    * (metrics/MetricStore.scala:8,19-39) — with no Spark job. Exactly the
+    * semantics of `MetricAnalytics.isCold` / `oneMinuteAvgExact` /
+    * `latestTickNodeCount` over the same rows:
+    *  - cold while fewer than `n` distinct timestamps exist, so an
+    *    all-blank scrape, which adds no sample, never reads as 0% CPU;
+    *  - the node universe is the nodes sampled at the newest timestamp;
+    *  - each node's mean runs over the newest `n` distinct timestamps: a
+    *    timestamp without its sample counts as one 0.0, and every sample
+    *    of a duplicated (node, ts) cell counts, as under the left join;
+    *  - `totalNodes` counts the universe's distinct non-null nodes.
+    * Returns None for a window with no samples (nothing to evaluate),
+    * else the summary and the window's newest timestamp. */
+  def ofSamples(samples: Seq[(Timestamp, String, Double)], n: Int): Option[(MetricSummary, Timestamp)] = {
+    require(n > 0, s"window of $n ticks")
+    if (samples.isEmpty) None
+    else {
+      val stamps = samples.map(_._1).distinct
+      val newest = stamps.filter(_ != null).sorted(NewestFirst)
+      val maxTs = newest.headOption.orNull
+      val summary =
+        if (stamps.size < n) Cold
+        else {
+          // a null ts or node matches no cell (a null ts sorts last, as
+          // `ORDER BY ts DESC` puts it), so it reads as a 0.0 sample
+          val ticks = (newest ++ stamps.filter(_ == null)).take(n)
+          val cells = samples.filter(s => s._1 != null && s._2 != null)
+            .groupMap(s => (s._2, s._1))(_._3)
+          val universe = samples.collect { case (ts, node, _) if maxTs != null && ts == maxTs => node }
+            .distinct
+          val avgs = universe.map { node =>
+            val values = ticks.flatMap(ts => cells.getOrElse((node, ts), Seq(0.0)))
+            node -> values.sum / values.size
+          }.toMap
+          MetricSummary(isCold = false, avgs, universe.count(_ != null))
+        }
+      Some((summary, maxTs))
+    }
+  }
 
   /** Quorum: nodes whose 1-min avg >= threshold reach `fraction` of the
     * last tick's node list (reference: metrics/MetricStore.scala:62-71;

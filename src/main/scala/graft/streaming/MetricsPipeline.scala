@@ -96,10 +96,10 @@ object MetricsPipeline {
   /** Decision record emitted by the control loop. */
   final case class Decision(batchId: Long, ts: Timestamp, action: String, capacity: Int)
 
-  /** One window evaluation — the micro-batch body of
-    * [[attachControlLoop]], shared with the polling entry point
-    * ([[graft.Autoscaler]]). The batch IS the one-minute ring window;
-    * the decision uses the reference-exact operators. */
+  /** One window evaluation over a bounded frame of `(ts, node, value)`
+    * samples — the micro-batch body of [[attachControlLoop]]: one collect
+    * of the batch, then [[evaluateSamples]]. A null value reads as 0.0,
+    * as the zero-fill's `coalesce` reads it. */
   def evaluateWindow(
       batch: DataFrame,
       manager: ScalingManager,
@@ -107,21 +107,27 @@ object MetricsPipeline {
       batchId: Long = -1L,
       activity: QueryActivity = QueryActivity.AssumeActive,
       requiredWorkers: Int = 0): Option[Decision] = {
-    import graft.analytics.MetricAnalytics
-    if (batch.isEmpty) None
-    else {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      val cold = MetricAnalytics.isCold(batch, windowN)
-      val summary =
-        if (cold) MetricSummary.Cold
-        else {
-          val avgs = MetricAnalytics.oneMinuteAvgExact(batch, windowN)
-            .as[(String, Double)].collect().toMap
-          val total = MetricAnalytics.latestTickNodeCount(batch).as[Long].head().toInt
-          MetricSummary(isCold = false, avgs, total)
-        }
-      val maxTs = batch.agg(max(col("ts"))).head().getTimestamp(0)
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val samples = batch
+      .select(col("ts"), col("node"), coalesce(col("value").cast("double"), lit(0.0)))
+      .as[(Timestamp, String, Double)].collect().toSeq
+    evaluateSamples(samples, manager, windowN, batchId, activity, requiredWorkers)
+  }
+
+  /** The window step both control-loop entry points share: summarize the
+    * driver-held window with [[MetricSummary.ofSamples]] and feed the
+    * cascade. The polling [[graft.Autoscaler.ControlLoop]] passes its ring
+    * as is; [[evaluateWindow]] passes the collected micro-batch. A window
+    * with no samples is not evaluated. */
+  def evaluateSamples(
+      samples: Seq[(Timestamp, String, Double)],
+      manager: ScalingManager,
+      windowN: Int = MetricsDataPointsOneMin,
+      batchId: Long = -1L,
+      activity: QueryActivity = QueryActivity.AssumeActive,
+      requiredWorkers: Int = 0): Option[Decision] =
+    MetricSummary.ofSamples(samples, windowN).flatMap { case (summary, maxTs) =>
       // Activity gauges default to "assume active"; [[graft.Autoscaler]]
       // passes the real QueryManager gauges AND the five 5-minute decayed
       // counters, so a draining cluster (counters >= 1 with zero
@@ -132,11 +138,10 @@ object MetricsPipeline {
         case ResizeAction(action, capacity) => Decision(batchId, maxTs, action, capacity)
       }
     }
-  }
 
   /** Attach the stateful control loop to a metric-sample stream: per
-    * micro-batch (= one reference "tick"), compute the window summary with
-    * the BATCH operators (micro-batch df is bounded), feed the cascade,
+    * micro-batch (= one reference "tick"), collect the bounded batch,
+    * summarize it on the driver ([[evaluateWindow]]), feed the cascade,
     * log the performed action. Returns the writer (caller starts it with
     * its own checkpoint/output options). */
   def attachControlLoop(

@@ -1,9 +1,12 @@
 package graft
 
 import graft.control.{ScalingManager, SimulatedWorkers}
-import graft.decide.{CpuLoadEvaluator, StepScalingAlgorithm}
+import graft.decide.{CpuLoadEvaluator, MetricSummary, StepScalingAlgorithm}
+import graft.model.{ClusterQueriesMetrics, ResizeAction}
 import graft.sinks.BufferingPublisher
 import graft.sources.MetricsFetcher
+import graft.streaming.MetricsPipeline
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The production entry-point loop ([[Autoscaler.ControlLoop]]) driven
@@ -15,13 +18,15 @@ class AutoscalerSpec extends SparkSpec {
   private class StubFetcher(cpu: () => Double,
                             queries: () => Option[(Long, Long)] = () => None,
                             fiveMinCompleted: () => Double = () => 0.0,
-                            required: () => Option[Long] = () => None)
+                            required: () => Option[Long] = () => None,
+                            blank: () => Boolean = () => false)
     extends MetricsFetcher {
     override val name = "stub"
     override def fetchPayloads(s: SparkSession): DataFrame = {
       import s.implicits._
       Seq("n1", "n2").map(n => (n,
-        s"""{"attributes":[{"name":"ProcessCpuLoad","value":${cpu()}},
+        if (blank()) "" // every node's scrape failed
+        else s"""{"attributes":[{"name":"ProcessCpuLoad","value":${cpu()}},
            |{"name":"AvailableProcessors","value":8}]}""".stripMargin))
         .toDF("node", "payload")
     }
@@ -217,5 +222,86 @@ class AutoscalerSpec extends SparkSpec {
     assert(byName("trino.totalQueuedQueries") === 2.0)
     assert(byName("trino.totalOneMinFailedQueries") === 0.25)
     assert(byName("trino.requiredWorkers") === 3.0)
+  }
+
+  /** The cascade, with every window summary it was handed kept. */
+  private class RecordingManager(workers: SimulatedWorkers, clock: () => Long)
+    extends ScalingManager(workers,
+      new StepScalingAlgorithm(new CpuLoadEvaluator, workers.minCapacity, workers.maxCapacity),
+      clock) {
+    val summaries = scala.collection.mutable.Buffer.empty[MetricSummary]
+    override def evaluate(q: ClusterQueriesMetrics, required: Int,
+        summary: MetricSummary): Option[ResizeAction] = {
+      summaries += summary
+      super.evaluate(q, required, summary)
+    }
+  }
+
+  test("a warm tick evaluates its window without a Spark job") {
+    var now = 6000000000L
+    val workers = new SimulatedWorkers(0, 20, clock = () => now)
+    workers.resize(5); workers.settle()
+    val mgr = new RecordingManager(workers, () => now)
+    val loop = new Autoscaler.ControlLoop(spark,
+      new StubFetcher(() => 0.6, () => Some((2L, 0L)), required = () => Some(3L)),
+      mgr, workers, new BufferingPublisher, "AWS/EMR", publish = true,
+      clock = () => now)
+    (1 to 4).foreach { _ => loop.tick(); workers.settle(); now += 15000L }
+    assert(!mgr.summaries.last.isCold, "four ticks fill the window")
+
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      ListenerDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val tickJobs = jobs("warm-tick")(loop.tick())
+    assert(mgr.summaries.last === MetricSummary(isCold = false,
+      Map("n1" -> 0.6, "n2" -> 0.6), 2))
+    // the whole tick: the stub fetcher's frames are local relations, so
+    // the three payload parses plan to local scans and start no job;
+    // any job here comes from the window step
+    assert(tickJobs === 0, s"a warm tick started $tickJobs Spark jobs")
+  }
+
+  test("all-blank node scrape never reads as 0% CPU: cold stays cold, warm holds its decision") {
+    var now = 7000000000L
+    var blank = false
+    val workers = new SimulatedWorkers(0, 20, clock = () => now)
+    workers.resize(5); workers.settle()
+    val mgr = new RecordingManager(workers, () => now)
+    val pub = new BufferingPublisher
+    val loop = new Autoscaler.ControlLoop(spark,
+      new StubFetcher(() => 0.6, () => Some((2L, 0L)), blank = () => blank),
+      mgr, workers, pub, "AWS/EMR", publish = true, clock = () => now)
+    def tick(blankScrape: Boolean): Option[MetricsPipeline.Decision] = {
+      blank = blankScrape
+      val d = loop.tick(); workers.settle(); now += 15000L; d
+    }
+
+    // a blank first scrape leaves an empty window: nothing to evaluate
+    assert(tick(blankScrape = true).isEmpty && mgr.summaries.isEmpty)
+    assert(pub.records.isEmpty, "a blank scrape publishes no node gauges")
+
+    // cold: one reading, then a blank scrape — still cold
+    tick(blankScrape = false)
+    assert(tick(blankScrape = true).isEmpty)
+    assert(mgr.summaries.map(_.isCold) === Seq(true, true))
+
+    // warm at 0.6 (inside the 0.5-0.7 band: no action). Read as 0%, a
+    // blank scrape would pull each mean to 0.45 and SHRINK 5 -> 2.
+    (1 to 4).foreach(_ => tick(blankScrape = false))
+    val warm = MetricSummary(isCold = false, Map("n1" -> 0.6, "n2" -> 0.6), 2)
+    assert(mgr.summaries.last === warm)
+    assert(tick(blankScrape = true).isEmpty, "a blank scrape must not SHRINK")
+    // the blank holds a ring slot: the window has three readings for four
+    // slots, so the cascade gets the cold summary, never a diluted mean
+    assert(mgr.summaries.last === MetricSummary.Cold)
+    assert(workers.requested === 5)
+    // once the blank leaves the ring, the same universe and decision return
+    val after = (1 to 4).map(_ => tick(blankScrape = false))
+    assert(after.forall(_.isEmpty) && workers.requested === 5)
+    assert(mgr.summaries.last === warm)
   }
 }

@@ -1,7 +1,9 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.decide.MetricSummary
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max}
 
 import java.sql.Timestamp
 
@@ -75,6 +77,61 @@ class MetricAnalyticsSpec extends SparkSpec {
     // MetricStoreTest.scala:30-37
     assert(MetricAnalytics.isCold(samples(Seq.fill(3)(singleTick))))
     assert(!MetricAnalytics.isCold(samples(Seq.fill(4)(singleTick))))
+  }
+
+  test("MetricSummary.ofSamples equals the window operators on seeded random rings") {
+    val n = 4
+    val rnd = new scala.util.Random(20261017L)
+    val pool = (0 until 6).map(i => s"d$i")
+    // values on a 1/1024 grid: every sum is exact in any summation order
+    def reading(): Double = rnd.nextInt(1025) / 1024.0
+    /** A ring of `frames` scrape frames, newest last, as its rows. */
+    def ring(frames: Int, churn: Boolean = false, blankNewest: Boolean = false,
+        dups: Boolean = false, sharedTs: Boolean = false): Seq[(Timestamp, String, Double)] = {
+      val stamps = (0 until frames).map(i => new Timestamp(1700000000000L + i * 15000L))
+      val shared = rnd.nextInt(frames - 1) + 1 // this frame reuses its predecessor's ts
+      val rows = (0 until frames).flatMap { i =>
+        val ts = if (sharedTs && i == shared) stamps(i - 1) else stamps(i)
+        val nodes =
+          if (blankNewest && i == frames - 1) Nil
+          else if (churn) pool.filter(_ => rnd.nextDouble() < 0.6)
+          else pool.take(3)
+        nodes.map(node => (ts, node, reading()))
+      }
+      if (dups) rows ++ Seq.fill(3)(rows(rnd.nextInt(rows.size))).map(r => (r._1, r._2, reading()))
+      else rows
+    }
+    /** The DataFrame path the control loop evaluated before. */
+    def viaOperators(rows: Seq[(Timestamp, String, Double)]): Option[(MetricSummary, Timestamp)] = {
+      val df = rows.toDF("ts", "node", "value")
+      if (df.isEmpty) None
+      else {
+        val summary =
+          if (MetricAnalytics.isCold(df, n)) MetricSummary.Cold
+          else MetricSummary(isCold = false,
+            MetricAnalytics.oneMinuteAvgExact(df, n).as[(String, Double)].collect().toMap,
+            MetricAnalytics.latestTickNodeCount(df).as[Long].head().toInt)
+        Some((summary, df.agg(max(col("ts"))).head().getTimestamp(0)))
+      }
+    }
+    val cases = (1 to 3).flatMap { _ =>
+      Seq(
+        "shorter than n" -> ring(rnd.nextInt(n - 1) + 1, churn = true),
+        "node churn" -> ring(n, churn = true),
+        "all-blank newest frame in a ring" -> ring(n, blankNewest = true),
+        "all-blank newest frame past n" -> ring(n + 2, churn = true, blankNewest = true),
+        "duplicate (node, ts) rows" -> ring(n, dups = true),
+        "two frames sharing a ts, n distinct" -> ring(n + 1, churn = true, sharedTs = true),
+        "two frames sharing a ts, cold" -> ring(n, sharedTs = true),
+        "more than n frames" -> ring(n + 3, churn = true, dups = true))
+    } :+ ("all-blank ring" -> Seq.empty[(Timestamp, String, Double)])
+    val outcomes = cases.map { case (name, rows) =>
+      val got = MetricSummary.ofSamples(rows, n)
+      assert(got === viaOperators(rows), s"$name: $rows")
+      got.map(_._1.isCold)
+    }
+    // the seeded cases reach every outcome: cold, warm and no window
+    assert(outcomes.toSet === Set(Some(true), Some(false), None))
   }
 
   test("quorum: isAvgOneMinGreater cases") {
