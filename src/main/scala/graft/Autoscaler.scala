@@ -8,9 +8,7 @@ import graft.sinks.{BufferingPublisher, MetricPublisher}
 import graft.sources.{JmxJson, MetricsFetcher}
 import graft.streaming.MetricsPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import java.sql.Timestamp
 import scala.collection.mutable
@@ -26,11 +24,13 @@ import scala.collection.mutable
  *
  * Composition per tick ([[Autoscaler.ControlLoop.tick]]):
  *   1. scrape the fetcher (S1-S4; driver-side control-plane HTTP),
- *   2. parse payloads with Spark (P1/P2: `JmxJson.parsePayloads` over each
- *      fetched frame, one collect each — node CPU, query stats, required
- *      workers) and push the node CPU into the one-minute ring (A3
- *      retention — the window the reference's MetricStore keeps, held on
- *      the driver as the reference holds it),
+ *   2. read the payloads on the driver (P1/P2: each fetched frame is
+ *      collected once, raw, and every payload is read by
+ *      [[JmxJson.attributes]] under its fault rule, with no Spark query —
+ *      node CPU, query stats, required workers) and push the node CPU
+ *      into the one-minute ring (A3 retention — the window the
+ *      reference's MetricStore keeps, held on the driver as the reference
+ *      holds it),
  *   3. evaluate the ring on the driver, with no Spark job: the window
  *      summary ([[graft.decide.MetricSummary.ofSamples]], via
  *      [[MetricsPipeline.evaluateSamples]]) feeds the quorum + cascade
@@ -60,26 +60,26 @@ object Autoscaler {
 
     private val ring = mutable.Queue.empty[Seq[(Timestamp, String, Double)]]
 
-    /** A coordinator frame without its blank payloads (a scrape that saw
-      * nothing); of the rest, the first row the parse keeps is read. */
-    private def nonBlank(payloads: DataFrame): DataFrame = payloads.filter(col("payload") =!= "")
+    /** A coordinator frame's payloads, read lazily, without the blank ones
+      * (a scrape that saw nothing). */
+    private def coordinator(frame: DataFrame): Iterator[JmxJson.Attributes] =
+      frame.collect().iterator.map(_.getAs[String]("payload"))
+        .filter(p => p != null && p.nonEmpty).map(JmxJson.attributes)
 
     /** One tick: scrape → ring → evaluate → publish. Returns the action
       * the cascade PERFORMED this tick (None while cold/gated/idle). */
     def tick(): Option[MetricsPipeline.Decision] = {
-      val sp = spark
-      import sp.implicits._
       val now = new Timestamp(clock())
-      // presence gate on the CPU gauge: a failed scrape's blank payload
-      // must DROP OUT of the window, not read as 0% CPU and bias the
-      // quorum toward SHRINK (reference drops empty attribute maps —
+      // presence gate on the CPU gauge: a failed scrape's blank payload,
+      // or a CPU gauge that does not read as a finite number, must DROP
+      // OUT of the window, not read as 0% CPU and bias the quorum toward
+      // SHRINK (reference drops empty attribute maps —
       // TrinoJmxEmr.scala:91 `if (m.isEmpty) None`)
-      val nodes = JmxJson.parsePayloads(fetcher.fetchPayloads(spark), "payload",
-          Map("cpu" -> (("ProcessCpuLoad", DoubleType)),
-            "cores" -> (("AvailableProcessors", LongType))),
-          keepWhenPresent = Some("ProcessCpuLoad"))
-        .select(col("node"), col("cpu"), col("cores"))
-        .as[(String, Double, Long)].collect().toSeq
+      val nodes = fetcher.fetchPayloads(spark).collect().toSeq.flatMap { r =>
+        val a = JmxJson.attributes(r.getAs[String]("payload"))
+        a.double("ProcessCpuLoad").reading.map(cpu =>
+          (r.getAs[String]("node"), cpu, a.long("AvailableProcessors").orZero(0L)))
+      }
       ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
       while (ring.size > windowN) ring.dequeue()
       // QueryManager gauges + the five 5-minute decayed counters drive
@@ -90,34 +90,33 @@ object Autoscaler {
       // the RunningQueries gauge being PRESENT, not the payload being
       // non-blank: a malformed or attribute-less payload (degraded
       // scrape) would otherwise zero-fill running/queued and every
-      // counter — reading as idle, which shrinks to min
-      val activity = JmxJson.parsePayloads(nonBlank(fetcher.fetchQueryStats(spark)), "payload",
-          Map("running" -> (("RunningQueries", LongType)),
-            "queued" -> (("QueuedQueries", LongType)),
-            "abandoned5m" -> (("AbandonedQueries.FiveMinute.Count", DoubleType)),
-            "canceled5m" -> (("CanceledQueries.FiveMinute.Count", DoubleType)),
-            "completed5m" -> (("CompletedQueries.FiveMinute.Count", DoubleType)),
-            "failed5m" -> (("FailedQueries.FiveMinute.Count", DoubleType)),
-            "submitted5m" -> (("SubmittedQueries.FiveMinute.Count", DoubleType)),
-            "failed1m" -> (("FailedQueries.OneMinute.Count", DoubleType))),
-          keepWhenPresent = Some("RunningQueries"))
-        .select(col("running"), col("queued"), col("abandoned5m"),
-          col("canceled5m"), col("completed5m"), col("failed5m"),
-          col("submitted5m"), col("failed1m"))
-        .collect().headOption match {
-          case None => QueryActivity.AssumeActive
-          case Some(r) =>
-            QueryActivity(r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2),
-              r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6),
-              r.getDouble(7))
-        }
+      // counter — reading as idle, which shrinks to min. Of the first
+      // payload the gate keeps, a faulty field (or a count outside Int)
+      // reads as "assume active" too: uncertain data is never idle
+      val activity = coordinator(fetcher.fetchQueryStats(spark))
+        .find(_.isPresent("RunningQueries"))
+        .flatMap { a =>
+          def count(name: String) =
+            a.long(name).zeroFilled(0L).filter(_.isValidInt).map(_.toInt)
+          def decayed(name: String) = a.double(name).zeroFilled(0.0)
+          for {
+            running <- count("RunningQueries")
+            queued <- count("QueuedQueries")
+            abandoned5m <- decayed("AbandonedQueries.FiveMinute.Count")
+            canceled5m <- decayed("CanceledQueries.FiveMinute.Count")
+            completed5m <- decayed("CompletedQueries.FiveMinute.Count")
+            failed5m <- decayed("FailedQueries.FiveMinute.Count")
+            submitted5m <- decayed("SubmittedQueries.FiveMinute.Count")
+            failed1m <- decayed("FailedQueries.OneMinute.Count")
+          } yield QueryActivity(running, queued, abandoned5m, canceled5m,
+            completed5m, failed5m, submitted5m, failed1m)
+        }.getOrElse(QueryActivity.AssumeActive)
       // ClusterSizeMonitor scaling hint (reference:
       // metrics/TrinoJmxRest.scala:106-109, docs/scaling-hints.md):
-      // required > running expands ahead of the cooldown gate; blank or
-      // gauge-less reads as 0
-      val requiredWorkers = JmxJson.parsePayloads(nonBlank(fetcher.fetchRequiredWorkers(spark)),
-          "payload", Map("required" -> (("RequiredWorkers", LongType))))
-        .select(col("required")).as[Long].collect().headOption.fold(0)(_.toInt)
+      // required > running expands ahead of the cooldown gate; blank,
+      // gauge-less or faulty (a count outside Int too) reads as 0
+      val requiredWorkers = coordinator(fetcher.fetchRequiredWorkers(spark)).nextOption()
+        .flatMap(_.long("RequiredWorkers").reading).filter(_.isValidInt).fold(0)(_.toInt)
       idleMarker.foreach(_.touchIfBusy(
         graft.control.ScalingManager.isIdle(activity.stamped(now))))
       val decision = MetricsPipeline.evaluateSamples(ring.toSeq.flatten, manager, windowN,

@@ -93,66 +93,72 @@ object Bench {
     // whole round's bench evidence was lost even though most rows had
     // finished. If the JVM gets SIGTERM'd mid-battery, this hook prints
     // the SAME one-line JSON over the queries that DID complete, marked
-    // "partial":true, so a timeout degrades to a partial battery instead
-    // of nothing. It formats strings only (no Spark calls — Spark's own
-    // shutdown hook is stopping the context concurrently) and never
-    // touches BENCH_LOCAL.json (a partial run must not clobber the
-    // authoritative committed record).
+    // "partial":true and "aborted":"signal", so a timeout degrades to a
+    // partial battery instead of nothing; an exception that escapes the
+    // battery prints the same line with its class in "aborted". It
+    // formats strings only (no Spark calls — Spark's own shutdown hook is
+    // stopping the context concurrently) and never touches
+    // BENCH_LOCAL.json (a partial run must not clobber the authoritative
+    // committed record).
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, Boolean)]()
-    val finishedNormally = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def jsonFor(rs: Seq[(String, Double, Boolean)],
-        adjJson: String, partial: Boolean): String = {
-      val qs = rs.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val failed = rs.collect { case (k, _, false) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val total = rs.collect { case (_, v, true) => v }.sum
-      val p = if (partial) "\"partial\":true," else ""
-      f"""{"metric":"total",$p"value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"adjudications":$adjJson,"sf":"$sfDir"}"""
-    }
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      if (!finishedNormally.get()) {
-        import scala.jdk.CollectionConverters._
-        println(jsonFor(done.asScala.toSeq.sortBy(_._1), "{}", partial = true))
-        System.out.flush()
-      }))
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      settle()
-      val trials = (1 to runs).map(_ => timeOnce(name, fn))
-      val ok = trials.forall(_._2)
-      val m = median(trials.map(_._1))
-      done.add((name, if (ok) m else -m, ok))
-      (name, if (ok) m else -m, ok)
-    }
-    // SELF-ADJUDICATING battery: every mover vs the prior committed
-    // battery (>1.5x AND >0.8s — the adjudication bar three rounds of
-    // judge/builder time were spent re-deriving by hand for x76-class
-    // battery-context noise) re-runs AT BATTERY END after a settle, and
-    // the JSON records both numbers. An end-of-battery median-of-3
-    // approximates the isolated re-bench: the noise mode is GC debt +
-    // storage pressure from heavy NEIGHBORS mid-battery, which is gone
-    // once the battery has drained and settle() has run. A mover whose
-    // isolated median stays high is a real regression; one that returns
-    // to the prior band was context noise — the artifact now carries
-    // its own verdict. Full-battery runs only (iteration slices have no
-    // authoritative prior).
-    val adjudications =
-      if (only.nonEmpty) Seq.empty
-      else results.flatMap { case (name, v, ok) =>
-        priorQueries.get(name) match {
-          case Some(p) if ok && p > 0 && v > p * 1.5 && v - p > 0.8 =>
-            settle()
-            val fn = selected(name)
-            val iso = median((1 to 3).map(_ => timeOnce(name, fn)._1))
-            Seq((name, v, p, iso))
-          case _ => Seq.empty
-        }
+
+    /** The battery and the adjudications, with each query recorded in
+      * `done` as it completes. */
+    def battery(): (Seq[(String, Double, Boolean)], String) = {
+      val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+        settle()
+        val trials = (1 to runs).map(_ => timeOnce(name, fn))
+        val ok = trials.forall(_._2)
+        val m = median(trials.map(_._1))
+        done.add((name, if (ok) m else -m, ok))
+        (name, if (ok) m else -m, ok)
       }
-    val adjJson = adjudications.map { case (k, v, p, iso) =>
-      "\"" + k + "\":" + f"""{"battery":$v%.3f,"prior":$p%.3f,"isolated_median":$iso%.3f}"""
-    }.mkString("{", ",", "}")
-    finishedNormally.set(true)
-    val json = jsonFor(results, adjJson, partial = false)
+      // SELF-ADJUDICATING battery: every mover vs the prior committed
+      // battery (>1.5x AND >0.8s — the adjudication bar three rounds
+      // re-derived by hand for x76-class battery-context noise) re-runs
+      // AT BATTERY END after a settle, and
+      // the JSON records both numbers. An end-of-battery median-of-3
+      // approximates the isolated re-bench: the noise mode is GC debt +
+      // storage pressure from heavy NEIGHBORS mid-battery, which is gone
+      // once the battery has drained and settle() has run. A mover whose
+      // isolated median stays high is a real regression; one that returns
+      // to the prior band was context noise — the artifact now carries
+      // its own verdict. Full-battery runs only (iteration slices have no
+      // authoritative prior).
+      val adjudications =
+        if (only.nonEmpty) Seq.empty
+        else results.flatMap { case (name, v, ok) =>
+          priorQueries.get(name) match {
+            case Some(p) if ok && p > 0 && v > p * 1.5 && v - p > 0.8 =>
+              settle()
+              val fn = selected(name)
+              val iso = median((1 to 3).map(_ => timeOnce(name, fn)._1))
+              Seq((name, v, p, iso))
+            case _ => Seq.empty
+          }
+        }
+      val adjJson = adjudications.map { case (k, v, p, iso) =>
+        "\"" + k + "\":" + f"""{"battery":$v%.3f,"prior":$p%.3f,"isolated_median":$iso%.3f}"""
+      }.mkString("{", ",", "}")
+      (results, adjJson)
+    }
+    // The main path, an exception escaping the battery and the hook race
+    // on this one flag, so exactly one JSON line is printed.
+    val printed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def printPartial(aborted: String): Unit =
+      if (printed.compareAndSet(false, true)) {
+        import scala.jdk.CollectionConverters._
+        println(jsonFor(done.asScala.toSeq.sortBy(_._1), "{}", sfDir, Some(aborted)))
+        System.out.flush()
+      }
+    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => printPartial("signal")))
+    val (results, adjJson) =
+      try battery()
+      catch { case e: Throwable => printPartial(e.getClass.getName); throw e }
+    val json = jsonFor(results, adjJson, sfDir)
+    // the shutdown hook won the race (a signal after the battery): it has
+    // printed the partial line and the JVM is going down
+    if (!printed.compareAndSet(false, true)) return
     // The driver's record keeps only the last 2000 chars of output — too
     // short for the full per-query map at 110+ queries. Persist the full
     // JSON as a repo artifact so per-query baselines never depend on
@@ -166,5 +172,19 @@ object Bench {
       catch { case _: Throwable => () }
     println(json)
     spark.stop()
+  }
+
+  /** The one JSON line. `aborted` marks a partial line over the queries
+    * that completed: `"signal"` when the JVM shuts down mid-battery, or
+    * the class of the exception that escaped the battery. */
+  def jsonFor(rs: Seq[(String, Double, Boolean)], adjJson: String, sfDir: String,
+      aborted: Option[String] = None): String = {
+    val qs = rs.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val failed = rs.collect { case (k, _, false) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = rs.collect { case (_, v, true) => v }.sum
+    val p = aborted.fold("")(a => "\"partial\":true,\"aborted\":\"" + a + "\",")
+    f"""{"metric":"total",$p"value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"adjudications":$adjJson,"sf":"$sfDir"}"""
   }
 }

@@ -160,8 +160,9 @@ class RestFetcher(
   }
 
   /** One mbean payload per node; a node that fails to answer contributes
-    * an EMPTY payload (downstream JmxJson parses it to the empty
-    * attribute map — reference behavior at TrinoJmxRest.scala:130). */
+    * an EMPTY payload ([[JmxJson.attributes]] reads it as no attributes
+    * and the tick's CPU gate drops the node — reference behavior at
+    * TrinoJmxRest.scala:130). */
   override def fetchPayloads(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val hosts = nodeHosts()
@@ -195,8 +196,7 @@ class RestFetcher(
     * REST (the coordinator's JMX registry knows nothing about worker
     * CPUs — reference: TrinoJmxEmr.getClusterNodesCpuStats scrapes each
     * worker's OperatingSystem mbean over HTTP). Failed nodes degrade to
-    * empty payloads; the caller gates them out with
-    * `keepWhenPresent("ProcessCpuLoad")` (the reference's
+    * empty payloads; the tick's `ProcessCpuLoad` gate drops them (the reference's
     * `if (m.isEmpty) None` drop at TrinoJmxEmr.scala:91). */
   private[sources] def fetchWorkerPayloads(spark: SparkSession): DataFrame = {
     import spark.implicits._

@@ -15,12 +15,13 @@ import scala.util.control.NonFatal
  * the JMX registry is reachable without HTTP.
  *
  * Emits the SAME (node, payload) attribute-list JSON frames as
- * [[RestFetcher]], so everything downstream ([[JmxJson.parsePayloads]],
- * the typed zero-fill projection, the decision cascade) is transport-
- * agnostic — one parse path for both strategies.
+ * [[RestFetcher]], so everything downstream (the driver-side
+ * [[JmxJson.attributes]] reader the tick uses, its typed gauge reads, the
+ * decision cascade) is transport-agnostic — one reader for both
+ * strategies.
  *
  * Failure posture mirrors the REST fetcher: any connect/read failure
- * degrades that payload to empty (→ empty attribute map → zero-fill /
+ * degrades that payload to empty (→ no attributes → zero-fill /
  * assume-active downstream), never an aborted tick; the connector is
  * re-established on the next scrape after a failure.
  *
@@ -123,8 +124,8 @@ class JmxRmiFetcher(
 
   /** Per-WORKER OS scrape over REST (see class doc): /v1/autoscale
     * active-worker discovery + per-node mbean GET. A failed worker
-    * degrades to an empty payload the caller drops with
-    * `keepWhenPresent("ProcessCpuLoad")`; an unreachable coordinator
+    * degrades to an empty payload the tick drops with its
+    * `ProcessCpuLoad` gate; an unreachable coordinator
     * degrades to the EMPTY FRAME (no samples this tick), never to a
     * fabricated 0%-CPU coordinator row. */
   override def fetchPayloads(spark: SparkSession): DataFrame =

@@ -19,15 +19,18 @@ class AutoscalerSpec extends SparkSpec {
                             queries: () => Option[(Long, Long)] = () => None,
                             fiveMinCompleted: () => Double = () => 0.0,
                             required: () => Option[Long] = () => None,
-                            blank: () => Boolean = () => false)
+                            blank: () => Boolean = () => false,
+                            extraNodes: Seq[(String, String)] = Nil,
+                            rawStats: () => Option[String] = () => None,
+                            rawRequired: () => Option[String] = () => None)
     extends MetricsFetcher {
     override val name = "stub"
     override def fetchPayloads(s: SparkSession): DataFrame = {
       import s.implicits._
-      Seq("n1", "n2").map(n => (n,
+      (Seq("n1", "n2").map(n => (n,
         if (blank()) "" // every node's scrape failed
         else s"""{"attributes":[{"name":"ProcessCpuLoad","value":${cpu()}},
-           |{"name":"AvailableProcessors","value":8}]}""".stripMargin))
+           |{"name":"AvailableProcessors","value":8}]}""".stripMargin)) ++ extraNodes)
         .toDF("node", "payload")
     }
     override def fetchNodeList(s: SparkSession): DataFrame = {
@@ -36,7 +39,8 @@ class AutoscalerSpec extends SparkSpec {
     }
     override def fetchQueryStats(s: SparkSession): DataFrame = {
       import s.implicits._
-      queries() match {
+      if (rawStats().isDefined) Seq(rawStats().get).toDF("payload")
+      else queries() match {
         case None => Seq("").toDF("payload")
         case Some((-1L, _)) => // degraded scrape: non-blank, no gauges
           Seq("""{"attributes":[]}""").toDF("payload")
@@ -50,7 +54,8 @@ class AutoscalerSpec extends SparkSpec {
     }
     override def fetchRequiredWorkers(s: SparkSession): DataFrame = {
       import s.implicits._
-      required() match {
+      if (rawRequired().isDefined) Seq(rawRequired().get).toDF("payload")
+      else required() match {
         case None => Seq("").toDF("payload")
         case Some(r) => Seq(
           s"""{"attributes":[{"name":"RequiredWorkers","value":$r}]}""")
@@ -303,5 +308,75 @@ class AutoscalerSpec extends SparkSpec {
     val after = (1 to 4).map(_ => tick(blankScrape = false))
     assert(after.forall(_.isEmpty) && workers.requested === 5)
     assert(mgr.summaries.last === warm)
+  }
+
+  test("a warm tick drops nodes whose CPU gauge faults and counts only clean nodes") {
+    var now = 8000000000L
+    val workers = new SimulatedWorkers(0, 20, clock = () => now)
+    workers.resize(5); workers.settle()
+    val mgr = new RecordingManager(workers, () => now)
+    val pub = new BufferingPublisher
+    // each of these threw inside the tick's old Spark parse under ANSI
+    // casts or map-key dedup, failing the whole tick
+    val faulty = Seq(
+      "na" -> """{"attributes":[{"name":"ProcessCpuLoad","value":"n/a"},
+                |{"name":"AvailableProcessors","value":8}]}""".stripMargin,
+      // a duplicate name reads as its last occurrence, here a null value
+      "dup" -> """{"attributes":[{"name":"ProcessCpuLoad","value":0.9},
+                 |{"name":"AvailableProcessors","value":8},
+                 |{"name":"ProcessCpuLoad","value":null}]}""".stripMargin,
+      "nan" -> """{"attributes":[{"name":"ProcessCpuLoad","value":"NaN"},
+                 |{"name":"AvailableProcessors","value":8}]}""".stripMargin)
+    val loop = new Autoscaler.ControlLoop(spark,
+      new StubFetcher(() => 0.6, () => Some((2L, 0L)), extraNodes = faulty),
+      mgr, workers, pub, "AWS/EMR", publish = true, clock = () => now)
+    (1 to 4).foreach { _ => loop.tick(); workers.settle(); now += 15000L }
+    pub.records.clear()
+    assert(loop.tick().isEmpty)
+    assert(mgr.summaries.last === MetricSummary(isCold = false,
+      Map("n1" -> 0.6, "n2" -> 0.6), 2))
+    val byName = pub.records.map(r => r._2 -> r._3).toMap
+    assert(byName("trino.totalWorkers") === 2.0)
+    assert(byName("trino.totalAvailableCores") === 16.0)
+    assert(byName.keySet.filter(_.startsWith("trino.cpu.")) === Set("trino.cpu.n1", "trino.cpu.n2"))
+  }
+
+  test("a faulty query-stats gauge never reads as idle; a faulty hint reads as 0") {
+    var now = 9000000000L
+    var stats: Option[String] = Some(
+      """{"attributes":[{"name":"RunningQueries","value":"n/a"},
+        |{"name":"QueuedQueries","value":0}]}""".stripMargin)
+    var hint: Option[String] = Some("""{"attributes":[{"name":"RequiredWorkers","value":"n/a"}]}""")
+    val workers = new SimulatedWorkers(2, 20, clock = () => now)
+    workers.resize(8); workers.settle()
+    val mgr = new ScalingManager(workers,
+      new StepScalingAlgorithm(new CpuLoadEvaluator, 2, 20), () => now)
+    val pub = new BufferingPublisher
+    val loop = new Autoscaler.ControlLoop(spark,
+      new StubFetcher(() => 0.6, rawStats = () => stats, rawRequired = () => hint),
+      mgr, workers, pub, "AWS/EMR", publish = true, clock = () => now)
+
+    // RunningQueries "n/a" with nothing else queued: assume active
+    assert(loop.tick().isEmpty, "a faulty RunningQueries must not idle-shrink")
+    assert(workers.requested === 8)
+    val byName = pub.records.map(r => r._2 -> r._3).toMap
+    assert(byName("trino.requiredWorkers") === 0.0, "a faulty hint reads as 0")
+    assert(byName("trino.totalRunningQueries") === 1.0)
+    now += 15000L
+
+    // a faulty decayed counter beside clean zero counts: still active
+    stats = Some("""{"attributes":[{"name":"RunningQueries","value":0},
+        |{"name":"QueuedQueries","value":0},
+        |{"name":"CompletedQueries.FiveMinute.Count","value":true}]}""".stripMargin)
+    assert(loop.tick().isEmpty, "a faulty counter must not idle-shrink")
+    assert(workers.requested === 8)
+    now += 15000L
+
+    // the same payload without the fault is idle: shrink to min
+    stats = Some("""{"attributes":[{"name":"RunningQueries","value":0},
+        |{"name":"QueuedQueries","value":0}]}""".stripMargin)
+    hint = Some("""{"attributes":[{"name":"RequiredWorkers","value":"1"}]}""")
+    val d = loop.tick()
+    assert(d.exists(a => a.action == "SHRINK" && a.capacity == 2), s"expected idle shrink, got $d")
   }
 }
