@@ -760,7 +760,7 @@ object StreamingQueries {
         .orderBy("doc_id")
     }),
 
-    // streaming concat-and-chunk packing (StreamingChunkPack): each
+    // streaming concat-and-chunk packing (StreamingPack.Chunk): each
     // arriving doc extends its shard's token tape in arrival order and
     // the tape is cut at fixed PackSeqLen strides — x155's closed-form
     // chunk layout folded per micro-batch; the ONLY cross-batch state
@@ -785,23 +785,23 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x157_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x157_ck_").toString
       val input = MemoryStream[(Long, Long, Long)]
-      val q = graft.streaming.StreamingChunkPack.attach(
+      val q = graft.streaming.StreamingPack.attach(
         input.toDF().toDF("doc_id", "shard", "n_tokens"), path,
-        seqLen = ExtensionQueries.PackSeqLen)
+        graft.streaming.StreamingPack.Chunk(ExtensionQueries.PackSeqLen))
         .option("checkpointLocation", ckpt)
         .start()
       try (0L until 4L).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b))
         q.processAllAvailable()
       } finally q.stop()
-      graft.streaming.StreamingChunkPack.fragments(s, path)
+      graft.streaming.StreamingPack.fragments(s, path)
         .select(col("id").as("doc_id"), col("shard"), col("pos"),
           col("seq"), col("frag_start"), col("frag_len"), col("doc_off"),
           col("arrival_batch"))
         .orderBy("doc_id", "seq")
     }),
 
-    // streaming WHOLE-DOC greedy packing (StreamingGreedyPack): docs
+    // streaming WHOLE-DOC greedy packing (StreamingPack.Greedy): docs
     // packed whole into per-shard bins in arrival order — a closed bin
     // is immutable and trainable immediately; the only cross-batch
     // state is each shard's ONE open bin. Completes the packing
@@ -822,16 +822,16 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x166_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x166_ck_").toString
       val input = MemoryStream[(Long, Long, Long)]
-      val q = graft.streaming.StreamingGreedyPack.attach(
+      val q = graft.streaming.StreamingPack.attach(
         input.toDF().toDF("doc_id", "shard", "n_tokens"), path,
-        budget = ExtensionQueries.PackSeqLen)
+        graft.streaming.StreamingPack.Greedy(ExtensionQueries.PackSeqLen))
         .option("checkpointLocation", ckpt)
         .start()
       try (0L until 4L).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b))
         q.processAllAvailable()
       } finally q.stop()
-      graft.streaming.StreamingGreedyPack.assignments(s, path)
+      graft.streaming.StreamingPack.assignments(s, path)
         .select(col("id").as("doc_id"), col("shard"), col("pos"),
           col("bin"), col("n_tokens"), col("arrival_batch"))
         .orderBy("doc_id")
@@ -857,16 +857,16 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x161_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x161_ck_").toString
       val input = MemoryStream[(Long, Long, Long)]
-      val q = graft.streaming.StreamingChunkPack.attach(
+      val q = graft.streaming.StreamingPack.attach(
         input.toDF().toDF("doc_id", "shard", "n_tokens"), path,
-        seqLen = ExtensionQueries.PackSeqLen)
+        graft.streaming.StreamingPack.Chunk(ExtensionQueries.PackSeqLen))
         .option("checkpointLocation", ckpt)
         .start()
       try (0L until 4L).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b))
         q.processAllAvailable()
       } finally q.stop()
-      graft.streaming.StreamingChunkPack.seqSheet(s, path,
+      graft.streaming.StreamingPack.seqSheet(s, path,
           ExtensionQueries.PackSeqLen)
         .orderBy("shard", "seq")
     }),
@@ -965,13 +965,14 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x170_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x170_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachGreedy(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
         quota = ExtensionQueries.CuratedQuota,
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
         bloomBits = ExtensionQueries.BloomBits,
-        bloomK = ExtensionQueries.BloomK)
+        bloomK = ExtensionQueries.BloomK,
+        wholeDoc = true)
         .option("checkpointLocation", ckpt)
         .start()
       try (0L until 4L).foreach { b =>
@@ -1162,10 +1163,10 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x173_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x173_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachScheduled(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
-        quotaSchedule = Seq(
+        quota = graft.streaming.QuotaSchedule.retargets(
           (0L, ExtensionQueries.CuratedQuota),
           (2L, ExtensionQueries.CuratedRaisedQuota)),
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
@@ -1364,10 +1365,10 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x179_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x179_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachScheduled(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
-        quotaSchedule = Seq(
+        quota = graft.streaming.QuotaSchedule.retargets(
           (0L, ExtensionQueries.CuratedQuota),
           (2L, ExtensionQueries.CuratedRaisedQuota)),
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
@@ -1412,16 +1413,16 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x180_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x180_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachPerSource(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
-        quotaSchedule = Seq(
+        quota = graft.streaming.QuotaSchedule(Seq(
           (0L, Map("src1" -> ExtensionQueries.PerSrcQ0Src1,
             "src4" -> ExtensionQueries.PerSrcQ0Src4),
             ExtensionQueries.CuratedQuota),
           (2L, Map("src1" -> ExtensionQueries.PerSrcQ1Src1,
             "src4" -> ExtensionQueries.PerSrcQ1Src4),
-            ExtensionQueries.CuratedRaisedQuota)),
+            ExtensionQueries.CuratedRaisedQuota))),
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
         bloomBits = ExtensionQueries.BloomBits,
         bloomK = ExtensionQueries.BloomK)
@@ -1460,10 +1461,10 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x181_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x181_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachScheduled(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
-        quotaSchedule = Seq(
+        quota = graft.streaming.QuotaSchedule.retargets(
           (0L, ExtensionQueries.CuratedQuota),
           (2L, ExtensionQueries.CuratedRaisedQuota)),
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
@@ -1512,16 +1513,16 @@ object StreamingQueries {
       val path = java.nio.file.Files.createTempDirectory("graft_x182_").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_x182_ck_").toString
       val input = MemoryStream[(Long, String, String)]
-      val q = graft.streaming.StreamingCuratedPack.attachPerSource(
+      val q = graft.streaming.StreamingCuratedPack.attach(
         input.toDF().toDF("doc_id", "source", "text"), path, words,
         minScoreK = ExtensionQueries.CuratedMinScoreK,
-        quotaSchedule = Seq(
+        quota = graft.streaming.QuotaSchedule(Seq(
           (0L, Map("src1" -> ExtensionQueries.PerSrcQ0Src1,
             "src4" -> ExtensionQueries.PerSrcQ0Src4),
             ExtensionQueries.CuratedQuota),
           (2L, Map("src1" -> ExtensionQueries.PerSrcQ1Src1,
             "src4" -> ExtensionQueries.PerSrcQ1Src4),
-            ExtensionQueries.CuratedRaisedQuota)),
+            ExtensionQueries.CuratedRaisedQuota))),
         seqLen = ExtensionQueries.PackSeqLen, numShards = 4,
         bloomBits = ExtensionQueries.BloomBits,
         bloomK = ExtensionQueries.BloomK,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * cluster-honest failure semantics.
  *
  * A composed fold ([[StreamingCuratedPack]], [[StreamingBudgetAdmission]],
- * [[StreamingChunkPack]]) issues ~15 actions per micro-batch; without a
+ * [[StreamingPack]]) issues ~15 actions per micro-batch; without a
  * cut, every action's plan re-carries the bloom-probe + quality +
  * fingerprint + MinHash + SRP expression trees through Catalyst analysis
  * (persist caches DATA, not ANALYSIS — measured ~50 s/fold of pure

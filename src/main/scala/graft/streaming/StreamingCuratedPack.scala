@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import scala.language.implicitConversions
+
 /**
  * The composed stream face of the end-to-end pipeline (x158's deployment
  * shape): raw document micro-batches → benchmark DECONTAMINATION →
@@ -29,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  *
  * Composition mechanics: each stage reuses its standalone fold verbatim
  * — [[StreamingBudgetAdmission.foldBatch]] then
- * [[StreamingChunkPack.foldBatch]] — against sub-trees of one state
+ * [[StreamingPack.foldBatch]] — against sub-trees of one state
  * path, so every exactly-once/replay/compaction property is inherited,
  * not re-proven. The decontamination screen is the stateless
  * [[StreamingDecontaminate]] Bloom-literal probe (one codegen'd loop
@@ -41,8 +43,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  * State layout under `path/`:
  *  - `admission/` — a full [[StreamingBudgetAdmission]] tree (verdicts
  *    ledger + totals);
- *  - `pack/`      — a full [[StreamingChunkPack]] (or, under
- *    [[attachGreedy]], [[StreamingGreedyPack]]) tree;
+ *  - `pack/`      — a full [[StreamingPack]] tree: the concat-chunk
+ *    layout, or under `wholeDoc` the whole-doc greedy bins;
  *  - `fp/batch=<id>` — (opt-in `dedupExact`) the exact-dedup content
  *    fingerprint ledger: one (fp, keeper id) row per fingerprint ever
  *    kept, first-arrival-wins; a [[LedgerState]] table bucketed by
@@ -144,18 +146,19 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  * [[graft.ext.Packing.packChunked]] pass over the admitted set in the
  * same order.
  *
- * Quota retargets — EPOCH'D TAPES ([[attachScheduled]], x173): a fixed
- * quota cannot simply be raised mid-stream, because the packer's
- * train-behind-the-frontier contract depends on admission verdicts
- * never revoking and fragments never moving — a raise would re-admit
- * quota-rejected docs whose rejection the tape's consumers already
- * observed, and a cut would revoke admissions already packed. The
- * deployment-honest shape is a quota SCHEDULE `(startFold, quota)*`:
- * at each retarget fold the current pack epoch CLOSES (its fragments
- * are immutable forever — the trainer keeps reading them) and the next
- * epoch opens under `admission/epoch=<e>/` + `pack/epoch=<e>/` with
- * FRESH per-source accounting (running totals restart at zero under
- * the new quota; positions/sequences restart — a new tape). The
+ * Quota retargets — EPOCH'D TAPES (a multi-entry [[QuotaSchedule]],
+ * x173): a fixed quota cannot simply be raised mid-stream, because the
+ * packer's train-behind-the-frontier contract depends on admission
+ * verdicts never revoking and fragments never moving — a raise would
+ * re-admit quota-rejected docs whose rejection the tape's consumers
+ * already observed, and a cut would revoke admissions already packed.
+ * The deployment-honest shape is a quota SCHEDULE `(startFold, quota)*`
+ * (per-source quotas ride the same entries, x180): at each retarget
+ * fold the current pack epoch CLOSES (its fragments are immutable
+ * forever — the trainer keeps reading them) and the next epoch opens
+ * under `admission/epoch=<e>/` + `pack/epoch=<e>/` with FRESH
+ * per-source accounting (running totals restart at zero under the new
+ * quota; positions/sequences restart — a new tape). The
  * monotone-tape argument then holds PER EPOCH, which is exactly the
  * granularity a trainer consumes ("this pack run used quota Q from
  * fold a to fold b"). Docs are never re-charged across epochs: a doc
@@ -176,307 +179,43 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  */
 object StreamingCuratedPack {
 
-  /** Attach the composed sink over a raw stream carrying (idCol,
-    * groupCol, textCol). `bloomWords` is the benchmark's dense Bloom
-    * bitset ([[StreamingDecontaminate.bloomWords]], built batch-side
-    * once); `minScoreK` the 1e-6-grid quality floor; `quota` the
-    * per-source token budget; `numShards` the packer's tape count. */
+  // the same for every caller: the retained generations of the
+  // sub-folds' totals and of the funnel, and the salt of the shard hash
+  // (the oracles hash `doc_id || ':ps'`)
+  private val RetainGenerations = 3
+  private val ShardSalt = ":ps"
+
+  /** Attach the composed sink over a raw stream carrying (`doc_id`,
+    * `source`, `text`, and `embedding` under `dedupSem`); every argument
+    * is [[foldBatch]]'s. */
   def attach(
       docs: DataFrame,
       path: String,
       bloomWords: Array[Long],
       minScoreK: Long,
-      quota: Long,
+      quota: QuotaSchedule,
       seqLen: Long,
       numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
       bloomBits: Long = 1L << 16,
       bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
       bucketK: Int = 64,
       compactEvery: Int = 16,
+      wholeDoc: Boolean = false,
       dedupExact: Boolean = false,
       dedupNear: Boolean = false,
       dedupSem: Boolean = false,
       semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
       semPlanes: Int = graft.ext.Similarity.SemPlanes,
       semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
       retireSchedule: Map[String, Long] = Map.empty): DataStreamWriter[Row] =
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, path, bloomWords, minScoreK, quota, seqLen,
-          numShards, idCol, groupCol, textCol, ngram, bloomBits, bloomK,
-          shardSalt, retainGenerations, bucketK, compactEvery,
-          dedupExact = dedupExact, dedupNear = dedupNear,
-          dedupSem = dedupSem, semThreshold = semThreshold,
-          semPlanes = semPlanes, semMaxBucket = semMaxBucket, vecCol = vecCol,
-          retireSchedule = retireSchedule)
+          numShards, bloomBits, bloomK, bucketK, compactEvery, wholeDoc,
+          dedupExact, dedupNear, dedupSem, semThreshold, semPlanes,
+          semMaxBucket, retireSchedule)
       }
-
-  /** [[attach]] with the WHOLE-DOC greedy packer
-    * ([[StreamingGreedyPack]], bins of ≤ `seqLen` tokens) instead of
-    * the concat-chunk layout — the padded-loader face of the composed
-    * pipeline. Completes the composed matrix the standalone stream
-    * faces span (split×stream x157 / whole×stream x166 → composed
-    * split x167 / composed whole here). Read with [[assignments]]. */
-  def attachGreedy(
-      docs: DataFrame,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quota: Long,
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, path, bloomWords, minScoreK, quota, seqLen,
-          numShards, idCol, groupCol, textCol, ngram, bloomBits, bloomK,
-          shardSalt, retainGenerations, bucketK, compactEvery,
-          wholeDoc = true, dedupExact = dedupExact, dedupNear = dedupNear,
-          dedupSem = dedupSem, semThreshold = semThreshold,
-          semPlanes = semPlanes, semMaxBucket = semMaxBucket, vecCol = vecCol,
-          retireSchedule = retireSchedule)
-      }
-
-  /** [[attach]] with a quota SCHEDULE — `(startFold, quota)` entries,
-    * first at fold 0, strictly increasing: each retarget closes the
-    * current pack epoch and opens the next with fresh accounting (the
-    * epoch'd-tape contract in the class doc). Read the per-epoch tapes
-    * with [[fragmentsEpoched]] — or, under `wholeDoc = true` (x181:
-    * epoch'd tapes × the greedy padded-loader packer, completing the
-    * epoch × packer matrix), with [[assignmentsEpoched]]. */
-  def attachScheduled(
-      docs: DataFrame,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quotaSchedule: Seq[(Long, Long)],
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      wholeDoc: Boolean = false,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatchScheduled(batch, batchId, path, bloomWords, minScoreK,
-          quotaSchedule, seqLen, numShards, idCol, groupCol, textCol, ngram,
-          bloomBits, bloomK, shardSalt, retainGenerations, bucketK,
-          compactEvery, wholeDoc = wholeDoc,
-          dedupExact = dedupExact, dedupNear = dedupNear,
-          dedupSem = dedupSem, semThreshold = semThreshold,
-          semPlanes = semPlanes, semMaxBucket = semMaxBucket, vecCol = vecCol,
-          retireSchedule = retireSchedule)
-      }
-
-  /** [[attachScheduled]] with PER-SOURCE budget schedules (x180): each
-    * entry is `(startFold, Map[source, quota], defaultQuota)` — the
-    * group head's per-group budget semantics on the composed admission.
-    * A per-source retarget closes/opens epochs exactly as the scalar
-    * schedule does. */
-  def attachPerSource(
-      docs: DataFrame,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quotaSchedule: Seq[(Long, Map[String, Long], Long)],
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      wholeDoc: Boolean = false,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatchPerSource(batch, batchId, path, bloomWords, minScoreK,
-          quotaSchedule, seqLen, numShards, idCol, groupCol, textCol, ngram,
-          bloomBits, bloomK, shardSalt, retainGenerations, bucketK,
-          compactEvery, wholeDoc = wholeDoc,
-          dedupExact = dedupExact, dedupNear = dedupNear,
-          dedupSem = dedupSem, semThreshold = semThreshold,
-          semPlanes = semPlanes, semMaxBucket = semMaxBucket, vecCol = vecCol,
-          retireSchedule = retireSchedule)
-      }
-
-  /** One composed fold — public so replay (foreachBatch re-delivering
-    * after any prefix of the three stages' writes committed) is
-    * directly spec-testable. `wholeDoc` selects the packer: the
-    * concat-chunk tape (default) or the whole-doc greedy bins. */
-  def foldBatch(
-      batch: DataFrame,
-      batchId: Long,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quota: Long,
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      wholeDoc: Boolean = false,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): Unit =
-    foldBatchScheduled(batch, batchId, path, bloomWords, minScoreK,
-      Seq((0L, quota)), seqLen, numShards, idCol, groupCol, textCol, ngram,
-      bloomBits, bloomK, shardSalt, retainGenerations, bucketK, compactEvery,
-      wholeDoc, dedupExact, dedupNear, dedupSem, semThreshold, semPlanes,
-      semMaxBucket, vecCol, retireSchedule)
-
-  /** [[foldBatch]] under a quota schedule: the fold resolves its epoch
-    * index and quota from `quotaSchedule` (a pure function of batchId —
-    * replay-deterministic), runs the admission and pack stages against
-    * the epoch's own sub-trees, and anti-joins prior epochs' verdict
-    * ids so a retarget never re-charges or re-packs content an earlier
-    * epoch already verdicted. Single-entry schedules use the flat
-    * legacy layout (`admission/`, `pack/`) unchanged. */
-  def foldBatchScheduled(
-      batch: DataFrame,
-      batchId: Long,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quotaSchedule: Seq[(Long, Long)],
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      wholeDoc: Boolean = false,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): Unit =
-    foldImpl(batch, batchId, path, bloomWords, minScoreK,
-      quotaSchedule.map { case (f, q) => (f, Map.empty[String, Long], q) },
-      seqLen, numShards, idCol, groupCol, textCol, ngram, bloomBits, bloomK,
-      shardSalt, retainGenerations, bucketK, compactEvery, wholeDoc,
-      dedupExact, dedupNear, dedupSem, semThreshold, semPlanes,
-      semMaxBucket, vecCol, retireSchedule)
-
-  /** [[foldBatchScheduled]] with PER-SOURCE budgets (x180): each
-    * schedule entry carries a `Map[source, quota]` — a source named in
-    * the epoch's map is admitted against its OWN quota, every other
-    * source against the entry's `default`. A retarget of ANY source's
-    * budget is a schedule entry like the scalar case: the pack epoch
-    * closes, accounting restarts — per-source budgets ride the same
-    * epoch'd-tape contract (x173), they do not weaken it. The budget
-    * resolution is a pure function of (batchId, source), so replay is
-    * deterministic and the admission stays monotone per epoch. */
-  def foldBatchPerSource(
-      batch: DataFrame,
-      batchId: Long,
-      path: String,
-      bloomWords: Array[Long],
-      minScoreK: Long,
-      quotaSchedule: Seq[(Long, Map[String, Long], Long)],
-      seqLen: Long,
-      numShards: Int,
-      idCol: String = "doc_id",
-      groupCol: String = "source",
-      textCol: String = "text",
-      ngram: Int = 13,
-      bloomBits: Long = 1L << 16,
-      bloomK: Int = 4,
-      shardSalt: String = ":ps",
-      retainGenerations: Int = 3,
-      bucketK: Int = 64,
-      compactEvery: Int = 16,
-      wholeDoc: Boolean = false,
-      dedupExact: Boolean = false,
-      dedupNear: Boolean = false,
-      dedupSem: Boolean = false,
-      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
-      semPlanes: Int = graft.ext.Similarity.SemPlanes,
-      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
-      vecCol: String = "embedding",
-      retireSchedule: Map[String, Long] = Map.empty): Unit =
-    foldImpl(batch, batchId, path, bloomWords, minScoreK, quotaSchedule,
-      seqLen, numShards, idCol, groupCol, textCol, ngram, bloomBits, bloomK,
-      shardSalt, retainGenerations, bucketK, compactEvery, wholeDoc,
-      dedupExact, dedupNear, dedupSem, semThreshold, semPlanes,
-      semMaxBucket, vecCol, retireSchedule)
 
   /** Once-per-JVM warning guard for [[checkSemThreshold]]. */
   private val warnedSemMeta =
@@ -521,46 +260,62 @@ object StreamingCuratedPack {
     }
   }
 
-  private def foldImpl(
+  /** One composed fold — public so replay (foreachBatch re-delivering
+    * after any subset of the stages' writes committed) is directly
+    * spec-testable.
+    *  - `bloomWords` is the benchmark's dense Bloom bitset
+    *    ([[StreamingDecontaminate.bloomWords]], built batch-side once;
+    *    `bloomBits`/`bloomK` its shape), `minScoreK` the 1e-6-grid
+    *    quality floor.
+    *  - `quota` is the per-source token budget: a plain `Long` for one
+    *    quota throughout, or a [[QuotaSchedule]]. The fold resolves its
+    *    epoch and budgets from the schedule (a pure function of batchId
+    *    — replay-deterministic), runs the admission and pack stages
+    *    against the epoch's own sub-trees, and anti-joins prior epochs'
+    *    verdict ids so a retarget never re-charges or re-packs content
+    *    an earlier epoch already verdicted. A source named in the
+    *    epoch's map is admitted against its OWN quota (x180), every
+    *    other source against the entry's default; a retarget of any
+    *    source's budget closes the epoch like a scalar one. Single-entry
+    *    schedules use the flat layout (`admission/`, `pack/`).
+    *  - `seqLen` and `numShards` (the tape count) shape the packer;
+    *    `wholeDoc` selects it: the concat-chunk tape (default) or the
+    *    whole-doc greedy bins of at most `seqLen` tokens (x170, x181;
+    *    read with [[assignments]]).
+    *  - `dedupExact`/`dedupNear`/`dedupSem` switch on the exact-content,
+    *    MinHash band and semantic gates (the semantic gate reads the
+    *    `embedding` column); `retireSchedule` maps a source to the fold
+    *    it retires at. */
+  def foldBatch(
       batch: DataFrame,
       batchId: Long,
       path: String,
       bloomWords: Array[Long],
       minScoreK: Long,
-      quotaSchedule: Seq[(Long, Map[String, Long], Long)],
+      quota: QuotaSchedule,
       seqLen: Long,
       numShards: Int,
-      idCol: String,
-      groupCol: String,
-      textCol: String,
-      ngram: Int,
-      bloomBits: Long,
-      bloomK: Int,
-      shardSalt: String,
-      retainGenerations: Int,
-      bucketK: Int,
-      compactEvery: Int,
-      wholeDoc: Boolean,
-      dedupExact: Boolean,
-      dedupNear: Boolean,
-      dedupSem: Boolean,
-      semThreshold: Double,
-      semPlanes: Int,
-      semMaxBucket: Int,
-      vecCol: String,
-      retireSchedule: Map[String, Long]): Unit = {
+      bloomBits: Long = 1L << 16,
+      bloomK: Int = 4,
+      bucketK: Int = 64,
+      compactEvery: Int = 16,
+      wholeDoc: Boolean = false,
+      dedupExact: Boolean = false,
+      dedupNear: Boolean = false,
+      dedupSem: Boolean = false,
+      semThreshold: Double = graft.ext.Similarity.SemThresholdDefault,
+      semPlanes: Int = graft.ext.Similarity.SemPlanes,
+      semMaxBucket: Int = graft.ext.Similarity.SemMaxBucket,
+      retireSchedule: Map[String, Long] = Map.empty): Unit = {
     require(numShards > 0, "numShards must be positive")
     require(minScoreK >= 0, "minScoreK must be non-negative")
     require(semPlanes >= 1 && semPlanes <= 62,
       "semPlanes must fit a non-negative long signature")
-    require(quotaSchedule.nonEmpty && quotaSchedule.head._1 == 0L,
-      "quotaSchedule must start at fold 0")
-    require(quotaSchedule.map(_._1) == quotaSchedule.map(_._1).sorted.distinct,
-      "quotaSchedule start folds must be strictly increasing")
-    val epochIdx = quotaSchedule.lastIndexWhere(_._1 <= batchId)
-    val budgets = quotaSchedule(epochIdx)._2
-    val quota = quotaSchedule(epochIdx)._3
-    val epoched = quotaSchedule.size > 1
+    val layout =
+      if (wholeDoc) StreamingPack.Greedy(seqLen) else StreamingPack.Chunk(seqLen)
+    val epochIdx = quota.entries.lastIndexWhere(_._1 <= batchId)
+    val (_, budgets, defaultQuota) = quota.entries(epochIdx)
+    val epoched = quota.entries.size > 1
     if (!batch.isEmpty) {
       val spark = batch.sparkSession
       val admPath =
@@ -573,7 +328,7 @@ object StreamingCuratedPack {
       if (epoched && StreamState.exists(spark, s"$path/admission/verdicts"))
         throw new IllegalStateException(
           s"$path/admission holds a flat (single-quota) layout but the " +
-            "supplied quotaSchedule has retargets: drain and re-plan the " +
+            "supplied quota schedule has retargets: drain and re-plan the " +
             "stream into a fresh state path, or keep a single-entry schedule")
       if (!epoched && StreamState.exists(spark, s"$path/admission/epoch=0"))
         throw new IllegalStateException(
@@ -586,10 +341,10 @@ object StreamingCuratedPack {
       // With the semantic gate on, the row's vector rides in the
       // representative struct (arrays of atomics are orderable, so the
       // min stays total and deterministic).
-      val repFields = Seq(col(groupCol).cast("string").as("grp"),
-        col(textCol).cast("string").as("txt")) ++
-        (if (dedupSem) Seq(col(vecCol).as("vec")) else Nil)
-      val uniqCols = Seq(col(idCol).as("id"), col("_rep.grp").as("source"),
+      val repFields = Seq(col("source").cast("string").as("grp"),
+        col("text").cast("string").as("txt")) ++
+        (if (dedupSem) Seq(col("embedding").as("vec")) else Nil)
+      val uniqCols = Seq(col("doc_id").as("id"), col("_rep.grp").as("source"),
         col("_rep.txt").as("text")) ++
         (if (dedupSem) Seq(col("_rep.vec").as("vec")) else Nil)
       // cuts(...) on every deep stage output below: the composed fold
@@ -628,13 +383,13 @@ object StreamingCuratedPack {
       val async = new FoldAsync(spark, "curated-pack")
       var mainOk = false
       try {
-      val uniq = cuts.track(batch.groupBy(col(idCol))
+      val uniq = cuts.track(batch.groupBy(col("doc_id"))
         .agg(min(struct(repFields: _*)).as("_rep"))
         .select(uniqCols: _*))
       // stage 1: the Bloom screen (stateless literal probe; zero false
       // negatives — no benchmark n-gram run slips through).
       val clean = cuts(StreamingDecontaminate.withBloomHits(
-          uniq, bloomWords, ngram, bloomBits, bloomK, "text")
+          uniq, bloomWords, bits = bloomBits, k = bloomK)
         .filter(col("n_bloom_hits") === 0L))
       // stage 2: quality score + token count, score floor (plus, when
       // stage 2.5 is on, the exact-dedup content fingerprint — the x05
@@ -890,8 +645,8 @@ object StreamingCuratedPack {
       // sources named in the epoch's budget map admit against their own
       // quota, the rest against the epoch default
       StreamingBudgetAdmission.foldBatchBudgets(deliverable, batchId,
-        admPath, budgets, quota, "id", "source", "n_tokens",
-        retainGenerations, bucketK, compactEvery)
+        admPath, budgets, defaultQuota, "id", "source", "n_tokens",
+        RetainGenerations, bucketK, compactEvery)
       // stage 4: pack THIS fold's committed admission slice — the
       // admission fold truncates-and-rewrites its batch dir from a
       // self-excluding state view, so the slice is replay-deterministic;
@@ -906,7 +661,7 @@ object StreamingCuratedPack {
         val admitted = newVerdicts.filter(col("admitted"))
           .select(col("id"),
             pmod(graft.functions.HashExpressions.rolling_hash(
-              concat(col("id").cast("string"), lit(shardSalt))),
+              concat(col("id").cast("string"), lit(ShardSalt))),
               lit(numShards.toLong)).as("shard"),
             col("tokens").as("n_tokens"))
         // the pack sub-fold and the funnel aggregation below both
@@ -914,14 +669,8 @@ object StreamingCuratedPack {
         // sub-trees — no ordering between them, so the pack fold runs
         // concurrently while the main thread computes the funnel
         async("pack fold") {
-          if (wholeDoc)
-            StreamingGreedyPack.foldBatch(admitted, batchId, packPath,
-              seqLen, "id", "shard", "n_tokens",
-              retainGenerations, bucketK, compactEvery)
-          else
-            StreamingChunkPack.foldBatch(admitted, batchId, packPath,
-              seqLen, "id", "shard", "n_tokens",
-              retainGenerations, bucketK, compactEvery)
+          StreamingPack.foldBatch(admitted, batchId, packPath, layout, "id",
+            RetainGenerations, bucketK, compactEvery)
         }
       }
       // the cumulative funnel: prior generation + this batch's deltas
@@ -1001,7 +750,7 @@ object StreamingCuratedPack {
             sum(col("n_quota_rejected")).as("n_quota_rejected"),
             sum(col("tokens_admitted")).as("tokens_admitted"))
       funnel.write.mode("overwrite").parquet(s"$path/funnel/batch=$batchId")
-      StreamState.pruneGenerations(spark, s"$path/funnel", retainGenerations)
+      StreamState.pruneGenerations(spark, s"$path/funnel", RetainGenerations)
       mainOk = true
       // await-then-release in `finally`: every async write must land
       // before the fold returns (the stream's commit covers them) and
@@ -1022,17 +771,17 @@ object StreamingCuratedPack {
     * [[graft.ext.Packing.packChunked]] pass over the composed chain's
     * admitted set in arrival order. */
   def fragments(spark: SparkSession, path: String): DataFrame =
-    StreamingChunkPack.fragments(spark, s"$path/pack")
+    StreamingPack.fragments(spark, s"$path/pack")
 
   /** The per-sequence trainer sheet over the composed output. */
   def seqSheet(spark: SparkSession, path: String, seqLen: Long): DataFrame =
-    StreamingChunkPack.seqSheet(spark, s"$path/pack", seqLen)
+    StreamingPack.seqSheet(spark, s"$path/pack", seqLen)
 
-  /** The accumulated whole-doc bin assignments of an [[attachGreedy]]
-    * pipeline — one [[graft.ext.Packing.packGreedyOrdered]] pass over
-    * the composed chain's admitted set in arrival order. */
+  /** The accumulated whole-doc bin assignments of a `wholeDoc` pipeline
+    * — one [[graft.ext.Packing.packGreedyOrdered]] pass over the
+    * composed chain's admitted set in arrival order. */
   def assignments(spark: SparkSession, path: String): DataFrame =
-    StreamingGreedyPack.assignments(spark, s"$path/pack")
+    StreamingPack.assignments(spark, s"$path/pack")
 
   /** The accumulated admission verdicts (post-decontamination,
     * post-quality-floor docs only — earlier stages drop without a
@@ -1040,7 +789,8 @@ object StreamingCuratedPack {
   def verdicts(spark: SparkSession, path: String): DataFrame =
     StreamingBudgetAdmission.verdicts(spark, s"$path/admission")
 
-  private def listEpochs(spark: SparkSession, dir: String): Seq[Long] = {
+  /** The epochs opened so far under `dir`, in order. */
+  private def epochs(spark: SparkSession, dir: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val f = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!f.exists(p)) Seq.empty
@@ -1049,48 +799,37 @@ object StreamingCuratedPack {
       .sorted
   }
 
-  /** The pack epochs a scheduled pipeline has opened so far. */
-  def epochs(spark: SparkSession, path: String): Seq[Long] =
-    listEpochs(spark, s"$path/pack")
+  /** `read` of every epoch's sub-tree of `sub` (`pack` or `admission`),
+    * tagged with its epoch index. */
+  private def perEpoch(spark: SparkSession, path: String, sub: String)(
+      read: String => DataFrame): DataFrame =
+    epochs(spark, s"$path/$sub").map { e =>
+      read(s"$path/$sub/epoch=$e").withColumn("epoch", lit(e))
+    }.reduceOption(_.unionByName(_)).getOrElse(
+      throw new IllegalStateException(
+        s"no epoch'd $sub state under $path — a multi-entry quota " +
+          s"schedule writes $sub/epoch=<e>; single-quota pipelines read " +
+          "the flat readers"))
 
   /** Every epoch's accumulated fragments, tagged with its epoch index —
     * each epoch is one immutable tape packed under its own quota; a
-    * closed epoch's rows never change again ([[attachScheduled]]). */
-  def fragmentsEpoched(spark: SparkSession, path: String): DataFrame = {
-    val es = epochs(spark, path)
-    es.map { e =>
-      StreamingChunkPack.fragments(spark, s"$path/pack/epoch=$e")
-        .withColumn("epoch", lit(e))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      throw new IllegalStateException(
-        s"no epoch'd pack state under $path — attachScheduled streams " +
-          "write pack/epoch=<e>; flat pipelines read fragments()"))
-  }
+    * closed epoch's rows never change again (the epoch'd-tape contract
+    * in the class doc). */
+  def fragmentsEpoched(spark: SparkSession, path: String): DataFrame =
+    perEpoch(spark, path, "pack")(StreamingPack.fragments(spark, _))
 
   /** Every epoch's accumulated whole-doc bin assignments, tagged with
     * the epoch index — the [[assignments]] face of the epoch'd-tape
     * contract (x181): each epoch is its own greedy bin sequence (bins
     * and positions restart at the retarget), and a closed epoch's
     * assignments never change again. */
-  def assignmentsEpoched(spark: SparkSession, path: String): DataFrame = {
-    val es = epochs(spark, path)
-    es.map { e =>
-      StreamingGreedyPack.assignments(spark, s"$path/pack/epoch=$e")
-        .withColumn("epoch", lit(e))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      throw new IllegalStateException(
-        s"no epoch'd pack state under $path — attachScheduled(wholeDoc) " +
-          "streams write pack/epoch=<e>; flat pipelines read assignments()"))
-  }
+  def assignmentsEpoched(spark: SparkSession, path: String): DataFrame =
+    perEpoch(spark, path, "pack")(StreamingPack.assignments(spark, _))
 
   /** Every epoch's admission verdicts, tagged with the epoch index. */
   def verdictsEpoched(spark: SparkSession, path: String): DataFrame =
-    listEpochs(spark, s"$path/admission").map { e =>
-      StreamingBudgetAdmission.verdicts(spark, s"$path/admission/epoch=$e")
-        .withColumn("epoch", lit(e))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      throw new IllegalStateException(
-        s"no epoch'd admission state under $path"))
+    perEpoch(spark, path, "admission")(
+      StreamingBudgetAdmission.verdicts(spark, _))
 
   /** The cumulative per-source funnel after the latest fold. Fails with
     * a descriptive error — not an opaque NPE — when the stream attached
@@ -1104,4 +843,30 @@ object StreamingCuratedPack {
       .map(mx => spark.read.parquet(s"$path/funnel/batch=$mx"))
       .getOrElse(throw new IllegalStateException(
         s"no funnel state under $path — no composed fold has committed yet"))
+}
+
+/** The composed fold's token-quota schedule: entries `(startFold,
+  * per-source quotas, default quota)`, the first at fold 0, start folds
+  * strictly increasing. An entry governs the folds from its start to
+  * the next entry's; a source named in its map is admitted against its
+  * own quota, every other source against the default. A schedule of
+  * more than one entry makes the pipeline epoch'd (the epoch'd-tape
+  * contract on [[StreamingCuratedPack]]). */
+final case class QuotaSchedule(entries: Seq[(Long, Map[String, Long], Long)]) {
+  require(entries.nonEmpty && entries.head._1 == 0L,
+    "quota schedule must start at fold 0")
+  require(entries.map(_._1) == entries.map(_._1).sorted.distinct,
+    "quota schedule start folds must be strictly increasing")
+}
+
+object QuotaSchedule {
+  /** One quota for every source at every fold: a plain `Long` passes
+    * wherever a schedule is expected. */
+  implicit def constant(quota: Long): QuotaSchedule =
+    QuotaSchedule(Seq((0L, Map.empty[String, Long], quota)))
+
+  /** Scalar retargets: `(startFold, quota)` entries, no per-source
+    * quotas. */
+  def retargets(entries: (Long, Long)*): QuotaSchedule =
+    QuotaSchedule(entries.map { case (f, q) => (f, Map.empty[String, Long], q) })
 }

@@ -5,13 +5,15 @@ import graft.ext.Packing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** StreamingChunkPack: folds over arrival batches must equal one batch
-  * packChunked pass in arrival order, under replay, crash windows,
-  * re-arrivals, tape gaps, and state retention. */
+/** StreamingPack, both layouts: folds over arrival batches must equal
+  * one batch packChunked / packGreedyOrdered pass in arrival order, under
+  * replay, crash windows, re-arrivals, tape gaps, and state retention. */
 class StreamingChunkPackSpec extends SparkSpec {
   import spark.implicits._
 
   private val L = 64L
+  private val chunk = StreamingPack.Chunk(L)
+  private val greedy = StreamingPack.Greedy(L)
 
   private def mk(rows: Seq[(Long, Long, Long)]): DataFrame =
     rows.toDF("doc_id", "shard", "n_tokens")
@@ -34,7 +36,7 @@ class StreamingChunkPackSpec extends SparkSpec {
   }
 
   private def streamed(path: String): Seq[Seq[Any]] =
-    StreamingChunkPack.fragments(spark, path)
+    StreamingPack.fragments(spark, path)
       .select(col("id").as("doc_id"), col("shard"), col("pos"), col("seq"),
         col("frag_start"), col("frag_len"), col("doc_off"))
       .orderBy("doc_id", "seq").collect().toSeq.map(_.toSeq)
@@ -47,7 +49,7 @@ class StreamingChunkPackSpec extends SparkSpec {
       (61L to 90L).map(i => (i, i % 3, (rnd.nextInt(150) + 1).toLong)))
     val path = java.nio.file.Files.createTempDirectory("graft_scp_fb_").toString
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingChunkPack.foldBatch(mk(b), i.toLong, path, L)
+      StreamingPack.foldBatch(mk(b), i.toLong, path, chunk)
     }
     val got = streamed(path)
     assert(got === reference(batches))
@@ -59,13 +61,13 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b1 = (1L to 20L).map(i => (i, i % 2, 10L + i % 5))
     val b2 = (21L to 40L).map(i => (i, i % 2, 10L + i % 5))
     val path = java.nio.file.Files.createTempDirectory("graft_scp_rp_").toString
-    StreamingChunkPack.foldBatch(mk(b1), 0L, path, L)
-    StreamingChunkPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b1), 0L, path, chunk)
+    StreamingPack.foldBatch(mk(b2), 1L, path, chunk)
     val fragsOnce = streamed(path)
     val totalsOnce = spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq
     // retry after both writes committed: the re-arrival guard no-ops
-    StreamingChunkPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b2), 1L, path, chunk)
     assert(streamed(path) === fragsOnce)
     assert(spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq === totalsOnce)
@@ -74,7 +76,7 @@ class StreamingChunkPackSpec extends SparkSpec {
     // the tape twice
     val fs = new java.io.File(s"$path/totals/batch=1")
     fs.listFiles().foreach(_.delete()); fs.delete()
-    StreamingChunkPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b2), 1L, path, chunk)
     assert(streamed(path) === fragsOnce)
     assert(spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq === totalsOnce)
@@ -85,8 +87,8 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b1 = Seq((1L, 0L, 50L), (2L, 0L, 50L))
     val b2 = Seq((2L, 0L, 50L), (3L, 0L, 50L)) // 2 re-arrives
     val path = java.nio.file.Files.createTempDirectory("graft_scp_ra_").toString
-    StreamingChunkPack.foldBatch(mk(b1), 0L, path, L)
-    StreamingChunkPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b1), 0L, path, chunk)
+    StreamingPack.foldBatch(mk(b2), 1L, path, chunk)
     val got = streamed(path)
     assert(got.count(_.head == 2L) === got.filter(_.head == 2L).map(_(3)).distinct.size)
     assert(got === reference(Seq(b1, Seq((3L, 0L, 50L)))))
@@ -98,7 +100,7 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b3 = Seq((4L, 0L, 40L))              // shard 0 resumes at offset 40
     val path = java.nio.file.Files.createTempDirectory("graft_scp_gap_").toString
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-      StreamingChunkPack.foldBatch(mk(b), i.toLong, path, L)
+      StreamingPack.foldBatch(mk(b), i.toLong, path, chunk)
     }
     // doc 4 continues shard 0's tape: [40, 80) spans the 64 boundary
     val frag4 = streamed(path).filter(_.head == 4L)
@@ -110,9 +112,9 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b1 = Seq((1L, 0L, 64L), (2L, 0L, 40L), (3L, 1L, 64L)) // shard1 tape = exactly one seq
     val b2 = Seq((4L, 0L, 30L))
     val path = java.nio.file.Files.createTempDirectory("graft_scp_sheet_").toString
-    StreamingChunkPack.foldBatch(mk(b1), 0L, path, L)
-    StreamingChunkPack.foldBatch(mk(b2), 1L, path, L)
-    val sheet = StreamingChunkPack.seqSheet(spark, path, L)
+    StreamingPack.foldBatch(mk(b1), 0L, path, chunk)
+    StreamingPack.foldBatch(mk(b2), 1L, path, chunk)
+    val sheet = StreamingPack.seqSheet(spark, path, L)
       .select("shard", "seq", "n_frags", "n_doc_starts", "filled", "is_final")
       .as[(Long, Long, Long, Long, Long, Boolean)].collect()
       .map(r => (r._1, r._2) -> ((r._3, r._4, r._5, r._6))).toMap
@@ -125,7 +127,7 @@ class StreamingChunkPackSpec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // StreamingGreedyPack (whole-doc bins; state = one open bin per shard)
+  // the Greedy layout (whole-doc bins; state = one open bin per shard)
   // ------------------------------------------------------------------
 
   private def greedyReference(batches: Seq[Seq[(Long, Long, Long)]]): Seq[Seq[Any]] = {
@@ -144,7 +146,7 @@ class StreamingChunkPackSpec extends SparkSpec {
   }
 
   private def greedyStreamed(path: String): Seq[Seq[Any]] =
-    StreamingGreedyPack.assignments(spark, path)
+    StreamingPack.assignments(spark, path)
       .select(col("id").as("doc_id"), col("shard"), col("pos"), col("bin"),
         col("n_tokens"))
       .orderBy("doc_id").collect().toSeq.map(_.toSeq)
@@ -157,7 +159,7 @@ class StreamingChunkPackSpec extends SparkSpec {
       (61L to 90L).map(i => (i, i % 3, (rnd.nextInt(80) + 1).toLong)))
     val path = java.nio.file.Files.createTempDirectory("graft_sgp_fb_").toString
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingGreedyPack.foldBatch(mk(b), i.toLong, path, L)
+      StreamingPack.foldBatch(mk(b), i.toLong, path, greedy)
     }
     assert(greedyStreamed(path) === greedyReference(batches))
   }
@@ -168,7 +170,7 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b3 = Seq((3L, 0L, 20L), (4L, 0L, 10L)) // 3 overflows (50+20>64) → bin 1; 4 joins bin 1
     val path = java.nio.file.Files.createTempDirectory("graft_sgp_carry_").toString
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-      StreamingGreedyPack.foldBatch(mk(b), i.toLong, path, L)
+      StreamingPack.foldBatch(mk(b), i.toLong, path, greedy)
     }
     val got = greedyStreamed(path).map(r => r.head -> (r(2), r(3))).toMap
     assert(got(1L) === ((1L, 0L)))
@@ -182,22 +184,55 @@ class StreamingChunkPackSpec extends SparkSpec {
     val b1 = (1L to 20L).map(i => (i, i % 2, 10L + i % 5))
     val b2 = (21L to 40L).map(i => (i, i % 2, 10L + i % 5))
     val path = java.nio.file.Files.createTempDirectory("graft_sgp_rp_").toString
-    StreamingGreedyPack.foldBatch(mk(b1), 0L, path, L)
-    StreamingGreedyPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b1), 0L, path, greedy)
+    StreamingPack.foldBatch(mk(b2), 1L, path, greedy)
     val binsOnce = greedyStreamed(path)
     val totalsOnce = spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq
-    StreamingGreedyPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b2), 1L, path, greedy)
     assert(greedyStreamed(path) === binsOnce)
     assert(spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq === totalsOnce)
     val fs = new java.io.File(s"$path/totals/batch=1")
     fs.listFiles().foreach(_.delete()); fs.delete()
-    StreamingGreedyPack.foldBatch(mk(b2), 1L, path, L)
+    StreamingPack.foldBatch(mk(b2), 1L, path, greedy)
     assert(greedyStreamed(path) === binsOnce)
     assert(spark.read.parquet(s"$path/totals")
       .orderBy("batch", "shard").collect().toSeq === totalsOnce)
     assert(binsOnce === greedyReference(Seq(b1, b2)))
+  }
+
+  // FoldAsync overlaps a fold's ledger and totals writes, so a crash can
+  // leave ANY subset of batch N's two dirs on disk, not only a prefix:
+  // re-folding N must converge to the uncrashed state from each
+  Seq(("chunk", chunk, "frags"), ("greedy", greedy, "bins")).foreach {
+    case (name, layout, ledger) =>
+      test(s"$name: a crash leaving any subset of {ledger, totals} of batch N on disk replays to the uncrashed state") {
+        val b0 = (1L to 12L).map(i => (i, i % 2, 9L + i % 7))
+        // shard 1 idle in batch 1 (its totals carry), shard 2 new
+        val b1 = (13L to 24L).map(i => (i, i % 2 * 2, 9L + i % 7))
+        val path = java.nio.file.Files.createTempDirectory(s"graft_sp_sub_$name").toString
+        StreamingPack.foldBatch(mk(b0), 0L, path, layout)
+        StreamingPack.foldBatch(mk(b1), 1L, path, layout)
+        def state = {
+          val rows = LedgerState.view(spark, s"$path/$ledger", exclude = -1L)
+          (rows.orderBy(rows.columns.map(col): _*).collect().toSeq,
+            spark.read.parquet(s"$path/totals").orderBy("batch", "shard")
+              .collect().toSeq)
+        }
+        def rm(f: java.io.File): Unit = {
+          if (f.isDirectory) f.listFiles().foreach(rm)
+          f.delete(); ()
+        }
+        val once = state
+        for (ledgerOnDisk <- Seq(true, false); totalsOnDisk <- Seq(true, false)) {
+          if (!ledgerOnDisk) rm(new java.io.File(s"$path/$ledger/batch=1"))
+          if (!totalsOnDisk) rm(new java.io.File(s"$path/totals/batch=1"))
+          StreamingPack.foldBatch(mk(b1), 1L, path, layout)
+          assert(state === once,
+            s"ledger on disk: $ledgerOnDisk, totals on disk: $totalsOnDisk")
+        }
+      }
   }
 
   test("retention prunes totals generations; the fragment ledger keeps history and later folds stay exact") {
@@ -205,7 +240,7 @@ class StreamingChunkPackSpec extends SparkSpec {
       (b * 10 + 1 to b * 10 + 10).map(i => (i, i % 2, 7L)))
     val path = java.nio.file.Files.createTempDirectory("graft_scp_ret_").toString
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingChunkPack.foldBatch(mk(b), i.toLong, path, L, retainGenerations = 2)
+      StreamingPack.foldBatch(mk(b), i.toLong, path, chunk, retainGenerations = 2)
     }
     val gens = StreamState.generations(spark, s"$path/totals")
     assert(gens.size <= 2 && gens.contains(5L),

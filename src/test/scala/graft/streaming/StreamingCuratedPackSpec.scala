@@ -454,9 +454,9 @@ class StreamingCuratedPackSpec extends SparkSpec {
     val flat = java.nio.file.Files.createTempDirectory("graft_scp7a_").toString
     val ep = java.nio.file.Files.createTempDirectory("graft_scp7b_").toString
     val Raised = Quota * 10
-    val sched = Seq((0L, Quota), (2L, Raised))
+    val sched = QuotaSchedule.retargets((0L, Quota), (2L, Raised))
     def foldSched(path: String, ids: Seq[Long], b: Long): Unit =
-      StreamingCuratedPack.foldBatchScheduled(docsDf(ids), b, path, words,
+      StreamingCuratedPack.foldBatch(docsDf(ids), b, path, words,
         MinScoreK, sched, SeqLen, Shards)
     // the no-raise run: folds 0-1 under the base quota (flat layout)
     fold(flat, 1L to 20L, 0L); fold(flat, 21L to 40L, 1L)
@@ -501,16 +501,16 @@ class StreamingCuratedPackSpec extends SparkSpec {
     // epoch 0: src0 pinned LOW (bites immediately), src1 pinned HIGH
     // (never bites here), src2 on the default; fold-2 retarget re-pins
     // src0 high — its epoch-1 accounting restarts under the new budget
-    val sched = Seq(
+    val sched = QuotaSchedule(Seq(
       (0L, Map("src0" -> 30L, "src1" -> 100000L), Quota),
-      (2L, Map("src0" -> 100000L), Quota))
+      (2L, Map("src0" -> 100000L), Quota)))
     def foldPS(ids: Seq[Long], b: Long): Unit =
-      StreamingCuratedPack.foldBatchPerSource(docsDf(ids), b, path, words,
+      StreamingCuratedPack.foldBatch(docsDf(ids), b, path, words,
         MinScoreK, sched, SeqLen, Shards)
     val batches = Seq(1L to 20L, 21L to 40L, 41L to 60L, 61L to 80L)
     batches.zipWithIndex.foreach { case (ids, b) => foldPS(ids, b.toLong) }
     def budget(epoch: Long, src: String): Long = {
-      val (_, m, d) = sched(epoch.toInt)
+      val (_, m, d) = sched.entries(epoch.toInt)
       m.getOrElse(src, d)
     }
     val v = StreamingCuratedPack.verdictsEpoched(spark, path)
@@ -546,12 +546,12 @@ class StreamingCuratedPackSpec extends SparkSpec {
   test("epoch'd whole-doc tapes: pre-raise greedy bins equal the flat wholeDoc run; the closed epoch is immutable; epoch 1 restarts bins and positions") {
     val flat = java.nio.file.Files.createTempDirectory("graft_scpA_").toString
     val ep = java.nio.file.Files.createTempDirectory("graft_scpB_").toString
-    val sched = Seq((0L, Quota), (2L, Quota * 10))
+    val sched = QuotaSchedule.retargets((0L, Quota), (2L, Quota * 10))
     def foldFlat(ids: Seq[Long], b: Long): Unit =
       StreamingCuratedPack.foldBatch(docsDf(ids), b, flat, words,
         MinScoreK, Quota, SeqLen, Shards, wholeDoc = true)
     def foldEp(ids: Seq[Long], b: Long): Unit =
-      StreamingCuratedPack.foldBatchScheduled(docsDf(ids), b, ep, words,
+      StreamingCuratedPack.foldBatch(docsDf(ids), b, ep, words,
         MinScoreK, sched, SeqLen, Shards, wholeDoc = true)
     foldFlat(1L to 20L, 0L); foldFlat(21L to 40L, 1L)
     foldEp(1L to 20L, 0L); foldEp(21L to 40L, 1L)
