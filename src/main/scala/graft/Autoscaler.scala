@@ -171,13 +171,8 @@ object Autoscaler {
       }
     }
     val cfg = confPath.map(GraftConfig.load).getOrElse(GraftConfig.default)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-autoscaler")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions("graft-autoscaler", defaultCpus = 4,
+      master = sys.env.get("SPARK_MASTER"))
 
     // strategy selection: a coordinator URL → REST scrape; a JMX service
     // URL → coordinator-local JMX-RMI (the reference's TrinoJmxEmr

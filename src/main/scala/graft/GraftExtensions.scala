@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *   spark.sql.extensions=graft.GraftExtensions
  * }}}
  *
- * or `SparkSession.builder().withExtensions(new GraftExtensions)`. This is
+ * or a session builder's `withExtensions(new GraftExtensions)`. This is
  * the idiomatic injection path for a library shipping custom Catalyst
  * expressions (SURVEY.md §7.3) — no session-mutating registration calls
  * needed at call sites.

@@ -24,14 +24,7 @@ object Replay {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val numTicks = args.lift(1).map(_.toInt).getOrElse(12)
     val conf = args.lift(2).map(GraftConfig.load).getOrElse(GraftConfig.default)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-replay")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions("graft-replay", defaultCpus = 4)
     try run(spark, sfDir, numTicks, conf)
     finally spark.stop()
   }

@@ -26,11 +26,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    its blocks then; later consumers read them back exactly as before)
  *    while the Catalyst benefit is unchanged — planning happens at the
  *    localCheckpoint() call either way, so every downstream plan is the
- *    same flat LogicalRDD scan. Measured (FoldProbe, 3 x177-shaped
- *    folds): 258 → 231 jobs, 5149 → 4564 tasks, 63 → 60 SQL executions
- *    (wall on this box is hypervisor-noise-bound; job count is the
- *    honest metric).
- *  - '''[[StageCuts.Durable]]''' (cluster masters, `scratch` given):
+ *    same flat LogicalRDD scan. Measured (`FoldProbe curated`, 3
+ *    x177-shaped folds): 258 → 231 jobs, 5149 → 4564 tasks, 63 → 60
+ *    SQL executions (wall on this box is hypervisor-noise-bound; job
+ *    count is the honest metric). Two concurrent jobs must never be
+ *    the first to read one lazy cut (each would compute its blocks
+ *    while the first to finish truncates the lineage under the other),
+ *    so a [[FoldAsync]] body reads a cut only after the fold's main
+ *    thread has, or reads the uncut frame.
+ *  - '''[[StageCuts.Durable]]''' (cluster masters):
  *    write the frame ONCE as parquet under the fold's scratch dir and
  *    hand downstream actions the read-back — lineage-FREE (every
  *    downstream plan analyzes a flat file scan, killing the per-action
@@ -43,16 +47,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    `local-cluster[2,2,2048]` master (real separate-process
  *    executors, where localCheckpoint is genuinely unsafe): the full
  *    composed dedup stack folds at 8.85 s median with the durable cut
- *    vs 38.57 s with the persist fallback and 6.37 s with the (unsafe)
- *    forced local cut — within 1.39x of the local-cut wall, output
- *    hashes identical across all modes (PERF.md r19).
- *  - '''[[StageCuts.Cache]]''' (cluster masters, no scratch):
- *    `persist()` — lineage intact (lost blocks recompute), the analysis
- *    cost paid per action as before the cut existed. Correctness over
- *    the driver-side constant; last resort for callers without a state
- *    path.
+ *    vs 38.57 s with a persist() fallback (since deleted: every fold
+ *    has a state path to cut into) and 6.37 s with the (unsafe) forced
+ *    local cut — within 1.39x of the local-cut wall, output hashes
+ *    identical across all modes (PERF.md r19, measured on a 12-fold
+ *    synthetic fixture by a since-merged probe). `FoldProbe curated
+ *    local-cluster[2,2,2048]` checks that the durable cut is bit-exact
+ *    (the same fragments hash as on `local[N]`) and profiles its jobs.
  *
- * [[release]] at fold end restores deterministic cleanup: persist-path
+ * [[release]] at fold end restores deterministic cleanup: tracked
  * blocks unpersist (no reliance on ContextCleaner GC of dataset
  * references during a long-lived stream), and the durable scratch dir
  * deletes (all of the fold's actions have run; a replayed fold rewrites
@@ -67,26 +70,10 @@ private[streaming] object StageCuts {
   sealed trait Mode
   case object Local extends Mode
   case object Durable extends Mode
-  case object Cache extends Mode
 
-  /** Default resolution: local master → [[Local]]; cluster with a
-    * scratch path → [[Durable]]; cluster without one → [[Cache]]. The
-    * `graft.stagecuts.force` system property (`local`/`durable`/
-    * `cache`) overrides — the measurement seam
-    * [[graft.tools.ClusterCutProbe]] uses to pit Durable against the
-    * Cache fallback on the SAME cluster master; never set it in a
-    * deployment (forcing `local` on a cluster reintroduces the
-    * unrecoverable-block failure the resolution exists to prevent). */
-  def modeFor(spark: SparkSession, scratch: Option[String]): Mode =
-    sys.props.get("graft.stagecuts.force") match {
-      case Some("local") => Local
-      case Some("durable") if scratch.isDefined => Durable
-      case Some("cache") => Cache
-      case _ =>
-        if (spark.sparkContext.isLocal) Local
-        else if (scratch.isDefined) Durable
-        else Cache
-    }
+  /** Local master → [[Local]], else [[Durable]]. */
+  def modeFor(spark: SparkSession): Mode =
+    if (spark.sparkContext.isLocal) Local else Durable
 }
 
 /** Overlap INDEPENDENT per-fold actions from a small driver-side pool
@@ -96,6 +83,12 @@ private[streaming] object StageCuts {
   * are already staged (persisted / cut) and whose target dirs are
   * disjoint — each other's ordering is irrelevant, only the fold's
   * RETURN must cover them all (the stream's commit marker).
+  *
+  * Kept on measurement: with every body run inline on the caller
+  * instead, perfbench `curation_stream` (4 cores, 25 s, seeds 1-4, one
+  * alternating pair each) read op p50 9,842 → 10,909 ms in the median
+  * (+11%; the inline side lost 3 of 4 pairs), over the 10% a deletion
+  * needed (ROADMAP direction 5).
   *
   * Crash-safety: sequential writes can only crash into PREFIX states;
   * concurrent writes can also leave any SUBSET of the in-flight writes
@@ -156,12 +149,10 @@ private[streaming] final class FoldAsync(
 
 private[streaming] final class StageCuts(
     spark: SparkSession,
-    scratch: Option[String] = None,
+    scratch: String,
     forceMode: Option[StageCuts.Mode] = None) {
   import StageCuts._
-  val mode: Mode = forceMode.getOrElse(modeFor(spark, scratch))
-  require(mode != Durable || scratch.isDefined,
-    "Durable stage cuts need a scratch path")
+  val mode: Mode = forceMode.getOrElse(modeFor(spark))
   private val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
   private var n = 0
   // a crashed fold's scratch leftovers must not survive into this one:
@@ -169,24 +160,22 @@ private[streaming] final class StageCuts(
   // could leave a stale higher-numbered stage a bug would then read
   if (mode == Durable) deleteScratch()
 
-  private def deleteScratch(): Unit = scratch.foreach { dir =>
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
+  private def deleteScratch(): Unit = {
+    val p = new org.apache.hadoop.fs.Path(scratch)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     ()
   }
 
-  /** Cut `df`'s lineage ([[StageCuts.Local]]/[[StageCuts.Durable]]) or
-    * cache it with lineage intact ([[StageCuts.Cache]]); either way
-    * downstream actions stop recomputing it. */
+  /** Cut `df`'s lineage, so downstream actions neither recompute nor
+    * re-analyze it. A [[StageCuts.Local]] cut is lazy: the first action
+    * that reads it materializes it. */
   def apply(df: DataFrame): DataFrame = mode match {
     case Local => df.localCheckpoint(false)
     case Durable =>
-      val dir = s"${scratch.get}/stage-$n"
+      val dir = s"$scratch/stage-$n"
       n += 1
       df.write.mode("overwrite").parquet(dir)
       spark.read.parquet(dir)
-    case Cache => df.persist(); persisted += df; df
   }
 
   /** Register an already-shaped frame for fold-end cleanup WITHOUT
@@ -200,7 +189,7 @@ private[streaming] final class StageCuts(
     df
   }
 
-  /** Deterministically drop the persist-path blocks and the durable
+  /** Deterministically drop the tracked blocks and the durable
     * scratch at fold end. Idempotent; called from the folds' `finally`
     * so a throwing fold leaves no blocks (or scratch files) behind. */
   def release(): Unit = {

@@ -116,7 +116,7 @@ object StreamingBudgetAdmission {
       // bucket-pruned ledger read — never the whole history tree.
       val batchDocs = batch.groupBy(col(idCol))
         .agg(min(col(groupCol)).as(groupCol), min(col(tokCol)).as(tokCol))
-      val cuts = new StageCuts(spark, Some(s"$path/_stage"))
+      val cuts = new StageCuts(spark, s"$path/_stage")
       try {
       val dedup = cuts.track(
         if (hasState)
@@ -167,28 +167,29 @@ object StreamingBudgetAdmission {
           if (priors == null) batchTot
           else batchTot.unionByName(
             priors.join(batchTot.select("group"), Seq("group"), "left_anti"))
-        // the two writes consume the same cut frame and target disjoint
-        // dirs — overlap them ([[FoldAsync]], guide §2.6); the barrier
-        // keeps the fold's contract that BOTH are durable when it
-        // returns (the composed fold reads verdicts/batch=<id> next)
-        val async = new FoldAsync(spark, "budget-admission", threads = 2)
+        // the verdicts write materializes verdCut first, on this thread
+        // (two concurrent jobs must not read a lazy cut first,
+        // [[StageCuts]]); the totals write then overlaps the verdicts
+        // ledger maintenance ([[FoldAsync]], guide §2.6) — disjoint dirs.
+        // The barrier keeps the fold's contract that both writes are
+        // durable when it returns (the composed fold reads
+        // verdicts/batch=<id> next). The verdicts ledger keeps its ROWS
+        // forever but its DIRECTORIES compact ([[LedgerState.maintain]]).
+        verdCut.write.mode("overwrite")
+          .parquet(s"$path/verdicts/batch=$batchId")
+        val async = new FoldAsync(spark, "budget-admission", threads = 1)
         try {
-          async("verdicts write") {
-            verdCut.write.mode("overwrite")
-              .parquet(s"$path/verdicts/batch=$batchId")
-          }
           async("totals write") {
             totals.write.mode("overwrite")
               .parquet(s"$path/totals/batch=$batchId")
           }
+          LedgerState.maintain(spark, s"$path/verdicts", batchId,
+            bucketK = bucketK, compactEvery = compactEvery)
           async.barrier()
         } finally async.shutdownAwait()
         // retention: totals generations are superseded snapshots (every
-        // read targets the latest); the verdicts ledger keeps its ROWS
-        // forever but its DIRECTORIES compact ([[LedgerState.maintain]])
+        // read targets the latest)
         StreamState.pruneGenerations(spark, s"$path/totals", retainGenerations)
-        LedgerState.maintain(spark, s"$path/verdicts", batchId,
-          bucketK = bucketK, compactEvery = compactEvery)
       }
       // release in `finally`: a throwing fold must not leak its tracked
       // blocks to the ContextCleaner (a retry-wrapped deployment keeps

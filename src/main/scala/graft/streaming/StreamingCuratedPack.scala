@@ -359,14 +359,14 @@ object StreamingCuratedPack {
       // (the mode table lives on [[StageCuts]]). The whole fold body
       // runs under try/finally so a throwing fold releases its tracked
       // blocks and scratch deterministically.
-      val cuts = new StageCuts(spark, Some(s"$path/_stage"))
+      val cuts = new StageCuts(spark, s"$path/_stage")
       // Overlap INDEPENDENT per-fold actions (optimization guide §2.6:
       // actions are only sequential because the driver calls them
       // sequentially): each gate's ledger write + maintenance consumes
       // only frames the downstream stages never mutate, and the pack
       // sub-fold and the funnel aggregation consume the same committed
       // verdict slice without ordering between them — so they run on a
-      // small pool while the main thread advances the stage chain. The
+      // small pool while the main thread computes the funnel. The
       // fold AWAITS every future before it returns (the stream's commit
       // must cover all writes) and before cuts.release() (a Durable-mode
       // release deletes scratch a late job could still be reading).
@@ -380,7 +380,19 @@ object StreamingCuratedPack {
       // writes, and no reader treats funnel generation N as proof that
       // they are durable — the next fold's prior-funnel read and
       // `funnel` read the funnel alone.
-      val async = new FoldAsync(spark, "curated-pack")
+      // four threads: the pack fold and the three gate ledger writes
+      // start together, after the admission fold
+      val async = new FoldAsync(spark, "curated-pack", threads = 4)
+      // The gate ledger writes read lazy stage cuts (each gate's kept
+      // cut, and the band rows under the band ledger's tracked frames),
+      // which two concurrent jobs must not read first ([[StageCuts]]).
+      // Every gate cut is upstream of `deliverable`, so the admission
+      // fold's first action (stage 3, on this thread) materializes them
+      // all; the writes are queued here and submitted after it.
+      val ledgerWrites =
+        scala.collection.mutable.Buffer.empty[(String, () => Unit)]
+      def afterAdmission(desc: String)(write: => Unit): Unit =
+        ledgerWrites += desc -> (() => write)
       var mainOk = false
       try {
       val uniq = cuts.track(batch.groupBy(col("doc_id"))
@@ -456,7 +468,8 @@ object StreamingCuratedPack {
           val fresh = LedgerState.antiJoinSeen(spark, tbl, batchId,
             firstInBatch, "_fp", "fp")
           val kept = cuts(fresh)
-          async("fp ledger") {
+          // first read by the admission fold, on this thread
+          afterAdmission("fp ledger") {
             kept.select(col("_fp").as("fp"), col("id"))
               .write.mode("overwrite").parquet(s"$tbl/batch=$batchId")
             LedgerState.maintain(spark, tbl, batchId, idCol = "fp",
@@ -513,7 +526,9 @@ object StreamingCuratedPack {
               org.apache.spark.sql.expressions.Window.partitionBy(col("bkey"))))
             .filter(col("id") =!= col("_mn")).select(col("id")).distinct())
           val kept = cuts(surv.join(losers, Seq("id"), "left_anti"))
-          async("band ledger") {
+          // bandRows (under survBands) is first read by the admission
+          // fold, on this thread
+          afterAdmission("band ledger") {
             survBands.join(losers, Seq("id"), "left_anti")
               .select(col("bkey"), col("id"))
               .write.mode("overwrite").parquet(s"$tbl/batch=$batchId")
@@ -618,7 +633,8 @@ object StreamingCuratedPack {
             .filter(cosine(col("_va"), col("_vb")) >= semThreshold)
             .select(col("_ia").as("id")).distinct()
           val kept = cuts(surv.join(losers, Seq("id"), "left_anti"))
-          async("sem ledger") {
+          // first read by the admission fold, on this thread
+          afterAdmission("sem ledger") {
             svSigs.join(kept.select("id"), Seq("id"), "left_semi")
               .select(col("sig").as("bucket"), col("id"), col("vec"))
               .write.mode("overwrite").parquet(s"$tbl/batch=$batchId")
@@ -673,6 +689,8 @@ object StreamingCuratedPack {
             RetainGenerations, bucketK, compactEvery)
         }
       }
+      // every gate cut is materialized now (stage 3 read them first)
+      ledgerWrites.foreach { case (desc, write) => async(desc)(write()) }
       // the cumulative funnel: prior generation + this batch's deltas
       // (every frame here is batch- or dimension-sized). The five
       // distinct drop modes between the quality floor and the verdicts
@@ -687,7 +705,7 @@ object StreamingCuratedPack {
       // rows and conditional-summing per tag computes every column in
       // a single exchange with ZERO join builds. The old shape paid
       // ~15 sub-jobs for the funnel action alone (measured via
-      // FoldProbe: 8 aggregate legs + their broadcast builds), pure
+      // `FoldProbe curated`: 8 aggregate legs + their broadcast builds), pure
       // per-fold constant at any scale — optimization guide §2.4
       // (remove shuffles outright) + §3 (don't join what one pass can
       // aggregate). Row set is unchanged: every stage is a subset of

@@ -213,7 +213,7 @@ object StreamingPack {
         .select(col(idCol), col("_rep.shard").as("shard"),
           col("_rep.tokens").as("tokens"))
         .filter(col("tokens") > 0L)
-      val cuts = new StageCuts(spark, Some(s"$path/_stage"))
+      val cuts = new StageCuts(spark, s"$path/_stage")
       try {
         val dedup = cuts.track(
           if (hasState)

@@ -1,142 +1,114 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Job-level anatomy of ONE composed curated-pack fold (optimization
-  * guide §1: find where the wall actually goes before changing code).
+/** Job-level anatomy of one streaming fold (optimization guide §1: find
+  * where the wall actually goes before changing code).
   *
-  * Runs `StreamingCuratedPack.foldBatch` directly (the public per-batch
-  * API the streaming sink calls — no MemoryStream wrapper) on x177-shaped
-  * batches from sf0.1, with a listener recording per job: task count,
-  * summed task runtime, and wall between job start/end. The gap between
-  * per-job wall and summed task time is scheduling + plan/serialization
-  * overhead — the per-action constant the four-drain bench floor is made
-  * of.
+  * Usage: `runMain graft.tools.FoldProbe <fold> [master]`
+  *  - `curated`: [[graft.streaming.StreamingCuratedPack]] on x177-shaped
+  *    batches (exact, band and semantic dedup on);
+  *  - `global`: the x150 shape through the one-group front
+  *    [[graft.streaming.StreamingQualityHead]];
+  *  - `group`: the x160 dynamic shape through
+  *    [[graft.streaming.StreamingGroupQualityHead]], budgets raised at
+  *    fold 2.
   *
-  * `SPARK_GRAFT_FOLD_PARTITIONS` overrides spark.sql.shuffle.partitions
-  * (default 32 = the bench conf) to answer: is the per-job constant task
-  * scheduling (drops with partitions) or fixed driver work per job?
+  * Each fold's `foldBatch` (the public per-batch API the streaming sink
+  * calls) runs directly on four batches from `SPARK_GRAFT_SF_DIR`
+  * (default sf0.1). Fold 0 warms up (JIT, codegen, state bootstrap);
+  * folds 1-3 run under one [[graft.obs.ExecutionProfile]], which prints
+  * the jobs per fold, then every action (one SQL execution) with its
+  * callsite, so each job maps back to a fold code line. The gap
+  * between summed job wall and task time is scheduling plus plan and
+  * serialization overhead: the per-action constant. Spark settings are
+  * `-Dspark.*` properties ([[graft.Sessions]]), e.g.
+  * `-Dspark.sql.adaptive.enabled=false`.
+  *
+  * The master defaults to `local[SPARK_GRAFT_CPUS]` (32). On a
+  * `local-cluster[N,C,MB]` master the executors are separate processes,
+  * where [[graft.streaming.StageCuts]] writes durable parquet cuts
+  * instead of local checkpoints; the curated fold then prints the same
+  * fragments hash as on `local[N]` when the cut is bit-exact. Those
+  * executors load graft from a jar: `sbt package`, then
+  * `SPARK_GRAFT_JAR=target/scala-2.13/<jar>`.
   */
 object FoldProbe {
   def main(args: Array[String]): Unit = {
+    val kind = args.headOption.getOrElse("curated")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_FOLD_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-foldprobe")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_FOLD_AQE", "on") != "off").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-      .join(graft.sources.Tables.embeddings(spark, sfDir),
-        col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("source"), col("text"), col("embedding"))
-    val words = graft.streaming.StreamingDecontaminate.bloomWords(
-      graft.sources.Tables.documents(spark, sfDir)
-        .filter(col("doc_id") % 97 === 0), n = 13,
-      bits = (1L << 16),
-      k = 4)
-    val base = docs.collect().toSeq
+    val spark = graft.Sessions(s"graft-foldprobe-$kind", defaultCpus = 32,
+      master = args.lift(1))
+    sys.env.get("SPARK_GRAFT_JAR").foreach(spark.sparkContext.addJar)
     import spark.implicits._
-    def batchDf(b: Long) = base.filter(r => r.getLong(0) % 4 == b)
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getSeq[Float](3).toArray))
-      .toDF("doc_id", "source", "text", "embedding")
-
-    case class S(var n: Int = 0, var tasks: Long = 0, var runMs: Long = 0,
-      var cpuMs: Long = 0, var gcMs: Long = 0, var deserMs: Long = 0,
-      var resSerMs: Long = 0)
-    val byStage = new java.util.concurrent.ConcurrentHashMap[String, S]()
-    // jobs grouped by ROOT SQL execution id = one entry per fold ACTION,
-    // in execution order — maps job count back to foldImpl code sites
-    case class E(var jobs: Int = 0, var first: Long = 0, var last: Long = 0)
-    val byExec = new java.util.concurrent.ConcurrentHashMap[String, E]()
-    var jobCount = 0
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        synchronized { jobCount += 1 }
-        val ex = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.root.id"))
-            .orElse(Option(p.getProperty("spark.sql.execution.id"))))
-          .getOrElse("none")
-        val ee = byExec.computeIfAbsent(ex, _ => E(first = System.nanoTime()))
-        ee.synchronized { ee.jobs += 1; ee.last = System.nanoTime() }
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        // callsite: first in-repo frame from the long form, else the name
-        val key = si.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("FoldProbe"))
-          .getOrElse(si.name.takeWhile(_ != '(')).trim.take(90)
-        val s = byStage.computeIfAbsent(key, _ => S())
-        val m = si.taskMetrics
-        s.synchronized {
-          s.n += 1
-          s.tasks += si.numTasks
-          if (m != null) {
-            s.runMs += m.executorRunTime
-            s.cpuMs += m.executorCpuTime / 1000000
-            s.gcMs += m.jvmGCTime
-            s.deserMs += m.executorDeserializeTime
-            s.resSerMs += m.resultSerializationTime
-          }
-        }
-      }
-    }
-
     val path = java.nio.file.Files.createTempDirectory("graft_foldprobe_")
       .toString
-    def fold(b: Long): Unit =
-      graft.streaming.StreamingCuratedPack.foldBatch(batchDf(b), b,
-        path, words,
-        minScoreK = 615000L,
-        quota = 700L,
-        seqLen = 256L, numShards = 4,
-        bloomBits = (1L << 16),
-        bloomK = 4,
-        dedupExact = true, dedupNear = true, dedupSem = true,
-        semThreshold = 0.30,
-        semPlanes = graft.ext.Similarity.SemPlanes,
-        semMaxBucket = graft.ext.Similarity.SemMaxBucket)
 
-    fold(0) // warm-up fold: JIT + codegen + state bootstrap
-    spark.sparkContext.addSparkListener(l)
-    val t0 = System.nanoTime()
-    (1L to 3L).foreach(fold)
-    val wall = (System.nanoTime() - t0) / 1e9
-    spark.sparkContext.removeSparkListener(l)
-    Thread.sleep(500) // let listener drain
-    import scala.jdk.CollectionConverters._
-    val ss = byStage.asScala.toSeq.sortBy(-_._2.runMs)
-    println(f"foldprobe folds=1..3 wall=$wall%6.2f s jobs=$jobCount " +
-      f"parts=$parts stagesDistinct=${ss.size}")
-    println(f"  total run=${ss.map(_._2.runMs).sum / 1000.0}%8.2f s " +
-      f"cpu=${ss.map(_._2.cpuMs).sum / 1000.0}%8.2f s " +
-      f"gc=${ss.map(_._2.gcMs).sum / 1000.0}%7.2f s " +
-      f"deser=${ss.map(_._2.deserMs).sum / 1000.0}%7.2f s " +
-      f"tasks=${ss.map(_._2.tasks).sum}")
-    ss.take(25).foreach { case (k, s) =>
-      println(f"  stage n=${s.n}%3d tasks=${s.tasks}%5d " +
-        f"run=${s.runMs / 1000.0}%8.2f cpu=${s.cpuMs / 1000.0}%8.2f " +
-        f"gc=${s.gcMs / 1000.0}%6.2f deser=${s.deserMs / 1000.0}%6.2f  $k")
+    val fold: Long => Unit = kind match {
+      case "curated" =>
+        val docs = graft.sources.Tables.documents(spark, sfDir)
+          .join(graft.sources.Tables.embeddings(spark, sfDir),
+            col("doc_id") === col("vec_id"))
+          .select(col("doc_id"), col("source"), col("text"), col("embedding"))
+          .as[(Long, String, String, Array[Float])].collect().toSeq
+        val words = graft.streaming.StreamingDecontaminate.bloomWords(
+          graft.sources.Tables.documents(spark, sfDir)
+            .filter(col("doc_id") % 97 === 0), n = 13, bits = 1L << 16, k = 4)
+        b => graft.streaming.StreamingCuratedPack.foldBatch(
+          docs.filter(_._1 % 4 == b)
+            .toDF("doc_id", "source", "text", "embedding"),
+          b, path, words, minScoreK = 615000L, quota = 700L, seqLen = 256L,
+          numShards = 4, bloomBits = 1L << 16, bloomK = 4,
+          dedupExact = true, dedupNear = true, dedupSem = true,
+          semThreshold = 0.30,
+          semPlanes = graft.ext.Similarity.SemPlanes,
+          semMaxBucket = graft.ext.Similarity.SemMaxBucket)
+      case "global" | "group" =>
+        val rows = graft.sources.Tables.documents(spark, sfDir)
+          .select(col("doc_id"), col("source"),
+            round(graft.ext.TextAnalysis.qualityScore(col("text")) * 1000000, 0)
+              .cast("long").as("score_k"),
+            size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+          .as[(Long, String, Long, Long)].collect().toSeq
+        def batch(b: Long) = rows.filter(r => (r._1 / 4) % 4 == b)
+          .toDF("doc_id", "source", "score_k", "n_tokens")
+        val avail = rows.groupBy(_._2).map { case (s, rs) => s -> rs.map(_._4).sum }
+        if (kind == "global") b => graft.streaming.StreamingQualityHead.foldBatch(
+          batch(b).select("doc_id", "score_k", "n_tokens"), b, path,
+          budget = 60000L)
+        else b => {
+          val scale = if (b < 2L) 0.3 else 0.65
+          graft.streaming.StreamingGroupQualityHead.foldBatch(batch(b), b, path,
+            avail.map { case (s, t) => s -> (t * scale).toLong })
+        }
+      case other => sys.error(s"unknown fold '$other': curated, global or group")
     }
-    // per-ACTION job counts in execution order (execId is monotone):
-    // 3 folds of identical shape → the per-fold action sequence repeats
-    val es = byExec.asScala.toSeq
-      .filter(_._1 != "none")
-      .sortBy(e => scala.util.Try(e._1.toLong).getOrElse(Long.MaxValue))
-    println(s"  actions=${es.size} (3 folds)")
-    es.foreach { case (id, e) =>
-      println(f"  exec $id%4s jobs=${e.jobs}%3d " +
-        f"span=${(e.last - e.first) / 1e6}%7.1f ms")
+
+    fold(0L)
+    val profile = graft.obs.ExecutionProfile.attach(spark)
+    val t0 = System.nanoTime()
+    for (b <- 1L to 3L) {
+      val (j0, f0) = (profile.total.jobs, System.nanoTime())
+      fold(b)
+      println(f"foldprobe $kind fold=$b wall=${(System.nanoTime() - f0) / 1e9}%6.2f s " +
+        s"jobs=${profile.total.jobs - j0}")
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    profile.detach()
+    println(f"foldprobe $kind folds=1..3 master=${spark.sparkContext.master} " +
+      f"wall=$wall%6.2f s actions=${profile.byAction.size}")
+    profile.report.foreach(println)
+    if (kind == "curated") {
+      // bit-exactness witness: the packed tape must not depend on the
+      // master or the cut mode
+      val frag = graft.streaming.StreamingCuratedPack.fragments(spark, path)
+        .select(concat_ws("|", col("id"), col("shard"), col("pos"),
+          col("seq"), col("frag_start"), col("frag_len"), col("doc_off")))
+        .as[String].collect().sorted
+      val hash = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(frag.mkString("\n").getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(16)
+      println(s"foldprobe curated frags=${frag.length} hash=$hash")
     }
     spark.stop()
   }

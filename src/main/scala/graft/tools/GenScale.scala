@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -22,17 +22,15 @@ import org.apache.spark.sql.functions._
  *  - `embeddings` replicas beyond the first get the deterministic per-dim
  *    nudge ScaleProbe uses, for the same reason.
  *
- * Usage: runMain graft.tools.GenScale <srcDir> <outDir> [factor=10]
+ * Usage: runMain graft.tools.GenScale <srcDir> <outDir> [factor=10], on
+ * `local[SPARK_GRAFT_CPUS]` (default 32; [[graft.Sessions]]).
  */
 object GenScale {
   def main(args: Array[String]): Unit = {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions("graft-genscale", defaultCpus = 32)
 
     def grow(name: String, base: DataFrame)(shift: (DataFrame, Int) => DataFrame): Unit = {
       val grown = (0 until factor).map(r => shift(base, r)).reduce(_ unionByName _)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` of declared queries to files — the
@@ -14,8 +13,8 @@ import java.nio.file.{Files, Paths}
   * row's DataFrame EXECUTES its drain (the fn runs the fold loop and
   * returns the read-back frame), so the dumped plan is the final
   * read-back's — still the right artifact for those rows, whose timed
-  * cost is the drain + read-back; the per-fold plans are profiled via
-  * `ScaleProbe drainprofile` instead. Run at sf0.001 for cheap triage;
+  * cost is the drain + read-back; the per-fold jobs are profiled via
+  * `FoldProbe` or `ScaleProbe drainprofile` instead. Run at sf0.001 for cheap triage;
   * plan SHAPE is scale-invariant (AQE re-optimization happens at
   * runtime, which `explain` does not show).
   */
@@ -25,16 +24,7 @@ object PlanDump {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions("graft-plandump", defaultCpus = 32)
     Files.createDirectories(Paths.get(outDir))
     val selected = graft.SparkEntry.queries
       .filter { case (k, _) => only.forall(_.contains(k)) }.toSeq.sortBy(_._1)

@@ -4,24 +4,6 @@ import graft.ext.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Per-task duration collector for the skew probes: max vs median task
-  * time is the observable that distinguishes "one straggler task owns the
-  * hot key" from "the plan went quadratic". */
-class TaskStats(spark: SparkSession) extends org.apache.spark.scheduler.SparkListener {
-  private val durations = scala.collection.mutable.ArrayBuffer.empty[Long]
-  spark.sparkContext.addSparkListener(this)
-  override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-    durations.synchronized { durations += t.taskInfo.duration }
-  def maxAndMedianMs(): (Long, Long) = durations.synchronized {
-    if (durations.isEmpty) (0L, 0L)
-    else {
-      val s = durations.sorted
-      (s.last, s(s.size / 2))
-    }
-  }
-  def detach(): Unit = spark.sparkContext.removeSparkListener(this)
-}
-
 /** Scaling-slope probe: run the MinHash near-dup pipeline on the sf0.1
   * documents corpus replicated f× (ids shifted, texts salted per replica
   * so replicas aren't trivial duplicates), and print seconds per scale.
@@ -42,14 +24,23 @@ object ScaleProbe {
           .cast("float")
       }: _*).as("embedding"))
 
+  /** Runs `body` under a fresh [[graft.obs.ExecutionProfile]]: its
+    * result and `time=… maxTask=… medTask=… ratio=…` (the skew pair). */
+  private def timedSkew[T](spark: SparkSession)(body: => T): (T, String) = {
+    val profile = graft.obs.ExecutionProfile.attach(spark)
+    val t0 = System.nanoTime()
+    val r = body
+    val dt = (System.nanoTime() - t0) / 1e9
+    profile.detach()
+    val (mx, med) = profile.taskMaxAndMedianMs
+    (r, f"time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+  }
+
   def main(args: Array[String]): Unit = {
     // optional section filter: `runMain graft.tools.ScaleProbe ppjoin`
     // runs only that probe (all sections when no args)
     def on(section: String): Boolean = args.isEmpty || args.contains(section)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions("graft-scaleprobe", defaultCpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.1")
     if (on("neardup")) for (f <- Seq(1, 5, 10, 20)) {
@@ -174,14 +165,10 @@ object ScaleProbe {
           when(col("doc_id") % 10 < 3, lit(boiler))
             .otherwise(concat(col("text"), lit(s" rep$r"))).as("text"))
       }.reduce(_ unionByName _)
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val n = Dedup.minHashNearDups(grown, threshold = 0.35).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
+      val (n, timing) =
+        timedSkew(spark)(Dedup.minHashNearDups(grown, threshold = 0.35).count())
       spark.catalog.clearCache()
-      println(f"skewdoc scale=${f}x docs=${5000 * f}%7d pairs=$n%8d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+      println(f"skewdoc scale=${f}x docs=${5000 * f}%7d pairs=$n%8d $timing")
     }
 
     // Adversarial grouped budget head: ONE source owns 90% of the corpus
@@ -205,15 +192,10 @@ object ScaleProbe {
       val budgets = scored.groupBy("source")
         .agg(expr("sum(n_tokens) div 2").as("budget"))
       def run(label: String)(mk: => org.apache.spark.sql.DataFrame): Long = {
-        val stats = new TaskStats(spark)
-        val t0 = System.nanoTime()
-        val admitted = mk.filter(col("admitted"))
-          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-        val dt = (System.nanoTime() - t0) / 1e9
-        val (mx, med) = stats.maxAndMedianMs()
-        stats.detach()
+        val (admitted, timing) = timedSkew(spark)(mk.filter(col("admitted"))
+          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0))
         spark.catalog.clearCache()
-        println(f"bhskew  scale=${f}x docs=${5000 * f}%7d $label%-9s admitted=$admitted%9d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+        println(f"bhskew  scale=${f}x docs=${5000 * f}%7d $label%-9s admitted=$admitted%9d $timing")
         admitted
       }
       val a = run("two-phase") {
@@ -246,14 +228,9 @@ object ScaleProbe {
       val clicks = grown.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_id").as("click_id"))
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val n = graft.ext.Temporal.asOfJoinBackward(purchases, clicks,
-        Seq("user_id"), "ts", "event_id", Seq("click_id")).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
-      println(f"skewasf scale=${f}x events=${100000 * f}%7d rows=$n%8d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+      val (n, timing) = timedSkew(spark)(graft.ext.Temporal.asOfJoinBackward(
+        purchases, clicks, Seq("user_id"), "ts", "event_id", Seq("click_id")).count())
+      println(f"skewasf scale=${f}x events=${100000 * f}%7d rows=$n%8d $timing")
     }
 
     // dup-span slope: positional grams → map-side-combinable frequency
@@ -273,14 +250,9 @@ object ScaleProbe {
            else concat_ws(" ", transform(split(base, " "),
              t => concat(t, lit(s"x$r"))))).as("text"))
       }.reduce(_ unionByName _)
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val n = Dedup.dupSpans(grown, n = 13).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
+      val (n, timing) = timedSkew(spark)(Dedup.dupSpans(grown, n = 13).count())
       spark.catalog.clearCache() // release the per-call grams persist
-      println(f"dupspan scale=${f}x docs=${5000 * f}%7d spans=$n%8d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+      println(f"dupspan scale=${f}x docs=${5000 * f}%7d spans=$n%8d $timing")
     }
 
     // bloom-prefilter slope: the sketch is a FIXED 8 KB however large the
@@ -596,46 +568,13 @@ object ScaleProbe {
     }
 
     // Four-drain harness profile (r16 verdict "next" #6): run one
-    // four-drain battery row with a SparkListener accounting where the
-    // wall goes — Spark job count and summed job wall vs total wall.
+    // four-drain battery row under the shared ExecutionProfile, accounting
+    // where the wall goes — Spark job count and summed job wall vs total wall.
     // If summed job time tracks the wall but the JOB COUNT is large
     // (hundreds for four tiny folds), the floor is per-action latency ×
     // actions-per-fold, and the lever is FEWER actions per fold (merged
     // state writes, fewer eager materializations), not faster tasks.
     if (on("drainprofile")) {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val jobNanos = new java.util.concurrent.atomic.AtomicLong
-      val starts = new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]()
-      val sites = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-      val siteNanos = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-      val jobSite = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          starts.put(e.jobId, System.nanoTime()); jobs.incrementAndGet()
-          // the stream's foreachBatch swallows callSite.short (every job
-          // reports the start() site) — fall through description →
-          // result-stage name for something distinguishing
-          val site = Option(e.properties).flatMap { p =>
-            Option(p.getProperty("spark.job.description")).filter(_.nonEmpty)
-              .orElse(Option(p.getProperty("callSite.long"))
-                .map(_.linesIterator.drop(1).take(1).mkString.trim)
-                .filter(_.nonEmpty))
-          }.orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '+').trim))
-            .getOrElse("?").take(90)
-          jobSite.put(e.jobId, site)
-          sites.merge(site, 1L, (a, b) => a + b); ()
-        }
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = starts.remove(e.jobId)
-          if (s != null) {
-            val d = System.nanoTime() - s
-            jobNanos.addAndGet(d)
-            Option(jobSite.remove(e.jobId)).foreach(site =>
-              siteNanos.merge(site, d, (a, b) => a + b))
-            ()
-          }
-        }
-      }
       // blank entries (empty var, trailing comma) would otherwise reach
       // SparkEntry.queries as "" and die in an opaque NoSuchElementException
       val profiled = sys.env.get("SPARK_GRAFT_PROFILE")
@@ -649,27 +588,24 @@ object ScaleProbe {
         def run(): Unit = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.01")
           .write.format("noop").mode("overwrite").save()
         run() // warm-up
-        jobs.set(0); jobNanos.set(0); sites.clear(); siteNanos.clear()
         val pn0 = graft.streaming.LedgerState.probeNanos.get
         val pp0 = graft.streaming.LedgerState.probePairs.get
-        spark.sparkContext.addSparkListener(l)
+        val profile = graft.obs.ExecutionProfile.attach(spark)
         val t0 = System.nanoTime()
         run()
         val wall = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.removeSparkListener(l)
+        profile.detach()
+        val jobs = profile.total.jobs
         // sidecar-probe DRIVER loop: (key × live-run) pairs walked and
         // the nanos spent between the collect and the plan build — the
         // O(batch × runs) term the run count grows (logarithmically)
-        println(f"drainprofile $q%-28s jobs=${jobs.get}%4d " +
-          f"jobtime=${jobNanos.get / 1e9}%6.2f wall=$wall%6.2f " +
-          f"ms/job=${wall * 1000 / math.max(jobs.get, 1)}%6.1f " +
+        println(f"drainprofile $q%-28s jobs=$jobs%4d " +
+          f"jobtime=${profile.total.jobMs / 1e3}%6.2f wall=$wall%6.2f " +
+          f"ms/job=${wall * 1000 / math.max(jobs, 1)}%6.1f " +
           f"probe_pairs=${graft.streaming.LedgerState.probePairs.get - pp0}%7d " +
           f"probe_ms=${(graft.streaming.LedgerState.probeNanos.get - pn0) / 1e6}%7.2f")
-        import scala.jdk.CollectionConverters._
-        sites.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (s, n) =>
-          val secs = Option(siteNanos.get(s)).map(_.longValue / 1e9).getOrElse(0.0)
-          println(f"  site $s%-40s n=$n%4d t=$secs%6.2f")
-        }
+        profile.bySite.take(12).foreach(s => println(
+          f"  site ${s.site}%-40s n=${s.cost.jobs}%4d t=${s.cost.jobMs / 1e3}%6.2f"))
       }
     }
 
@@ -905,16 +841,10 @@ object ScaleProbe {
             .otherwise(col("source")).as("source"),
           col("n_chars"))
       }.reduce(_ unionByName _)
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val kept = graft.ext.Skew.saltedTopK(grown, "source",
-        order = Seq(col("n_chars").desc, col("doc_id")),
-        saltBy = Seq("doc_id"), k = 100, salts = 8)
-        .filter(col("kept")).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
-      println(f"topk    scale=${f}x docs=${5000 * f}%7d kept=$kept%6d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+      val (kept, timing) = timedSkew(spark)(graft.ext.Skew.saltedTopK(grown,
+        "source", order = Seq(col("n_chars").desc, col("doc_id")),
+        saltBy = Seq("doc_id"), k = 100, salts = 8).filter(col("kept")).count())
+      println(f"topk    scale=${f}x docs=${5000 * f}%7d kept=$kept%6d $timing")
     }
 
     // Mixture-rebalance slope on the same 60%-hot corpus: one map-side
@@ -927,14 +857,9 @@ object ScaleProbe {
           when(col("doc_id") % 10 < 6, lit("cc"))
             .otherwise(col("source")).as("source"))
       }.reduce(_ unionByName _)
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val kept = graft.ext.Mixture.rebalanceUniform(grown)
-        .filter(col("kept")).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
-      println(f"mixture scale=${f}x docs=${5000 * f}%7d kept=$kept%6d time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+      val (kept, timing) = timedSkew(spark)(
+        graft.ext.Mixture.rebalanceUniform(grown).filter(col("kept")).count())
+      println(f"mixture scale=${f}x docs=${5000 * f}%7d kept=$kept%6d $timing")
     }
 
     // CC edge-count audit: the number of verified near-dup edges the
@@ -1041,12 +966,8 @@ object ScaleProbe {
               "and ever onward through the same template text"))
             .otherwise(col("text")).as("text"))
       }.reduce(_ unionByName _)
-      val stats = new TaskStats(spark)
-      val t0 = System.nanoTime()
-      val pairs = Dedup.winnowNearDups(grown, threshold = 0.5).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (mx, med) = stats.maxAndMedianMs()
-      stats.detach()
+      val (pairs, timing) =
+        timedSkew(spark)(Dedup.winnowNearDups(grown, threshold = 0.5).count())
       val shrink = grown
         .select(size(Dedup.positionalShingleHashes(col("text"), 3)).as("g"),
           size(graft.functions.HashExpressions.winnow_keys(
@@ -1055,8 +976,7 @@ object ScaleProbe {
         .select((col("p").cast("double") / col("g")).as("r"))
         .head().getDouble(0)
       println(f"winnowskew scale=${f}x docs=${5000 * f}%7d pairs=$pairs%8d " +
-        f"shrink=$shrink%.3f time=$dt%7.2f s maxTask=${mx}ms medTask=${med}ms " +
-        f"ratio=${mx.toDouble / math.max(med, 1)}%5.1f")
+        f"shrink=$shrink%.3f $timing")
     }
 
     // x112 recurring-cost split: the battery row measures generation-0

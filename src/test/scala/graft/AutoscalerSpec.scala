@@ -6,8 +6,7 @@ import graft.model.{ClusterQueriesMetrics, ResizeAction}
 import graft.sinks.BufferingPublisher
 import graft.sources.MetricsFetcher
 import graft.streaming.MetricsPipeline
-import org.apache.spark.ListenerDrain
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** The production entry-point loop ([[Autoscaler.ControlLoop]]) driven
   * end-to-end with a stub fetcher: scrape → ring window → cold gate →
@@ -258,7 +257,7 @@ class AutoscalerSpec extends SparkSpec {
     def jobs(group: String)(body: => Unit): Int = {
       sc.setJobGroup(group, group)
       try body finally sc.clearJobGroup()
-      ListenerDrain(sc)
+      GraftBridge.drainListeners(sc)
       sc.statusTracker.getJobIdsForGroup(group).length
     }
     val tickJobs = jobs("warm-tick")(loop.tick())

@@ -16,7 +16,7 @@ class StageCutsSpec extends SparkSpec {
 
   test("durable cuts: read-back equals input, downstream plan is a flat scan, release deletes the scratch") {
     val scratch = s"${freshPath()}/_stage"
-    val cuts = new StageCuts(spark, Some(scratch),
+    val cuts = new StageCuts(spark, scratch,
       forceMode = Some(StageCuts.Durable))
     val df = (1L to 100L).map(i => (i, s"d$i")).toDF("id", "v")
       .filter(col("id") % 3 =!= 0)
@@ -39,7 +39,7 @@ class StageCutsSpec extends SparkSpec {
     val scratch = s"${freshPath()}/_stage"
     val stale = new java.io.File(s"$scratch/stage-7")
     assert(stale.mkdirs())
-    new StageCuts(spark, Some(scratch), forceMode = Some(StageCuts.Durable))
+    new StageCuts(spark, scratch, forceMode = Some(StageCuts.Durable))
     assert(!stale.exists(),
       "a stale higher-numbered stage from a crashed fold must not survive")
   }
