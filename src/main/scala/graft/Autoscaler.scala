@@ -5,7 +5,7 @@ import graft.control.{ScalingManager, SimulatedWorkers, WorkersView}
 import graft.model.QueryActivity
 import graft.decide.{CpuLoadEvaluator, StepScalingAlgorithm}
 import graft.sinks.{BufferingPublisher, MetricPublisher}
-import graft.sources.{JmxJson, MetricsFetcher}
+import graft.sources.{FetchedFrame, JmxJson, MetricsFetcher}
 import graft.streaming.MetricsPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
@@ -24,13 +24,14 @@ import scala.collection.mutable
  *
  * Composition per tick ([[Autoscaler.ControlLoop.tick]]):
  *   1. scrape the fetcher (S1-S4; driver-side control-plane HTTP),
- *   2. read the payloads on the driver (P1/P2: each fetched frame is
- *      collected once, raw, and every payload is read by
- *      [[JmxJson.attributes]] under its fault rule, with no Spark query —
- *      node CPU, query stats, required workers) and push the node CPU
- *      into the one-minute ring (A3 retention — the window the
- *      reference's MetricStore keeps, held on the driver as the reference
- *      holds it),
+ *   2. read the payloads on the driver (P1/P2: [[FetchedFrame.strings]]
+ *      runs each fetched frame's plan once and reads its raw string
+ *      columns from the internal rows, with no Dataset action and no
+ *      `Row` decode; every payload is read by [[JmxJson.attributes]]
+ *      under its fault rule — node CPU, query stats, required workers)
+ *      and push the node CPU into the one-minute ring (A3 retention —
+ *      the window the reference's MetricStore keeps, held on the driver
+ *      as the reference holds it),
  *   3. evaluate the ring on the driver, with no Spark job: the window
  *      summary ([[graft.decide.MetricSummary.ofSamples]], via
  *      [[MetricsPipeline.evaluateSamples]]) feeds the quorum + cascade
@@ -63,7 +64,7 @@ object Autoscaler {
     /** A coordinator frame's payloads, read lazily, without the blank ones
       * (a scrape that saw nothing). */
     private def coordinator(frame: DataFrame): Iterator[JmxJson.Attributes] =
-      frame.collect().iterator.map(_.getAs[String]("payload"))
+      FetchedFrame.strings(frame, "payload").iterator.map(_(0))
         .filter(p => p != null && p.nonEmpty).map(JmxJson.attributes)
 
     /** One tick: scrape → ring → evaluate → publish. Returns the action
@@ -75,11 +76,12 @@ object Autoscaler {
       // OUT of the window, not read as 0% CPU and bias the quorum toward
       // SHRINK (reference drops empty attribute maps —
       // TrinoJmxEmr.scala:91 `if (m.isEmpty) None`)
-      val nodes = fetcher.fetchPayloads(spark).collect().toSeq.flatMap { r =>
-        val a = JmxJson.attributes(r.getAs[String]("payload"))
-        a.double("ProcessCpuLoad").reading.map(cpu =>
-          (r.getAs[String]("node"), cpu, a.long("AvailableProcessors").orZero(0L)))
-      }
+      val nodes = FetchedFrame.strings(fetcher.fetchPayloads(spark), "node", "payload")
+        .toSeq.flatMap { r =>
+          val a = JmxJson.attributes(r(1))
+          a.double("ProcessCpuLoad").reading.map(cpu =>
+            (r(0), cpu, a.long("AvailableProcessors").orZero(0L)))
+        }
       ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
       while (ring.size > windowN) ring.dequeue()
       // QueryManager gauges + the five 5-minute decayed counters drive

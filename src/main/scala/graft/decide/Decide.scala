@@ -3,6 +3,7 @@ package graft.decide
 import graft.model.{ResizeAction, ResizeType}
 
 import java.sql.Timestamp
+import scala.collection.mutable
 
 /**
  * The decision layer: window summary → evaluator → step-scaling → guarded
@@ -54,26 +55,55 @@ object MetricSummary {
     require(n > 0, s"window of $n ticks")
     if (samples.isEmpty) None
     else {
-      val stamps = samples.map(_._1).distinct
-      val newest = stamps.filter(_ != null).sorted(NewestFirst)
-      val maxTs = newest.headOption.orNull
+      val stamps = mutable.HashSet.empty[Timestamp]
+      var nullStamp = false
+      var maxTs: Timestamp = null
+      samples.foreach { s =>
+        val ts = s._1
+        if (ts == null) nullStamp = true
+        else if (stamps.add(ts) && (maxTs == null || ts.after(maxTs))) maxTs = ts
+      }
       val summary =
-        if (stamps.size < n) Cold
+        if (stamps.size + (if (nullStamp) 1 else 0) < n) Cold
         else {
-          // a null ts or node matches no cell (a null ts sorts last, as
-          // `ORDER BY ts DESC` puts it), so it reads as a 0.0 sample
-          val ticks = (newest ++ stamps.filter(_ == null)).take(n)
-          val cells = samples.filter(s => s._1 != null && s._2 != null)
-            .groupMap(s => (s._2, s._1))(_._3)
-          val universe = samples.collect { case (ts, node, _) if maxTs != null && ts == maxTs => node }
-            .distinct
-          val avgs = universe.map { node =>
-            val values = ticks.flatMap(ts => cells.getOrElse((node, ts), Seq(0.0)))
-            node -> values.sum / values.size
-          }.toMap
-          MetricSummary(isCold = false, avgs, universe.count(_ != null))
+          // the newest n ticks by position; a null ts sorts last (as
+          // `ORDER BY ts DESC` puts it) and matches no cell, as does a
+          // null node, so either reads as a 0.0 sample
+          val tick = stamps.toSeq.sorted(NewestFirst).take(n).zipWithIndex.toMap
+          val universe = mutable.LinkedHashMap.empty[String, Cells]
+          if (maxTs != null) samples.foreach { s =>
+            if (s._1 == maxTs) universe.getOrElseUpdate(s._2, new Cells(n))
+          }
+          samples.foreach { s =>
+            if (s._1 != null && s._2 != null)
+              for (i <- tick.get(s._1); cells <- universe.get(s._2)) cells.add(i, s._3)
+          }
+          MetricSummary(isCold = false,
+            universe.iterator.map { case (node, cells) => node -> cells.mean }.toMap,
+            universe.keysIterator.count(_ != null))
         }
       Some((summary, maxTs))
+    }
+  }
+
+  /** One node's samples at each of the window's `n` ticks, newest tick
+    * first; a tick's samples are held newest first. */
+  private final class Cells(n: Int) {
+    private val ticks = Array.fill(n)(List.empty[Double])
+
+    def add(tick: Int, value: Double): Unit = ticks(tick) = value :: ticks(tick)
+
+    /** The mean over every sample, a tick without one counting as one
+      * 0.0, summed from 0.0 newest tick first, each tick's samples in
+      * arrival order. */
+    def mean: Double = {
+      var sum = 0.0
+      var size = 0
+      ticks.foreach { values =>
+        if (values.isEmpty) { sum += 0.0; size += 1 }
+        else { values.reverse.foreach(v => sum += v); size += values.size }
+      }
+      sum / size
     }
   }
 

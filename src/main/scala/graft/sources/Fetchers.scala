@@ -32,19 +32,21 @@ trait MetricsFetcher {
     * metrics/TrinoJmxRest.scala query-stats fetch): a 1-row (payload)
     * frame. Default = blank payload; [[graft.Autoscaler]] treats a blank
     * as "assume active" — a fetcher that cannot see query stats must
-    * never fabricate an idle signal (idle triggers shrink-to-min). */
-  def fetchQueryStats(spark: SparkSession): DataFrame =
-    spark.range(1).select(
-      org.apache.spark.sql.functions.lit("").as("payload"))
+    * never fabricate an idle signal (idle triggers shrink-to-min). The
+    * blank is a local frame, which the tick reads without a Spark job. */
+  def fetchQueryStats(spark: SparkSession): DataFrame = blank(spark)
 
   /** Coordinator ClusterSizeMonitor payload — the required-workers gauge
     * the reference reads as a scaling hint and expands to ahead of the
     * cooldown gate (metrics/TrinoJmxRest.scala:106-109,
     * scaling/ScalingManager.scala:34-36). A 1-row (payload) frame; blank
     * payload = no hint (parses to 0, which never exceeds `running`). */
-  def fetchRequiredWorkers(spark: SparkSession): DataFrame =
-    spark.range(1).select(
-      org.apache.spark.sql.functions.lit("").as("payload"))
+  def fetchRequiredWorkers(spark: SparkSession): DataFrame = blank(spark)
+
+  private def blank(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq("").toDF("payload")
+  }
 }
 
 object MetricsFetcher {
@@ -69,6 +71,31 @@ object MetricsFetcher {
       case other  => throw new IllegalArgumentException(
         s"Unsupported metrics fetcher: $other (expected 'emr' or 'rest')")
     }
+}
+
+/** The driver-side read of a fetched frame's string columns, for the
+  * control loop's tick. It runs the frame's physical plan directly
+  * (`executeCollect`) and reads each named column at its ordinal from
+  * the internal rows: no SQL execution is posted and no row goes through
+  * a generated `Row` deserializer. Any plan works; on the local frames a
+  * fetcher builds (a local scan), it starts no Spark job. */
+private[graft] object FetchedFrame {
+
+  /** Each row's values of `columns`, in that order; a null reads as
+    * null. A missing column or one that is not a string fails here. */
+  def strings(frame: DataFrame, columns: String*): Array[Array[String]] = {
+    val ordinals = columns.map { c =>
+      val i = frame.schema.fieldIndex(c)
+      frame.schema(i).dataType match {
+        case _: StringType => i
+        case t => throw new IllegalArgumentException(
+          s"fetched column $c is ${t.simpleString}, not a string")
+      }
+    }.toArray
+    frame.queryExecution.executedPlan.executeCollect().map { row =>
+      ordinals.map(i => if (row.isNullAt(i)) null else row.getUTF8String(i).toString)
+    }
+  }
 }
 
 /**

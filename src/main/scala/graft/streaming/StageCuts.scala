@@ -19,21 +19,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    loss possible): `localCheckpoint(eager = false)` — truncates lineage
  *    onto executor-local blocks, so every downstream action analyzes a
  *    flat scan. Safe precisely because the blocks cannot be lost.
- *    LAZY (r20): the eager variant ran one dedicated materialization job
- *    per cut — ~14 per composed fold, each paying the box's full per-job
- *    fixed latency for a count nobody reads. The lazy cut defers
- *    materialization into the FIRST consuming action (the RDD persists
- *    its blocks then; later consumers read them back exactly as before)
- *    while the Catalyst benefit is unchanged — planning happens at the
- *    localCheckpoint() call either way, so every downstream plan is the
- *    same flat LogicalRDD scan. Measured (`FoldProbe curated`, 3
- *    x177-shaped folds): 258 → 231 jobs, 5149 → 4564 tasks, 63 → 60
- *    SQL executions (wall on this box is hypervisor-noise-bound; job
- *    count is the honest metric). Two concurrent jobs must never be
- *    the first to read one lazy cut (each would compute its blocks
- *    while the first to finish truncates the lineage under the other),
- *    so a [[FoldAsync]] body reads a cut only after the fold's main
- *    thread has, or reads the uncut frame.
+ *    LAZY in its last stage only (r20): the eager variant ran one
+ *    dedicated materialization job per cut — ~14 per composed fold,
+ *    each paying the box's full per-job fixed latency for a count nobody
+ *    reads; the lazy cut skips that count. It does not defer the whole
+ *    plan: under adaptive execution the localCheckpoint() call executes
+ *    the plan to obtain its RDD, which runs every shuffle query stage at
+ *    once, on the calling thread. Only the result stage waits for the
+ *    FIRST consuming action (the RDD persists its blocks then; later
+ *    consumers read them back). `FoldProbe curated` booked 111 of 231
+ *    jobs to the localCheckpoint() line. The Catalyst benefit is the
+ *    eager cut's — planning happens at the call either way, so every
+ *    downstream plan is the same flat LogicalRDD scan. Measured
+ *    (`FoldProbe curated`, 3 x177-shaped folds): 258 → 231 jobs,
+ *    5149 → 4564 tasks, 63 → 60 SQL executions (wall on this box is
+ *    hypervisor-noise-bound; job count is the honest metric). Two
+ *    concurrent jobs must never be the first to read one lazy cut (each
+ *    would compute its result-stage blocks while the first to finish
+ *    truncates the lineage under the other), so a [[FoldAsync]] body
+ *    reads a cut only after the fold's main thread has, or reads the
+ *    uncut frame.
  *  - '''[[StageCuts.Durable]]''' (cluster masters):
  *    write the frame ONCE as parquet under the fold's scratch dir and
  *    hand downstream actions the read-back — lineage-FREE (every
@@ -167,8 +172,10 @@ private[streaming] final class StageCuts(
   }
 
   /** Cut `df`'s lineage, so downstream actions neither recompute nor
-    * re-analyze it. A [[StageCuts.Local]] cut is lazy: the first action
-    * that reads it materializes it. */
+    * re-analyze it. A [[StageCuts.Local]] cut is lazy in its result
+    * stage only: under adaptive execution this call runs the plan's
+    * shuffle query stages on the calling thread, and the first action
+    * that reads the cut runs the result stage and persists its blocks. */
   def apply(df: DataFrame): DataFrame = mode match {
     case Local => df.localCheckpoint(false)
     case Durable =>

@@ -6,7 +6,9 @@ import graft.model.{ClusterQueriesMetrics, ResizeAction}
 import graft.sinks.BufferingPublisher
 import graft.sources.MetricsFetcher
 import graft.streaming.MetricsPipeline
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The production entry-point loop ([[Autoscaler.ControlLoop]]) driven
   * end-to-end with a stub fetcher: scrape → ring window → cold gate →
@@ -260,13 +262,26 @@ class AutoscalerSpec extends SparkSpec {
       GraftBridge.drainListeners(sc)
       sc.statusTracker.getJobIdsForGroup(group).length
     }
-    val tickJobs = jobs("warm-tick")(loop.tick())
+    val sqlStarts = new java.util.concurrent.atomic.AtomicInteger
+    val executions = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlStarts.incrementAndGet()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(executions)
+    val tickJobs =
+      try jobs("warm-tick")(loop.tick())
+      finally sc.removeSparkListener(executions)
     assert(mgr.summaries.last === MetricSummary(isCold = false,
       Map("n1" -> 0.6, "n2" -> 0.6), 2))
     // the whole tick: the stub fetcher's frames are local relations, so
-    // the three payload parses plan to local scans and start no job;
-    // any job here comes from the window step
+    // the three frame reads run local scans and start no job; any job
+    // here comes from the window step
     assert(tickJobs === 0, s"a warm tick started $tickJobs Spark jobs")
+    // and the reads run the frames' plans directly: no Dataset action
+    // posts a SQL execution
+    assert(sqlStarts.get === 0, s"a warm tick posted ${sqlStarts.get} SQL executions")
   }
 
   test("all-blank node scrape never reads as 0% CPU: cold stays cold, warm holds its decision") {
