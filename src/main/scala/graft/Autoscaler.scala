@@ -25,10 +25,12 @@ import scala.collection.mutable
  * Composition per tick ([[Autoscaler.ControlLoop.tick]]):
  *   1. scrape the fetcher (S1-S4; driver-side control-plane HTTP),
  *   2. read the payloads on the driver (P1/P2: [[FetchedFrame.strings]]
- *      runs each fetched frame's plan once and reads its raw string
- *      columns from the internal rows, with no Dataset action and no
- *      `Row` decode; every payload is read by [[JmxJson.attributes]]
- *      under its fault rule — node CPU, query stats, required workers)
+ *      reads each fetched frame's raw string columns from its internal
+ *      rows, with no Dataset action and no `Row` decode; a frame the
+ *      fetcher built from driver data is read from its analyzed plan,
+ *      with no optimizer pass and no physical plan; every payload is
+ *      read by [[JmxJson.attributes]] under its fault rule — node CPU,
+ *      query stats, required workers)
  *      and push the node CPU into the one-minute ring (A3 retention —
  *      the window the reference's MetricStore keeps, held on the driver
  *      as the reference holds it),
@@ -38,6 +40,10 @@ import scala.collection.mutable
  *      ([[ScalingManager]]),
  *   4. resize through [[WorkersView]] (K3: live = EMR wire client),
  *   5. publish gauges (K1/K2: live = CloudWatch Query protocol).
+ *
+ * Each tick leaves a [[Autoscaler.TickRecord]] (`ControlLoop.lastTick`):
+ * its milliseconds per phase, the rows it read and the nodes it kept, the
+ * window size, how it read activity and the hint, and its decision.
  *
  * `--dry-run` swaps the cloud boundary for [[SimulatedWorkers]] + a
  * buffering publisher; everything upstream of the boundary is identical.
@@ -61,6 +67,11 @@ object Autoscaler {
 
     private val ring = mutable.Queue.empty[Seq[(Timestamp, String, Double)]]
 
+    @volatile private var last: Option[TickRecord] = None
+
+    /** The record of the last tick that completed; None before the first. */
+    def lastTick: Option[TickRecord] = last
+
     /** A coordinator frame's payloads, read lazily, without the blank ones
       * (a scrape that saw nothing). */
     private def coordinator(frame: DataFrame): Iterator[JmxJson.Attributes] =
@@ -70,18 +81,20 @@ object Autoscaler {
     /** One tick: scrape → ring → evaluate → publish. Returns the action
       * the cascade PERFORMED this tick (None while cold/gated/idle). */
     def tick(): Option[MetricsPipeline.Decision] = {
+      val start = System.nanoTime()
       val now = new Timestamp(clock())
+      val (nodeFrame, nodeFetchMs) = timed(fetcher.fetchPayloads(spark))
+      val (payloads, nodeReadMs) = timed(FetchedFrame.strings(nodeFrame, "node", "payload"))
       // presence gate on the CPU gauge: a failed scrape's blank payload,
       // or a CPU gauge that does not read as a finite number, must DROP
       // OUT of the window, not read as 0% CPU and bias the quorum toward
       // SHRINK (reference drops empty attribute maps —
       // TrinoJmxEmr.scala:91 `if (m.isEmpty) None`)
-      val nodes = FetchedFrame.strings(fetcher.fetchPayloads(spark), "node", "payload")
-        .toSeq.flatMap { r =>
-          val a = JmxJson.attributes(r(1))
-          a.double("ProcessCpuLoad").reading.map(cpu =>
-            (r(0), cpu, a.long("AvailableProcessors").orZero(0L)))
-        }
+      val (nodes, parseMs) = timed(payloads.toSeq.flatMap { r =>
+        val a = JmxJson.attributes(r(1))
+        a.double("ProcessCpuLoad").reading.map(cpu =>
+          (r(0), cpu, a.long("AvailableProcessors").orZero(0L)))
+      })
       ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
       while (ring.size > windowN) ring.dequeue()
       // QueryManager gauges + the five 5-minute decayed counters drive
@@ -95,7 +108,8 @@ object Autoscaler {
       // counter — reading as idle, which shrinks to min. Of the first
       // payload the gate keeps, a faulty field (or a count outside Int)
       // reads as "assume active" too: uncertain data is never idle
-      val activity = coordinator(fetcher.fetchQueryStats(spark))
+      val (statsFrame, statsFetchMs) = timed(fetcher.fetchQueryStats(spark))
+      val (gauged, statsReadMs) = timed(coordinator(statsFrame)
         .find(_.isPresent("RunningQueries"))
         .flatMap { a =>
           def count(name: String) =
@@ -112,18 +126,21 @@ object Autoscaler {
             failed1m <- decayed("FailedQueries.OneMinute.Count")
           } yield QueryActivity(running, queued, abandoned5m, canceled5m,
             completed5m, failed5m, submitted5m, failed1m)
-        }.getOrElse(QueryActivity.AssumeActive)
+        })
+      val activity = gauged.getOrElse(QueryActivity.AssumeActive)
       // ClusterSizeMonitor scaling hint (reference:
       // metrics/TrinoJmxRest.scala:106-109, docs/scaling-hints.md):
       // required > running expands ahead of the cooldown gate; blank,
       // gauge-less or faulty (a count outside Int too) reads as 0
-      val requiredWorkers = coordinator(fetcher.fetchRequiredWorkers(spark)).nextOption()
-        .flatMap(_.long("RequiredWorkers").reading).filter(_.isValidInt).fold(0)(_.toInt)
+      val (hintFrame, hintFetchMs) = timed(fetcher.fetchRequiredWorkers(spark))
+      val (requiredWorkers, hintReadMs) = timed(coordinator(hintFrame).nextOption()
+        .flatMap(_.long("RequiredWorkers").reading).filter(_.isValidInt).fold(0)(_.toInt))
       idleMarker.foreach(_.touchIfBusy(
         graft.control.ScalingManager.isIdle(activity.stamped(now))))
-      val decision = MetricsPipeline.evaluateSamples(ring.toSeq.flatten, manager, windowN,
-        activity = activity, requiredWorkers = requiredWorkers)
-      if (publish && nodes.nonEmpty) {
+      val (decision, evaluateMs) = timed(MetricsPipeline.evaluateSamples(
+        ring.toSeq.flatten, manager, windowN,
+        activity = activity, requiredWorkers = requiredWorkers))
+      val publishMs = timed(if (publish && nodes.nonEmpty) {
         // node map fanned out as one multi-datum request (K2), then the
         // reference's full scalar gauge block
         // (metrics/TrinoMetricStore.scala:54-68) in a second one —
@@ -140,9 +157,56 @@ object Autoscaler {
           "trino.runningWorkers" -> workers.running.toDouble,
           "trino.requestedWorkers" -> workers.requested.toDouble) ++
           decision.map(d => "trino.targetCapacity" -> d.capacity.toDouble))
-      }
+      })._2
+      last = Some(TickRecord(
+        TickPhases(nodeFetchMs, nodeReadMs, parseMs, statsFetchMs, statsReadMs,
+          hintFetchMs, hintReadMs, evaluateMs, publishMs, (System.nanoTime() - start) / 1e6),
+        payloadRows = payloads.length, nodesKept = nodes.size, ringFrames = ring.size,
+        assumeActive = gauged.isEmpty, requiredWorkers = requiredWorkers, decision = decision))
       decision
     }
+  }
+
+  /** Milliseconds one tick spent per phase. A fetch builds the fetcher's
+    * frame; a read gets its strings ([[FetchedFrame.strings]]) and, for
+    * a coordinator frame, parses its payload into the gauges the tick
+    * uses; `parse` reads every node payload's CPU gauge; `evaluate` is the
+    * window summary plus the cascade (and any resize it performs);
+    * `publish` puts the gauges. `tick` is the whole tick, so what no
+    * phase covers (the ring update, the idle marker) is the rest. */
+  final case class TickPhases(
+      nodeFetch: Double, nodeRead: Double, parse: Double,
+      statsFetch: Double, statsRead: Double,
+      hintFetch: Double, hintRead: Double,
+      evaluate: Double, publish: Double, tick: Double)
+
+  /** What one tick saw, read and decided.
+    * @param payloadRows     rows of the node frame
+    * @param nodesKept       nodes whose CPU gauge read as a number: the
+    *                        tick's ring frame and its published gauges
+    * @param ringFrames      scrape frames in the window after this tick
+    * @param assumeActive    the query stats gave no usable activity
+    *                        (blank, gauge-less or faulty), so the tick read
+    *                        the cluster as active
+    * @param requiredWorkers the scaling hint (0 when absent or faulty)
+    * @param decision        the action the cascade performed, if any */
+  final case class TickRecord(
+      phasesMs: TickPhases,
+      payloadRows: Int,
+      nodesKept: Int,
+      ringFrames: Int,
+      assumeActive: Boolean,
+      requiredWorkers: Int,
+      decision: Option[MetricsPipeline.Decision]) {
+    /** Node rows left out of the window: a blank scrape or a CPU gauge
+      * that faulted. */
+    def nodesDropped: Int = payloadRows - nodesKept
+  }
+
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e6)
   }
 
   def main(args: Array[String]): Unit = {

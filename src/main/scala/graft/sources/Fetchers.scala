@@ -1,6 +1,9 @@
 package graft.sources
 
 import graft.model.NodeInfo
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.optimizer.{CollapseProject, ConvertToLocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,6 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * impls do driver-side HTTP in `foreachBatch` (SURVEY.md §2.1 S1), the
  * test impl replays fixture frames. Each payload degrades to empty on
  * fetch failure rather than aborting the tick (TrinoJmxRest.scala:130).
+ *
+ * A frame may have any plan. The tick reads a frame built from driver
+ * data (`Seq(...).toDF(...)`, `createDataFrame(rows).toDF(...)`: a
+ * projection, filter or limit over a local relation) from its analyzed
+ * plan, with no optimizer pass, no physical plan and no Spark job; it
+ * runs any other plan (see [[FetchedFrame]]).
  */
 trait MetricsFetcher {
   def name: String
@@ -33,7 +42,7 @@ trait MetricsFetcher {
     * frame. Default = blank payload; [[graft.Autoscaler]] treats a blank
     * as "assume active" — a fetcher that cannot see query stats must
     * never fabricate an idle signal (idle triggers shrink-to-min). The
-    * blank is a local frame, which the tick reads without a Spark job. */
+    * blank is a local frame, which the tick reads without planning it. */
   def fetchQueryStats(spark: SparkSession): DataFrame = blank(spark)
 
   /** Coordinator ClusterSizeMonitor payload — the required-workers gauge
@@ -56,7 +65,7 @@ object MetricsFetcher {
     * "rest" strategy; a `jmxUrl` selects the live JMX-RMI
     * [[JmxRmiFetcher]] for the "emr" (coordinator-local) strategy;
     * without either, both strategies replay fixtures. */
-  def apply(name: String, fixtureDir: Option[String] = None,
+  def apply(name: String,
             coordinatorUrl: Option[String] = None,
             user: String = graft.GraftConfig.default.trinoUser,
             password: String = graft.GraftConfig.default.trinoPassword,
@@ -64,21 +73,30 @@ object MetricsFetcher {
     name.toLowerCase match {
       case "emr"  => jmxUrl
         .map(new JmxRmiFetcher(_, user = user, password = password))
-        .getOrElse(new FixtureFetcher("emr", fixtureDir))
+        .getOrElse(new FixtureFetcher("emr"))
       case "rest" => coordinatorUrl
         .map(new RestFetcher(_, user, password))
-        .getOrElse(new FixtureFetcher("rest", fixtureDir))
+        .getOrElse(new FixtureFetcher("rest"))
       case other  => throw new IllegalArgumentException(
         s"Unsupported metrics fetcher: $other (expected 'emr' or 'rest')")
     }
 }
 
 /** The driver-side read of a fetched frame's string columns, for the
-  * control loop's tick. It runs the frame's physical plan directly
-  * (`executeCollect`) and reads each named column at its ordinal from
-  * the internal rows: no SQL execution is posted and no row goes through
-  * a generated `Row` deserializer. Any plan works; on the local frames a
-  * fetcher builds (a local scan), it starts no Spark job. */
+  * control loop's tick. It reads each named column at its ordinal from
+  * the frame's internal rows: no SQL execution is posted and no row goes
+  * through a generated `Row` deserializer.
+  *
+  * A local frame is read from its analyzed plan, with no optimizer pass
+  * and no physical plan: Spark's own `CollapseProject` and
+  * `ConvertToLocalRelation` fold its projections (and a filter or limit)
+  * into a `LocalRelation`, whose rows are the data. Every fetcher the
+  * tick meets builds such a frame, a `Project` over a `LocalRelation`:
+  * [[RestFetcher]], [[JmxRmiFetcher]], [[FixtureFetcher]], the blank
+  * defaults of [[MetricsFetcher]] and the benchmark's fleet fetcher
+  * (`createDataFrame(rows).toDF(...)`). A `MetricsFetcher` may return any
+  * `DataFrame`, so a plan that does not fold to a local relation runs its
+  * physical plan (`executeCollect`), which may start Spark jobs. */
 private[graft] object FetchedFrame {
 
   /** Each row's values of `columns`, in that order; a null reads as
@@ -92,10 +110,23 @@ private[graft] object FetchedFrame {
           s"fetched column $c is ${t.simpleString}, not a string")
       }
     }.toArray
-    frame.queryExecution.executedPlan.executeCollect().map { row =>
+    val rows = local(frame.queryExecution.analyzed)
+      .getOrElse(frame.queryExecution.executedPlan.executeCollect().toSeq)
+    rows.iterator.map { row =>
       ordinals.map(i => if (row.isNullAt(i)) null else row.getUTF8String(i).toString)
-    }
+    }.toArray
   }
+
+  /** The rows of `plan` if Spark's local-relation rules fold it to one.
+    * A pass folds one operator into the relation below it, so a chain of
+    * operators takes a pass per level; a pass that folds nothing ends it. */
+  @scala.annotation.tailrec
+  private def local(plan: LogicalPlan): Option[Seq[InternalRow]] =
+    ConvertToLocalRelation(CollapseProject(plan)) match {
+      case r: LocalRelation => Some(r.data)
+      case folded if !folded.fastEquals(plan) => local(folded)
+      case _ => None
+    }
 }
 
 /**
@@ -257,28 +288,17 @@ class RestFetcher(
   }
 }
 
-/** Replay fetcher: serves deterministic in-memory payloads (or a fixture
-  * directory) — the test/simulation strategy. */
-class FixtureFetcher(override val name: String, fixtureDir: Option[String])
-  extends MetricsFetcher {
+/** Replay fetcher: serves deterministic in-memory payloads — the
+  * test/simulation strategy. */
+class FixtureFetcher(override val name: String) extends MetricsFetcher {
 
   override def fetchPayloads(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    fixtureDir match {
-      case Some(dir) =>
-        Tables.events(spark, dir).select(
-          concat(lit("node-"), col("user_id")).as("node"),
-          to_json(struct(array(struct(
-            lit("ProcessCpuLoad").as("name"),
-            (col("value") / 200.0).cast("string").as("value"))).as("attributes")))
-            .as("payload"))
-      case None =>
-        Seq(
-          ("node-1", """{"attributes":[{"name":"ProcessCpuLoad","value":0.72},{"name":"AvailableProcessors","value":8}]}"""),
-          ("node-2", """{"attributes":[{"name":"ProcessCpuLoad","value":0.35},{"name":"AvailableProcessors","value":8}]}"""),
-          ("node-3", "not json at all") // exercises the empty-map fallback
-        ).toDF("node", "payload")
-    }
+    Seq(
+      ("node-1", """{"attributes":[{"name":"ProcessCpuLoad","value":0.72},{"name":"AvailableProcessors","value":8}]}"""),
+      ("node-2", """{"attributes":[{"name":"ProcessCpuLoad","value":0.35},{"name":"AvailableProcessors","value":8}]}"""),
+      ("node-3", "not json at all") // exercises the empty-map fallback
+    ).toDF("node", "payload")
   }
 
   override def fetchNodeList(spark: SparkSession): DataFrame = {

@@ -26,7 +26,10 @@ class AutoscalerSpec extends SparkSpec {
                             rawRequired: () => Option[String] = () => None)
     extends MetricsFetcher {
     override val name = "stub"
-    override def fetchPayloads(s: SparkSession): DataFrame = {
+    /** Every frame handed out, in order. */
+    val frames = scala.collection.mutable.Buffer.empty[DataFrame]
+    private def kept(frame: DataFrame): DataFrame = { frames += frame; frame }
+    override def fetchPayloads(s: SparkSession): DataFrame = kept {
       import s.implicits._
       (Seq("n1", "n2").map(n => (n,
         if (blank()) "" // every node's scrape failed
@@ -38,7 +41,7 @@ class AutoscalerSpec extends SparkSpec {
       import s.implicits._
       Seq.empty[String].toDF("body")
     }
-    override def fetchQueryStats(s: SparkSession): DataFrame = {
+    override def fetchQueryStats(s: SparkSession): DataFrame = kept {
       import s.implicits._
       if (rawStats().isDefined) Seq(rawStats().get).toDF("payload")
       else queries() match {
@@ -53,7 +56,7 @@ class AutoscalerSpec extends SparkSpec {
           .toDF("payload")
       }
     }
-    override def fetchRequiredWorkers(s: SparkSession): DataFrame = {
+    override def fetchRequiredWorkers(s: SparkSession): DataFrame = kept {
       import s.implicits._
       if (rawRequired().isDefined) Seq(rawRequired().get).toDF("payload")
       else required() match {
@@ -125,9 +128,11 @@ class AutoscalerSpec extends SparkSpec {
     assert(workers.requested === 8)
 
     // blank stats (fetcher blind): assume ACTIVE - still no idle shrink
+    assert(!loop.lastTick.get.assumeActive)
     queries = None
     loop.tick(); workers.settle(); now += 15000L
     assert(workers.requested === 8, "blank query stats must not idle-shrink")
+    assert(loop.lastTick.get.assumeActive)
 
     // attribute-less payload (degraded scrape, non-blank): the gate is
     // the RunningQueries gauge being PRESENT - zero-filling it would
@@ -243,17 +248,25 @@ class AutoscalerSpec extends SparkSpec {
     }
   }
 
+  /** Every phase of the record took time inside its tick. */
+  private def assertPhasesWithinTick(record: Autoscaler.TickRecord): Unit = {
+    val phases = record.phasesMs.productIterator.map(_.asInstanceOf[Double]).toSeq
+    assert(phases.forall(_ >= 0.0), record.phasesMs)
+    assert(phases.init.sum <= record.phasesMs.tick, record.phasesMs)
+  }
+
   test("a warm tick evaluates its window without a Spark job") {
     var now = 6000000000L
     val workers = new SimulatedWorkers(0, 20, clock = () => now)
     workers.resize(5); workers.settle()
     val mgr = new RecordingManager(workers, () => now)
-    val loop = new Autoscaler.ControlLoop(spark,
-      new StubFetcher(() => 0.6, () => Some((2L, 0L)), required = () => Some(3L)),
+    val fetcher = new StubFetcher(() => 0.6, () => Some((2L, 0L)), required = () => Some(3L))
+    val loop = new Autoscaler.ControlLoop(spark, fetcher,
       mgr, workers, new BufferingPublisher, "AWS/EMR", publish = true,
       clock = () => now)
     (1 to 4).foreach { _ => loop.tick(); workers.settle(); now += 15000L }
     assert(!mgr.summaries.last.isCold, "four ticks fill the window")
+    fetcher.frames.clear()
 
     val sc = spark.sparkContext
     def jobs(group: String)(body: => Unit): Int = {
@@ -270,11 +283,25 @@ class AutoscalerSpec extends SparkSpec {
       }
     }
     sc.addSparkListener(executions)
+    var decision: Option[MetricsPipeline.Decision] = None
     val tickJobs =
-      try jobs("warm-tick")(loop.tick())
+      try jobs("warm-tick") { decision = loop.tick() }
       finally sc.removeSparkListener(executions)
     assert(mgr.summaries.last === MetricSummary(isCold = false,
       Map("n1" -> 0.6, "n2" -> 0.6), 2))
+    val record = loop.lastTick.get
+    assert((record.payloadRows, record.nodesKept, record.nodesDropped) === ((2, 2, 0)))
+    assert(record.ringFrames === 4 && !record.assumeActive && record.requiredWorkers === 3)
+    assert(record.decision === decision)
+    assertPhasesWithinTick(record)
+    // the node frame and both coordinator frames, each read from its
+    // analyzed plan: none went through the optimizer or the planner
+    assert(fetcher.frames.size === 3)
+    for (f <- fetcher.frames) {
+      val ran = f.queryExecution.tracker.phases.keySet
+      assert(!ran.contains("optimization") && !ran.contains("planning"),
+        s"a fetched frame ran $ran")
+    }
     // the whole tick: the stub fetcher's frames are local relations, so
     // the three frame reads run local scans and start no job; any job
     // here comes from the window step
@@ -300,8 +327,15 @@ class AutoscalerSpec extends SparkSpec {
     }
 
     // a blank first scrape leaves an empty window: nothing to evaluate
+    assert(loop.lastTick.isEmpty)
     assert(tick(blankScrape = true).isEmpty && mgr.summaries.isEmpty)
     assert(pub.records.isEmpty, "a blank scrape publishes no node gauges")
+    val blankRecord = loop.lastTick.get
+    assert((blankRecord.payloadRows, blankRecord.nodesKept, blankRecord.nodesDropped) ===
+      ((2, 0, 2)))
+    assert(blankRecord.ringFrames === 1 && !blankRecord.assumeActive)
+    assert(blankRecord.requiredWorkers === 0 && blankRecord.decision.isEmpty)
+    assertPhasesWithinTick(blankRecord)
 
     // cold: one reading, then a blank scrape — still cold
     tick(blankScrape = false)

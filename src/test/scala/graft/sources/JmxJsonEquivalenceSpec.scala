@@ -47,7 +47,7 @@ class JmxJsonEquivalenceSpec extends SparkSpec {
 
   /** Payloads of the fixtures the fetcher specs serve. */
   private def fixtures: Seq[String] = {
-    val fixture = new FixtureFetcher("rest", None)
+    val fixture = new FixtureFetcher("rest")
     val frames = Seq(fixture.fetchPayloads(spark), fixture.fetchQueryStats(spark),
       fixture.fetchRequiredWorkers(spark))
     // the fixture-directory shape: gauges rendered by a Spark string cast
