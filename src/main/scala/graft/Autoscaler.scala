@@ -8,9 +8,12 @@ import graft.sinks.{BufferingPublisher, MetricPublisher}
 import graft.sources.{FetchedFrame, JmxJson, MetricsFetcher}
 import graft.streaming.MetricsPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.streaming.Trigger
 
 import java.sql.Timestamp
+import java.util.concurrent.{CancellationException, CompletableFuture, CompletionException,
+  LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import scala.collection.mutable
 
 /**
@@ -22,20 +25,32 @@ import scala.collection.mutable
  * effect boundary, and the odd ticks refresh worker topology
  * (modulo-tick — SURVEY §2.7 ST8).
  *
- * Composition per tick ([[Autoscaler.ControlLoop.tick]]):
- *   1. scrape the fetcher (S1-S4; driver-side control-plane HTTP),
- *   2. read the payloads on the driver (P1/P2: [[FetchedFrame.strings]]
- *      reads each fetched frame's raw string columns from its internal
- *      rows, with no Dataset action and no `Row` decode; a frame the
- *      fetcher built from driver data is read from its analyzed plan,
- *      with no optimizer pass and no physical plan; every payload is
- *      read by [[JmxJson.attributes]] under its fault rule — node CPU,
- *      query stats, required workers)
+ * Composition per tick ([[Autoscaler.ControlLoop.tick]]). A tick runs two
+ * paths at once and joins them before the window step:
+ *   1. the coordinator path, on the loop's coordinator thread (at most
+ *      one, a daemon, gone once the loop idles past
+ *      [[Autoscaler.CoordinatorKeepAliveMs]]) with the tick thread's
+ *      active session and `SparkContext` local properties (its job group
+ *      too): fetch and read the query stats, then the scaling hint
+ *      (S1/S2; driver-side control-plane HTTP, as the reference's
+ *      concurrent futures at `TrinoJmxRest.scala:91-104`),
+ *   2. the node path, on the tick's thread: scrape the node payloads,
+ *      read them on the driver (P1/P2: [[FetchedFrame.strings]] reads each
+ *      fetched frame's raw string columns from its internal rows, with no
+ *      Dataset action and no `Row` decode; a frame the fetcher built from
+ *      driver data is read from its analyzed plan, with no optimizer pass
+ *      and no physical plan; every payload is read by
+ *      [[JmxJson.attributes]] under its fault rule — node CPU, query
+ *      stats, required workers; the node payloads are parsed over every
+ *      core, each row into its own slot, so the fetched row order holds)
  *      and push the node CPU into the one-minute ring (A3 retention —
  *      the window the reference's MetricStore keeps, held on the driver
  *      as the reference holds it),
- *   3. evaluate the ring on the driver, with no Spark job: the window
- *      summary ([[graft.decide.MetricSummary.ofSamples]], via
+ *   3. join: the tick waits for the coordinator path, whether or not the
+ *      node path threw, so no fetch outlives its tick; a path's exception
+ *      is rethrown as itself. Then evaluate the ring on the driver, with
+ *      no Spark job: the window summary
+ *      ([[graft.decide.MetricSummary.ofSamples]], via
  *      [[MetricsPipeline.evaluateSamples]]) feeds the quorum + cascade
  *      ([[ScalingManager]]),
  *   4. resize through [[WorkersView]] (K3: live = EMR wire client),
@@ -69,6 +84,19 @@ object Autoscaler {
 
     @volatile private var last: Option[TickRecord] = None
 
+    /** Runs each tick's coordinator path: one thread at most, a daemon,
+      * which exits once the loop has been idle for the keep-alive. */
+    private val coordinatorPool = {
+      val pool = new ThreadPoolExecutor(1, 1, CoordinatorKeepAliveMs, TimeUnit.MILLISECONDS,
+        new LinkedBlockingQueue[Runnable], { (r: Runnable) =>
+          val t = new Thread(r, "graft-autoscaler-coordinator")
+          t.setDaemon(true)
+          t
+        })
+      pool.allowCoreThreadTimeOut(true)
+      pool
+    }
+
     /** The record of the last tick that completed; None before the first. */
     def lastTick: Option[TickRecord] = last
 
@@ -78,25 +106,9 @@ object Autoscaler {
       FetchedFrame.strings(frame, "payload").iterator.map(_(0))
         .filter(p => p != null && p.nonEmpty).map(JmxJson.attributes)
 
-    /** One tick: scrape → ring → evaluate → publish. Returns the action
-      * the cascade PERFORMED this tick (None while cold/gated/idle). */
-    def tick(): Option[MetricsPipeline.Decision] = {
-      val start = System.nanoTime()
-      val now = new Timestamp(clock())
-      val (nodeFrame, nodeFetchMs) = timed(fetcher.fetchPayloads(spark))
-      val (payloads, nodeReadMs) = timed(FetchedFrame.strings(nodeFrame, "node", "payload"))
-      // presence gate on the CPU gauge: a failed scrape's blank payload,
-      // or a CPU gauge that does not read as a finite number, must DROP
-      // OUT of the window, not read as 0% CPU and bias the quorum toward
-      // SHRINK (reference drops empty attribute maps —
-      // TrinoJmxEmr.scala:91 `if (m.isEmpty) None`)
-      val (nodes, parseMs) = timed(payloads.toSeq.flatMap { r =>
-        val a = JmxJson.attributes(r(1))
-        a.double("ProcessCpuLoad").reading.map(cpu =>
-          (r(0), cpu, a.long("AvailableProcessors").orZero(0L)))
-      })
-      ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
-      while (ring.size > windowN) ring.dequeue()
+    /** The coordinator path: the query stats, then the scaling hint, each
+      * fetched and read. */
+    private def readCoordinator(): CoordinatorRead = {
       // QueryManager gauges + the five 5-minute decayed counters drive
       // the idle gate (reference: scaling/ScalingManager.scala:103-117 —
       // a DRAINING cluster shows running=queued=0 with counters >= 1 and
@@ -127,7 +139,6 @@ object Autoscaler {
           } yield QueryActivity(running, queued, abandoned5m, canceled5m,
             completed5m, failed5m, submitted5m, failed1m)
         })
-      val activity = gauged.getOrElse(QueryActivity.AssumeActive)
       // ClusterSizeMonitor scaling hint (reference:
       // metrics/TrinoJmxRest.scala:106-109, docs/scaling-hints.md):
       // required > running expands ahead of the cooldown gate; blank,
@@ -135,6 +146,30 @@ object Autoscaler {
       val (hintFrame, hintFetchMs) = timed(fetcher.fetchRequiredWorkers(spark))
       val (requiredWorkers, hintReadMs) = timed(coordinator(hintFrame).nextOption()
         .flatMap(_.long("RequiredWorkers").reading).filter(_.isValidInt).fold(0)(_.toInt))
+      CoordinatorRead(gauged, requiredWorkers, statsFetchMs, statsReadMs, hintFetchMs, hintReadMs)
+    }
+
+    /** One tick: scrape → ring → evaluate → publish. Returns the action
+      * the cascade PERFORMED this tick (None while cold/gated/idle). */
+    def tick(): Option[MetricsPipeline.Decision] = {
+      val start = System.nanoTime()
+      val now = new Timestamp(clock())
+      val coordinatorPath = SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        coordinatorPool)(readCoordinator())
+      var coordinatorWaitMs = 0.0
+      val (payloadRows, nodes, nodeFetchMs, nodeReadMs, parseMs) =
+        try {
+          val (nodeFrame, nodeFetchMs) = timed(fetcher.fetchPayloads(spark))
+          val (payloads, nodeReadMs) = timed(FetchedFrame.strings(nodeFrame, "node", "payload"))
+          val (nodes, parseMs) = timed(cpuReadings(payloads))
+          ring.enqueue(nodes.map { case (n, c, _) => (now, n, c) })
+          while (ring.size > windowN) ring.dequeue()
+          (payloads.length, nodes, nodeFetchMs, nodeReadMs, parseMs)
+        } finally coordinatorWaitMs = timed(settle(coordinatorPath))._2
+      val CoordinatorRead(gauged, requiredWorkers, statsFetchMs, statsReadMs,
+        hintFetchMs, hintReadMs) = outcome(coordinatorPath)
+      val activity = gauged.getOrElse(QueryActivity.AssumeActive)
       idleMarker.foreach(_.touchIfBusy(
         graft.control.ScalingManager.isIdle(activity.stamped(now))))
       val (decision, evaluateMs) = timed(MetricsPipeline.evaluateSamples(
@@ -160,27 +195,73 @@ object Autoscaler {
       })._2
       last = Some(TickRecord(
         TickPhases(nodeFetchMs, nodeReadMs, parseMs, statsFetchMs, statsReadMs,
-          hintFetchMs, hintReadMs, evaluateMs, publishMs, (System.nanoTime() - start) / 1e6),
-        payloadRows = payloads.length, nodesKept = nodes.size, ringFrames = ring.size,
+          hintFetchMs, hintReadMs, coordinatorWaitMs, evaluateMs, publishMs,
+          (System.nanoTime() - start) / 1e6),
+        payloadRows = payloadRows, nodesKept = nodes.size, ringFrames = ring.size,
         assumeActive = gauged.isEmpty, requiredWorkers = requiredWorkers, decision = decision))
       decision
     }
   }
 
+  /** How long an idle loop keeps its coordinator thread. */
+  private[graft] val CoordinatorKeepAliveMs = 2000L
+
+  /** What the coordinator path read, with its phases' milliseconds. */
+  private final case class CoordinatorRead(
+      gauged: Option[QueryActivity], requiredWorkers: Int,
+      statsFetchMs: Double, statsReadMs: Double, hintFetchMs: Double, hintReadMs: Double)
+
+  /** Each node's CPU reading and core count, in the payloads' row order.
+    * Presence gate on the CPU gauge: a failed scrape's blank payload, or
+    * a CPU gauge that does not read as a finite number, must DROP OUT of
+    * the window, not read as 0% CPU and bias the quorum toward SHRINK
+    * (reference drops empty attribute maps — TrinoJmxEmr.scala:91
+    * `if (m.isEmpty) None`). The payloads are parsed over every core,
+    * each into the slot of its row, so the order is the fetched one. */
+  private def cpuReadings(payloads: Array[Array[String]]): Seq[(String, Double, Long)] = {
+    val reading: java.util.function.IntFunction[(String, Double, Long)] = { i =>
+      val a = JmxJson.attributes(payloads(i)(1))
+      a.double("ProcessCpuLoad").reading
+        .map(cpu => (payloads(i)(0), cpu, a.long("AvailableProcessors").orZero(0L))).orNull
+    }
+    val read = new Array[(String, Double, Long)](payloads.length)
+    java.util.Arrays.parallelSetAll(read, reading)
+    read.toSeq.filter(_ != null)
+  }
+
+  /** Waits for `path` to finish, however it ends. */
+  private def settle(path: CompletableFuture[_]): Unit =
+    try path.join()
+    catch { case _: CompletionException | _: CancellationException => () }
+
+  /** The value of a finished `path`; its failure rethrown as itself. */
+  private def outcome[A](path: CompletableFuture[A]): A =
+    try path.join()
+    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+
   /** Milliseconds one tick spent per phase. A fetch builds the fetcher's
     * frame; a read gets its strings ([[FetchedFrame.strings]]) and, for
     * a coordinator frame, parses its payload into the gauges the tick
-    * uses; `parse` reads every node payload's CPU gauge; `evaluate` is the
-    * window summary plus the cascade (and any resize it performs);
-    * `publish` puts the gauges. `tick` is the whole tick, so what no
-    * phase covers (the ring update, the idle marker) is the rest. */
+    * uses; `parse` reads every node payload's CPU gauge (over every core);
+    * `evaluate` is the window summary plus the cascade (and any resize it
+    * performs); `publish` puts the gauges. `tick` is the whole tick.
+    *
+    * The two paths overlap. The tick's thread runs the node fetch, node
+    * read and parse, then waits `coordinatorWait` for the coordinator
+    * path, then evaluates and publishes; those phases add up to at most
+    * `tick`, and what they leave (the ring update, the idle marker) is the
+    * rest. The coordinator thread meanwhile runs the stats fetch and read
+    * and the hint fetch and read, which add up to at most `tick` too. */
   final case class TickPhases(
       nodeFetch: Double, nodeRead: Double, parse: Double,
       statsFetch: Double, statsRead: Double,
-      hintFetch: Double, hintRead: Double,
+      hintFetch: Double, hintRead: Double, coordinatorWait: Double,
       evaluate: Double, publish: Double, tick: Double)
 
   /** What one tick saw, read and decided.
+    * @param phasesMs        milliseconds per phase, node path on the tick's
+    *                        thread and coordinator path on the coordinator
+    *                        thread, overlapping ([[TickPhases]])
     * @param payloadRows     rows of the node frame
     * @param nodesKept       nodes whose CPU gauge read as a number: the
     *                        tick's ring frame and its published gauges

@@ -25,6 +25,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * projection, filter or limit over a local relation) from its analyzed
  * plan, with no optimizer pass, no physical plan and no Spark job; it
  * runs any other plan (see [[FetchedFrame]]).
+ *
+ * Concurrency: a tick calls [[fetchQueryStats]] and then
+ * [[fetchRequiredWorkers]] on the loop's coordinator thread while it calls
+ * [[fetchPayloads]] on its own thread, so a fetcher must allow its
+ * coordinator fetches to run beside its node fetch. No two ticks of one
+ * loop overlap. The in-repo fetchers allow it: [[RestFetcher]] holds only
+ * immutable settings and a lazy `HttpClient` (a `lazy val` initializes
+ * once under a lock, and the client is thread-safe); [[JmxRmiFetcher]]
+ * reads the coordinator over its one JMX connector, which it guards with
+ * `synchronized`, and the nodes over its own [[RestFetcher]];
+ * [[FixtureFetcher]] holds no state.
  */
 trait MetricsFetcher {
   def name: String

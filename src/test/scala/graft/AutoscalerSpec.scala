@@ -4,11 +4,17 @@ import graft.control.{ScalingManager, SimulatedWorkers}
 import graft.decide.{CpuLoadEvaluator, MetricSummary, StepScalingAlgorithm}
 import graft.model.{ClusterQueriesMetrics, ResizeAction}
 import graft.sinks.BufferingPublisher
-import graft.sources.MetricsFetcher
+import graft.sources.{JmxJson, MetricsFetcher, PayloadFuzz}
 import graft.streaming.MetricsPipeline
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+import java.lang.Double.doubleToLongBits
+import java.sql.Timestamp
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.util.Random
 
 /** The production entry-point loop ([[Autoscaler.ControlLoop]]) driven
   * end-to-end with a stub fetcher: scrape → ring window → cold gate →
@@ -26,9 +32,10 @@ class AutoscalerSpec extends SparkSpec {
                             rawRequired: () => Option[String] = () => None)
     extends MetricsFetcher {
     override val name = "stub"
-    /** Every frame handed out, in order. */
+    /** Every frame handed out, in order of handing out; the node and the
+      * coordinator fetches run on two threads. */
     val frames = scala.collection.mutable.Buffer.empty[DataFrame]
-    private def kept(frame: DataFrame): DataFrame = { frames += frame; frame }
+    private def kept(frame: DataFrame): DataFrame = { frames.synchronized(frames += frame); frame }
     override def fetchPayloads(s: SparkSession): DataFrame = kept {
       import s.implicits._
       (Seq("n1", "n2").map(n => (n,
@@ -248,11 +255,14 @@ class AutoscalerSpec extends SparkSpec {
     }
   }
 
-  /** Every phase of the record took time inside its tick. */
+  /** Every phase of the record took time inside its tick: the phases of
+    * each thread add up to at most the tick. */
   private def assertPhasesWithinTick(record: Autoscaler.TickRecord): Unit = {
-    val phases = record.phasesMs.productIterator.map(_.asInstanceOf[Double]).toSeq
-    assert(phases.forall(_ >= 0.0), record.phasesMs)
-    assert(phases.init.sum <= record.phasesMs.tick, record.phasesMs)
+    val p = record.phasesMs
+    assert(p.productIterator.forall(_.asInstanceOf[Double] >= 0.0), p)
+    assert(p.nodeFetch + p.nodeRead + p.parse + p.coordinatorWait + p.evaluate + p.publish <=
+      p.tick, p)
+    assert(p.statsFetch + p.statsRead + p.hintFetch + p.hintRead <= p.tick, p)
   }
 
   test("a warm tick evaluates its window without a Spark job") {
@@ -426,5 +436,141 @@ class AutoscalerSpec extends SparkSpec {
     hint = Some("""{"attributes":[{"name":"RequiredWorkers","value":"1"}]}""")
     val d = loop.tick()
     assert(d.exists(a => a.action == "SHRINK" && a.capacity == 2), s"expected idle shrink, got $d")
+  }
+
+  /** A dry-run loop over `fetcher` on a fixed clock. */
+  private def dryLoop(fetcher: MetricsFetcher): Autoscaler.ControlLoop = {
+    val now = 10000000000L
+    val workers = new SimulatedWorkers(0, 20, clock = () => now)
+    workers.resize(5); workers.settle()
+    new Autoscaler.ControlLoop(spark, fetcher,
+      new ScalingManager(workers, new StepScalingAlgorithm(new CpuLoadEvaluator, 0, 20), () => now),
+      workers, new BufferingPublisher, "AWS/EMR", publish = true, clock = () => now)
+  }
+
+  test("a coordinator fetch that throws fails the tick with that same exception") {
+    val boom = new IllegalStateException("query stats unreachable")
+    val loop = dryLoop(new StubFetcher(() => 0.6) {
+      override def fetchQueryStats(s: SparkSession): DataFrame = throw boom
+    })
+    assert(intercept[IllegalStateException](loop.tick()) eq boom)
+    assert(loop.lastTick.isEmpty)
+  }
+
+  test("a node fetch that throws fails the tick only after the coordinator fetch returned") {
+    val boom = new IllegalStateException("node scrape failed")
+    val hintEntered = new CountDownLatch(1)
+    val hintRelease = new CountDownLatch(1)
+    val hintReturned = new AtomicBoolean(false)
+    val loop = dryLoop(new StubFetcher(() => 0.6) {
+      override def fetchRequiredWorkers(s: SparkSession): DataFrame = {
+        hintEntered.countDown()
+        assert(hintRelease.await(60, TimeUnit.SECONDS))
+        val frame = super.fetchRequiredWorkers(s)
+        hintReturned.set(true)
+        frame
+      }
+      override def fetchPayloads(s: SparkSession): DataFrame = {
+        assert(hintEntered.await(60, TimeUnit.SECONDS))
+        // let the held hint fetch go only once the node path has failed
+        val release = new Thread(() => { Thread.sleep(300); hintRelease.countDown() })
+        release.setDaemon(true)
+        release.start()
+        throw boom
+      }
+    })
+    assert(intercept[IllegalStateException](loop.tick()) eq boom)
+    assert(hintReturned.get, "the tick returned while its hint fetch still ran")
+  }
+
+  test("the coordinator path runs on a daemon thread that an idle loop gives up") {
+    val seen = new AtomicReference[Thread]
+    val loop = dryLoop(new StubFetcher(() => 0.6, () => Some((2L, 0L))) {
+      override def fetchQueryStats(s: SparkSession): DataFrame = {
+        seen.set(Thread.currentThread())
+        super.fetchQueryStats(s)
+      }
+    })
+    loop.tick()
+    val first = seen.get
+    assert(first ne Thread.currentThread())
+    assert(first.isDaemon)
+    first.join(Autoscaler.CoordinatorKeepAliveMs + 30000L)
+    assert(!first.isAlive, "a loop idle past the keep-alive still holds its coordinator thread")
+    // the next tick gets a new thread
+    loop.tick()
+    assert((seen.get ne first) && !loop.lastTick.get.assumeActive)
+  }
+
+  test("a coordinator frame that runs a job runs it in the tick thread's job group") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-coordinator")
+      .resolve("stats").toString
+    Seq("""{"attributes":[{"name":"RunningQueries","value":2},
+          |{"name":"QueuedQueries","value":0}]}""".stripMargin).toDF("payload").write.parquet(dir)
+    val seen = new AtomicReference[Thread]
+    val loop = dryLoop(new StubFetcher(() => 0.6) {
+      override def fetchQueryStats(s: SparkSession): DataFrame = {
+        seen.set(Thread.currentThread())
+        s.read.parquet(dir)
+      }
+    })
+    // a first tick outside any group starts the coordinator thread, so the
+    // group cannot reach it by inheritance when the thread is created
+    loop.tick()
+    val thread = seen.get
+    val sc = spark.sparkContext
+    sc.setJobGroup("coordinator-frame", "coordinator-frame")
+    try loop.tick() finally sc.clearJobGroup()
+    GraftBridge.drainListeners(sc)
+    assert((seen.get eq thread) && (thread ne Thread.currentThread()))
+    assert(sc.statusTracker.getJobIdsForGroup("coordinator-frame").nonEmpty,
+      "the coordinator frame's jobs left the tick thread's job group")
+    assert(!loop.lastTick.get.assumeActive, "the parquet query stats did not read")
+  }
+
+  test("a tick over 5,000 fuzzed nodes keeps the fetched row order: summary and gauges as a serial parse") {
+    val WindowN = 4
+    val rng = new Random(7)
+    var now = 11000000000L
+    val workers = new SimulatedWorkers(0, 40, clock = () => now)
+    workers.resize(5); workers.settle()
+    val mgr = new RecordingManager(workers, () => now)
+    val pub = new BufferingPublisher
+    var fleet = Seq.empty[(String, String)]
+    val loop = new Autoscaler.ControlLoop(spark,
+      new StubFetcher(() => 0.6, () => Some((2L, 0L))) {
+        override def fetchPayloads(s: SparkSession): DataFrame =
+          s.createDataFrame(fleet).toDF("node", "payload")
+      },
+      mgr, workers, pub, "fuzz", publish = true, windowN = WindowN, clock = () => now)
+    var ring = Vector.empty[Seq[(Timestamp, String, Double)]]
+    (0 until WindowN + 1).foreach { t =>
+      // 5,000 rows over 2,000 names: a name's later row must win its
+      // gauge, and its samples must reach the window in row order
+      fleet = (0 until 5000).map(i =>
+        s"n${(i * 7 + t) % 2000}" -> PayloadFuzz.node(rng, 0.2, 0.95, faultShare = 0.3).payload)
+      pub.records.clear()
+      loop.tick()
+      val serial = fleet.flatMap { case (n, p) =>
+        val a = JmxJson.attributes(p)
+        a.double("ProcessCpuLoad").reading.map(c => (n, c, a.long("AvailableProcessors").orZero(0L)))
+      }
+      ring = (ring :+ serial.map { case (n, c, _) => (new Timestamp(now), n, c) }).takeRight(WindowN)
+      val want = MetricSummary.ofSamples(ring.flatten, WindowN).get._1
+      val got = mgr.summaries.last
+      assert((got.isCold, got.totalNodes, got.oneMinuteAvg.keySet) ===
+        ((want.isCold, want.totalNodes, want.oneMinuteAvg.keySet)), s"tick $t")
+      for ((node, mean) <- want.oneMinuteAvg)
+        assert(doubleToLongBits(got.oneMinuteAvg(node)) === doubleToLongBits(mean), s"tick $t $node")
+      val cpu = pub.records.collect { case (_, name, v) if name.startsWith("trino.cpu.") =>
+        name.stripPrefix("trino.cpu.") -> doubleToLongBits(v) }.toMap
+      assert(cpu === serial.map { case (n, c, _) => n -> doubleToLongBits(c) }.toMap, s"tick $t")
+      val record = loop.lastTick.get
+      assert((record.payloadRows, record.nodesKept) === ((5000, serial.size)), s"tick $t")
+      workers.settle()
+      now += 15000L
+    }
+    assert(!mgr.summaries.last.isCold)
   }
 }
